@@ -16,6 +16,7 @@ from lakehouse_spark.mutation.manifest import (
     _predicate_expr,
     _segment_may_match,
 )
+from lakehouse_spark.mutation.reads import _logical_recorded_schema
 
 
 def _align_to_fields(df: DataFrame, fields) -> DataFrame:
@@ -124,7 +125,7 @@ class DmlMixin:
         Targeted DML needs it to align touched-segment reads to the full
         table even when schema-evolved columns live only in untouched
         segments — and re-unioning EVERY segment's footer per statement
-        for that alignment is an O(table) Spark-planning cost a 1-row
+        for that alignment is an O(table) footer-reading Spark job a 1-row
         targeted DELETE must not pay. DML itself never changes the schema
         (sources are projected to the target's columns; merge
         ``extra_cols='evolve'`` widens explicitly and invalidates), so
@@ -140,26 +141,9 @@ class DmlMixin:
             sj = manifest.get("schema")
         if sj is not None:
             # Recorded-schema fast path (tables written since round 11):
-            # the manifest's schema scalar IS the footer union — present
-            # it logically (renames applied, dropped filtered, nullable:
-            # evolved columns read null in older segments). Valid for
+            # the manifest's schema scalar IS the footer union. Valid for
             # PRUNED manifests too: scalars ride the list doc complete.
-            from pyspark.sql.types import StructType
-
-            renames = manifest.get("renames", {})
-            dropped = manifest.get("dropped", [])
-            fields = [
-                {
-                    **f,
-                    "name": renames.get(f["name"], f["name"]),
-                    "nullable": True,
-                }
-                for f in sj["fields"]
-                if f["name"] not in dropped
-            ]
-            schema = StructType.fromJson(
-                {"type": "struct", "fields": fields}
-            )
+            schema = _logical_recorded_schema(manifest)
             self._schema_cache = (version, schema)
             return schema
         if manifest.get("pruned"):
@@ -167,7 +151,7 @@ class DmlMixin:
             # segments — the footer-union fallback must run over all.
             manifest = self._snapshot(version)
         full = self._to_logical_static(
-            self._read_segments(manifest["segments"], {}),
+            self._read_segments(manifest["segments"], {}, None),
             manifest.get("renames", {}),
             manifest.get("dropped", []),
         )
@@ -253,20 +237,21 @@ class DmlMixin:
             return self._to_logical_static(df, renames, drop_cols)
 
         dv = manifest.get("dv", {})
+        phys = manifest.get("schema")
         if version is not None:
             schema = self._logical_schema(version, manifest)
             if not touched:
                 return self.spark.createDataFrame([], schema)
             return _align_to_fields(
-                _logical(self._read_segments(touched, dv)), schema.fields
+                _logical(self._read_segments(touched, dv, phys)), schema.fields
             )
-        full = _logical(self._read_segments(manifest["segments"], dv))
+        full = _logical(self._read_segments(manifest["segments"], dv, phys))
         if set(touched) == set(manifest["segments"]):
             return full
         if not touched:
             return full.limit(0)
         return _align_to_fields(
-            _logical(self._read_segments(touched, dv)), full.schema.fields
+            _logical(self._read_segments(touched, dv, phys)), full.schema.fields
         )
 
 

@@ -219,8 +219,12 @@ class MetadataMixin:
         return [renames.get(c, c) for c in phys if c not in dropped]
 
     def _read_segments_schema_cols(self) -> list[str]:
+        """Physical column names of the head version: the recorded
+        schema's, or the footer union of a pre-scalar version."""
         m = self._snapshot(self.current_version())
-        return self._read_segments(m["segments"], m["dv"]).columns
+        if m.get("schema") is not None:
+            return [f["name"] for f in m["schema"]["fields"]]
+        return self._read_segments(m["segments"], {}, None).columns
 
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN, metadata-only — Delta's column
@@ -357,12 +361,13 @@ class MetadataMixin:
         """PHYSICAL footer-union schema of ``snap``'s segments as a
         StructType.jsonValue dict — the exact content write paths stage
         into the manifest ``schema`` scalar, derived once from the parquet
-        footers (a Spark mergeSchema PLAN; no data job runs). None for a
-        zero-segment snapshot (nothing to derive from)."""
+        footers (mergeSchema: one Spark job per call, reading every
+        segment's footer). None for a zero-segment snapshot (nothing to
+        derive from)."""
         segments = snap.get("segments") or []
         if not segments:
             return None
-        return self._read_segments(segments, {}).schema.jsonValue()
+        return self._read_segments(segments, {}, None).schema.jsonValue()
 
     def backfill_schema(self) -> int | None:
         """Seed the manifest ``schema`` scalar on a PRE-SCALAR table

@@ -13,6 +13,7 @@ import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lakehouse_spark.mutation.manifest import (
     _predicate_expr,
@@ -25,6 +26,24 @@ from lakehouse_spark.mutation.manifest import (
 # in-memory selection loop; above it (or cold) the shard-bounds route is
 # cheaper per statement. Shared by read() and _dml_manifest.
 _WARM_PRUNE_MIN_SEGS = 4096
+
+
+def _logical_recorded_schema(manifest: dict) -> StructType | None:
+    """``manifest``'s recorded schema presented LOGICALLY (renames
+    applied, dropped columns filtered, every field nullable: evolved
+    columns read null in older segments) — the columns its reads
+    present; None for a pre-scalar version."""
+    sj = manifest.get("schema")
+    if sj is None:
+        return None
+    renames = manifest.get("renames", {})
+    dropped = manifest.get("dropped", [])
+    fields = [
+        {**f, "name": renames.get(f["name"], f["name"]), "nullable": True}
+        for f in sj["fields"]
+        if f["name"] not in dropped
+    ]
+    return StructType.fromJson({"type": "struct", "fields": fields})
 
 
 class ReadsMixin:
@@ -78,8 +97,28 @@ class ReadsMixin:
     def _dv_path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def _scan_files(
+        self, paths: list[str], schema: StructType | None
+    ) -> DataFrame:
+        """Read parquet ``paths`` against ``schema`` (a recorded schema:
+        missing columns read as null, Delta's additive evolution, and
+        planning launches no Spark job). ``schema`` None — a pre-scalar
+        version, or _harvest_schema deriving the scalar — infers it:
+        mergeSchema unions every footer in one Spark job per call;
+        without it Spark would take ONE footer as the schema and
+        silently drop columns other files added."""
+        r = self.spark.read
+        if schema is None:
+            r = r.option("mergeSchema", "true")
+        else:
+            r = r.schema(schema)
+        return r.parquet(*paths)
+
     def _read_segments(
-        self, segments: list[str], dv: dict[str, list[str]]
+        self,
+        segments: list[str],
+        dv: dict[str, list[str]],
+        schema: dict | None,
     ) -> DataFrame:
         """Union the segments, applying deletion vectors with merge-on-read
         semantics: a dv's deleted keys mask ONLY the segments in its
@@ -87,34 +126,40 @@ class ReadsMixin:
         newer segments no dv covers) survive. Segments are grouped by the
         set of dvs covering them — one broadcast anti-join per group, and
         the group count is bounded by the dv count (compaction folds dvs
-        away, resetting it)."""
-        # mergeSchema: segments may carry evolved schemas (append with new
-        # columns — see append's schema note); without it Spark takes ONE
-        # segment's footer as the table schema and silently drops columns
-        # the other segments added. Union semantics: missing columns read
-        # as null, matching Delta's additive schema evolution.
+        away, resetting it). ``schema`` is the version's manifest
+        ``schema`` scalar: its PHYSICAL footer union, recorded at write
+        time (None for a version written before the scalar existed)."""
+        # Segments may carry evolved schemas (append with new columns —
+        # see append's schema note); _scan_files reads them all against
+        # the recorded schema, or footer-unions a pre-scalar version.
+        struct = None if schema is None else StructType.fromJson(schema)
+
+        def _scan(segs: list[str]) -> DataFrame:
+            return self._scan_files(
+                [os.path.join(self.root, s) for s in segs], struct
+            )
+
         live_dv = {
             n: set(ap) & set(segments)
             for n, ap in dv.items()
             if set(ap) & set(segments)
         }
         if not live_dv:
-            paths = [os.path.join(self.root, s) for s in segments]
-            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+            return _scan(segments)
+        # Dv files hold the deleted rows; only their key column is read.
+        key_reader = self.spark.read
+        if struct is not None:
+            key_reader = key_reader.schema(StructType([struct[self.key]]))
         groups: dict[tuple[str, ...], list[str]] = {}
         for s in segments:
             key = tuple(sorted(n for n, ap in live_dv.items() if s in ap))
             groups.setdefault(key, []).append(s)
         parts = []
         for names, segs in groups.items():
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.root, s) for s in segs]
-            )
+            df = _scan(segs)
             if names:
                 keys = (
-                    self.spark.read.parquet(
-                        *[self._dv_path(n) for n in names]
-                    )
+                    key_reader.parquet(*[self._dv_path(n) for n in names])
                     .select(self.key)
                     .distinct()
                 )
@@ -180,6 +225,8 @@ class ReadsMixin:
             manifest = self._snapshot(v)
         segments = manifest["segments"]
         dv = manifest.get("dv", {})
+        # Scalars ride shard-pruned manifests complete.
+        schema = manifest.get("schema")
         # Column mapping: the snapshot presents ITS OWN logical schema
         # (names as of version v, like Delta column mapping); predicates
         # arrive logical and translate to physical for stats, blooms, and
@@ -242,20 +289,24 @@ class ReadsMixin:
             return manifest["segments"]
 
         if predicate and not segments:
-            # Schema from the unpruned version.
-            empty = self._read_segments(_all_segments(), dv)
+            # The version's schema: recorded, or else the unpruned
+            # segments' footer union.
+            empty = self._read_segments(
+                [] if schema is not None else _all_segments(), dv, schema
+            )
             out = empty if cond is None else empty.filter(cond)
             return _logical(out.limit(0))
-        out = self._read_segments(segments, dv)
+        out = self._read_segments(segments, dv, schema)
         if cond is None:
             return _logical(out)
-        if any(c not in out.columns for c in predicate):
-            # Pruning removed every segment that carried a schema-evolved
-            # predicate column; the survivors can't even resolve the
-            # filter. Fall back to the unpruned read so
-            # read(predicate=p) ≡ read().filter(p) holds exactly
-            # (correctness beats skipping in this rare case).
-            full = self._read_segments(_all_segments(), dv)
+        if schema is None and any(c not in out.columns for c in predicate):
+            # Pre-scalar version: pruning removed every segment that
+            # carried a schema-evolved predicate column, so the
+            # survivors' footer union can't even resolve the filter.
+            # Fall back to the unpruned read so read(predicate=p) ≡
+            # read().filter(p) holds exactly. (With the recorded schema
+            # the pruned read already carries every column.)
+            full = self._read_segments(_all_segments(), dv, None)
             return _logical(full.filter(cond))
         return _logical(out.filter(cond))
 
@@ -422,15 +473,19 @@ class ReadsMixin:
         renames = raw.get("renames", prev_snap.get("renames", {}))
         dropped = raw.get("dropped", prev_snap.get("dropped", []))
 
-        def _side(segs: list[str], dv: dict) -> DataFrame | None:
+        def _side(segs: list[str], dv: dict, sj: dict | None):
             if not segs:
                 return None
             return self._to_logical_static(
-                self._read_segments(segs, dv), renames, dropped
+                self._read_segments(segs, dv, sj),
+                renames,
+                dropped,
             )
 
-        pre = _side(pre_segs, prev_dv)
-        post = _side(post_touched, post_dv)
+        pre = _side(pre_segs, prev_dv, prev_snap.get("schema"))
+        post = _side(
+            post_touched, post_dv, raw.get("schema", prev_snap.get("schema"))
+        )
         tag = F.lit(v).alias("_commit_version")
         if pre is None and post is None:
             # v-1, not v: on the commit path this runs BEFORE manifest
@@ -563,11 +618,13 @@ class ReadsMixin:
             if kind == "delete_dv":
                 # The dv file IS the delete pre-image set — O(deleted) read.
                 # _to_logical: stored files carry names as written
-                # (physical for segments; dv/cdc carry write-time names),
-                # the feed speaks the current logical schema.
+                # (physical for segments; dv/cdc carry write-time names —
+                # a dv holds rows of v's logical schema), the feed speaks
+                # the current logical schema.
                 rows = self._to_logical(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *[self._dv_path(n) for n in added]
+                    self._scan_files(
+                        [self._dv_path(n) for n in added],
+                        _logical_recorded_schema(self._snapshot(v)),
                     )
                 )
                 pieces.append(
@@ -576,8 +633,8 @@ class ReadsMixin:
                 continue
             if kind == "append":
                 inserts = self._to_logical(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *[os.path.join(self.root, s) for s in added]
+                    self._read_segments(
+                        added, {}, self._snapshot(v).get("schema")
                     )
                 )
                 pieces.append(
@@ -634,13 +691,11 @@ class ReadsMixin:
                 return self.read(v_from).limit(0).withColumn(
                     "_change", F.lit("insert")
                 )
-            # mergeSchema matches read(): appended segments may have
-            # introduced new columns, and a single-footer view would
-            # silently drop them from the CDF.
+            # Read like read(): appended segments may have introduced new
+            # columns, and a single-footer view would silently drop them
+            # from the CDF.
             rows = self._to_logical(
-                self.spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(self.root, s) for s in added]
-                )
+                self._read_segments(added, {}, m_to.get("schema"))
             )
             return rows.withColumn("_change", F.lit("insert"))
         # Both sides in v_to's LOGICAL names (physical names are immutable,
@@ -648,10 +703,16 @@ class ReadsMixin:
         # across a rename compares data, not column labels.
         ren, drp = m_to.get("renames", {}), m_to.get("dropped", [])
         old = self._to_logical_static(
-            self._read_segments(old_segs, m_from.get("dv", {})), ren, drp
+            self._read_segments(
+                old_segs, m_from.get("dv", {}), m_from.get("schema")
+            ),
+            ren,
+            drp,
         )
         new = self._to_logical_static(
-            self._read_segments(new_segs, m_to.get("dv", {})), ren, drp
+            self._read_segments(new_segs, m_to.get("dv", {}), m_to.get("schema")),
+            ren,
+            drp,
         )
         return (
             new.exceptAll(old).withColumn("_change", F.lit("insert"))

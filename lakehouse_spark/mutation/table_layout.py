@@ -432,6 +432,7 @@ class LayoutMixin:
         WITHIN whatever the partition predicate already kept."""
         m = self._snapshot(v0)
         parts, dv = m.get("partitions", {}), m.get("dv", {})
+        schema = m.get("schema")
         masked = {s for ap in dv.values() for s in ap}
         groups: dict[str, tuple[dict, list[str]]] = {}
         loose: list[str] = []  # segments without recorded values
@@ -540,7 +541,7 @@ class LayoutMixin:
             segs: list[str] = []
             i = 0
             for pvals, group in plan:
-                df_g = self._to_logical(self._read_segments(group, dv))
+                df_g = self._to_logical(self._read_segments(group, dv, schema))
                 if not clustered:
                     seg = self._write_segment(df_g, v, part=i)
                     self._pending_parts[seg] = pvals
@@ -551,7 +552,7 @@ class LayoutMixin:
                     segs += new
                     i += len(new)
             if fold_loose:
-                df_l = self._to_logical(self._read_segments(loose, dv))
+                df_l = self._to_logical(self._read_segments(loose, dv, schema))
                 if not clustered:
                     segs.append(self._write_segment(df_l, v, part=i))
                 else:

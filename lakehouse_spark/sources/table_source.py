@@ -781,30 +781,17 @@ class LakehouseDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql.pandas.types import from_arrow_schema
 
+        from lakehouse_spark.mutation.reads import _logical_recorded_schema
+
         root = self._root()
         v = _resolve_version(root, self.options)
         sc = _scalars(root, v)
-        renames = sc.get("renames", {})
-        dropped = sc.get("dropped", [])
-        sj = sc.get("schema")
-        if sj is not None:
-            # Recorded-schema fast path (tables written since round 11):
-            # no footer walk at all. Fields present as nullable — old
-            # segments read evolved columns as null, exactly like the
-            # footer-union path.
-            fields = [
-                {
-                    **f,
-                    "name": renames.get(f["name"], f["name"]),
-                    "nullable": True,
-                }
-                for f in sj["fields"]
-                if f["name"] not in dropped
-            ]
-            spark_schema = StructType.fromJson(
-                {"type": "struct", "fields": fields}
-            )
-        else:
+        # Recorded-schema fast path (tables written since round 11): no
+        # footer walk at all.
+        spark_schema = _logical_recorded_schema(sc)
+        if spark_schema is None:
+            renames = sc.get("renames", {})
+            dropped = sc.get("dropped", [])
             segs = _manifest(root, v)["segments"]
             arrow = _unified_arrow_schema(
                 _one_file_per_schema(

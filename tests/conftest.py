@@ -45,7 +45,6 @@ _SLOW_NODEIDS = {
     # covered elsewhere; these are the exhaustive cross-products)
     "test_plan_quality.py::test_no_cartesian_product_anywhere_in_catalog",  # 91s
     "test_store_merge.py::test_merge_property_vs_reference_model",  # 78s
-    "test_sources_and_store.py::test_store_random_op_sequences_match_model",  # 37s
     "test_properties.py::test_incremental_cc_equals_full_recompute",  # 30s
     "test_properties.py::test_window_form_agrees_with_fold",  # 15s
     "test_properties.py::test_connected_components_matches_union_find",  # 12s

@@ -90,9 +90,9 @@ def test_materialize_reads_only_touched_segments(spark, tmp_path):
     seen: list[list[str]] = []
     orig = type(st)._read_segments
 
-    def spy(self, segments, dv):
+    def spy(self, segments, dv, schema):
         seen.append(list(segments))
-        return orig(self, segments, dv)
+        return orig(self, segments, dv, schema)
 
     type(st)._read_segments = spy
     try:

@@ -169,3 +169,126 @@ def test_datasource_pruned_partition_planning(spark, tmp_path):
     assert all(k[0] != root for k in TS._SNAPSHOT_CACHE)
     assert TS._SHARD_CACHE
     assert 0 < len(parts) < n_segs
+
+
+# -- TableStore.read() plans from the recorded schema ------------------------
+
+
+def _footer_union_read(st, v):
+    """What read(version=v) presented before it planned from the scalar:
+    the mergeSchema footer union of v's segments, dvs applied, logical."""
+    snap = st._snapshot(v)
+    df = st._read_segments(snap["segments"], snap.get("dv", {}), None)
+    return st._to_logical_static(
+        df, snap.get("renames", {}), snap.get("dropped", [])
+    )
+
+
+def _jobs_during(spark, fn):
+    """(Spark jobs launched while ``fn`` runs, fn's result)."""
+    sc = spark.sparkContext
+    tag = "read-jobs-probe"
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag)), out
+
+
+def test_store_read_schema_from_scalar_matches_footers(spark, tmp_path):
+    """TableStore twin of the data-source test above: every version's
+    read() — columns, schema and rows — equals the footer-union
+    presentation across schema evolution, column mapping (rename, drop)
+    and a merge-on-read delete."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(5).selectExpr("id", "id AS x", "id * 2 AS y"))
+    st.append(
+        spark.range(5, 8).selectExpr("id", "id AS x", "id * 2 AS y", "'n' AS note")
+    )
+    st.rename_column("x", "val")
+    st.drop_column("y")
+    st.delete_keys(spark.range(2, 4).selectExpr("id"), mode="dv")
+    head = st.current_version()
+    assert st._snapshot(head)["dv"]
+    assert st.read().columns == ["id", "val", "note"]
+    for v in range(head + 1):
+        got = st.read(version=v)
+        want = _footer_union_read(st, v)
+        assert got.columns == want.columns, v
+        assert got.schema == want.schema, v
+        assert sorted(got.collect()) == sorted(want.collect()), v
+    old = st.read(version=1)
+    assert old.columns == ["id", "x", "y", "note"]
+    assert sorted((r.id, r.note) for r in old.collect())[:2] == [
+        (0, None),
+        (1, None),
+    ]
+
+
+def test_store_read_plans_without_spark_jobs(spark, tmp_path):
+    """With the scalar recorded, planning read() and read(predicate=...)
+    on a table with live deletion vectors launches no Spark job (the
+    footer-union planning ran one per read, plus one for the dv keys)."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(10).selectExpr("id", "id AS x"))
+    st.append(spark.range(10, 20).selectExpr("id", "id AS x", "'n' AS note"))
+    st.delete_keys(spark.range(3, 5).selectExpr("id"), mode="dv")
+    st.delete_keys(spark.range(12, 13).selectExpr("id"), mode="dv")
+    assert len(st._snapshot(st.current_version())["dv"]) == 2
+    n, df = _jobs_during(spark, st.read)
+    assert n == 0
+    n, hit = _jobs_during(spark, lambda: st.read(predicate={"id": (0, 12)}))
+    assert n == 0
+    assert df.columns == hit.columns == ["id", "x", "note"]
+    assert df.count() == 17
+    assert sorted(r.id for r in hit.collect()) == [
+        0, 1, 2, 5, 6, 7, 8, 9, 10, 11,
+    ]
+
+
+def test_store_read_footer_fallback_for_pre_scalar_tables(spark, tmp_path):
+    """A pre-scalar table (manifests without the ``schema`` scalar) still
+    reads through the footer union: evolved columns read as null in the
+    segments that predate them, and a pruned predicate over an evolved
+    column still resolves."""
+    root = str(tmp_path / "t")
+    st = TableStore(spark, root, key="id", stats_cols=("id",))
+    st.init(spark.range(4).selectExpr("id", "id AS x"))
+    st.append(spark.range(4, 6).selectExpr("id", "id AS x", "'n' AS note"))
+    for v in range(st.current_version() + 1):
+        p = st._manifest_path(v)
+        with open(p) as f:
+            doc = json.load(f)
+        doc.pop("schema", None)
+        with open(p, "w") as f:
+            json.dump(doc, f)
+    old = TableStore(spark, root, key="id", stats_cols=("id",))
+    assert old._snapshot(old.current_version())["schema"] is None
+    df = old.read()
+    assert df.columns == ["id", "x", "note"]
+    assert sorted((r.id, r.note) for r in df.collect()) == [
+        (0, None), (1, None), (2, None), (3, None), (4, "n"), (5, "n"),
+    ]
+    pruned = old.read(predicate={"id": (0, 2), "note": "n"})
+    assert pruned.columns == ["id", "x", "note"]
+    assert pruned.count() == 0
+
+
+def test_store_pruned_read_keeps_evolved_predicate_columns(spark, tmp_path):
+    """When pruning keeps only segments older than an evolved predicate
+    column, the recorded schema still carries that column, so the read
+    stays pruned (no unpruned re-plan) and equals read().filter(p)."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(4).selectExpr("id", "id AS x"))
+    st.append(spark.range(4, 8).selectExpr("id", "id AS x", "'n' AS note"))
+    seg0 = st._snapshot(0)["segments"]
+    pred = {"id": (0, 3), "note": None}
+    hit = st.read(predicate=pred)
+    files = hit.inputFiles()
+    assert files and all(any(f"/{s}/" in f for s in seg0) for f in files)
+    assert len(files) < len(st.read().inputFiles())
+    assert sorted(r.id for r in hit.collect()) == [0, 1, 2, 3]
+    miss = st.read(predicate={"id": (0, 3), "note": "n"})
+    assert miss.count() == 0
+    assert miss.columns == ["id", "x", "note"]

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 # Spark's `hash()`/`xxhash64()` are engine-specific; the dedup/sketch
 # operators need a hash the DuckDB oracle can reproduce. md5 is available
 # in both engines; 15 hex chars = 60 bits, always fits in a signed BIGINT.
-# DuckDB equivalent: CAST('0x' || substr(md5(x), 1, 15) AS BIGINT).
+# DuckDB equivalent (queries.dedup_sim._hash64_sql):
+# CAST('0x' || substr(md5(x), 1, 15) AS BIGINT).
 #
 # mode="xxhash64" is the PRODUCTION fast path: Spark's native xxHash64
 # (one codegen'd integer pipeline — no hex-string materialization like
@@ -29,41 +30,27 @@ from pyspark.sql import functions as F
 _MASK60 = (1 << 60) - 1
 
 
-def hash64(col: Column | str, seed: int = 0, mode: str = "md5") -> Column:
-    """Deterministic 60-bit hash of a string column. ``seed`` derives
-    independent hash families from one pass; ``mode`` picks the engine:
-    ``"md5"`` (cross-engine, DuckDB-replayable) or ``"xxhash64"``
-    (JVM-native fast path, same [0, 2^60) range)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if seed:
-        c = F.concat(F.lit(f"s{seed}:"), c)
-    if mode == "xxhash64":
-        return F.xxhash64(c).bitwiseAND(F.lit(_MASK60))
-    if mode != "md5":
-        raise ValueError(f"unknown hash mode {mode!r}: use 'md5' or 'xxhash64'")
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-def hash64_sql(expr: str, seed: int = 0) -> str:
-    """DuckDB-side rendering of :func:`hash64` for oracle queries."""
-    inner = f"concat('s{seed}:', {expr})" if seed else expr
-    return f"CAST('0x' || substr(md5({inner}), 1, 15) AS BIGINT)"
-
-
 def hash64_spark_sql(expr: str, seed: int = 0, mode: str = "md5") -> str:
-    """Spark-SQL *source* rendering of :func:`hash64` — same expression tree
-    the Column form builds, but composed as a string so hot query
-    constructors can hand one ``expr()``/``selectExpr`` string to the JVM
-    instead of a chain of py4j calls (each round-trip costs ~0.5-1 ms on a
-    virtualized driver host; a MinHash pipeline built via the Column DSL
-    makes hundreds of them). Parity with the Column form is pinned in
-    tests/test_hash_modes.py."""
+    """Deterministic 60-bit hash of a string SQL expression, as Spark-SQL
+    source. ``seed`` derives independent hash families from one pass;
+    ``mode`` picks the engine: ``"md5"`` (cross-engine, DuckDB-replayable)
+    or ``"xxhash64"`` (JVM-native fast path, same [0, 2^60) range).
+
+    A string, not a Column chain: hot query constructors hand one
+    ``expr()``/``selectExpr`` string to the JVM instead of a chain of py4j
+    calls (each round-trip costs ~0.5-1 ms on a virtualized host; a MinHash
+    pipeline built via the Column DSL makes hundreds of them)."""
     inner = f"concat('s{seed}:', {expr})" if seed else expr
     if mode == "xxhash64":
         return f"(xxhash64({inner}) & {_MASK60}L)"
     if mode != "md5":
         raise ValueError(f"unknown hash mode {mode!r}: use 'md5' or 'xxhash64'")
     return f"cast(conv(substring(md5({inner}), 1, 15), 16, 10) as bigint)"
+
+
+def hash64(expr: str, seed: int = 0, mode: str = "md5") -> Column:
+    """:func:`hash64_spark_sql` as a Column (``expr`` is SQL text)."""
+    return F.expr(hash64_spark_sql(expr, seed, mode))
 
 
 # --- S2: duration --------------------------------------------------------
@@ -102,13 +89,6 @@ def iso_to_millis(col: Column | str) -> Column:
 # --- T6/T5: string helpers are plain builtins (substring/lower/upper) ------
 
 # --- T8/T7: timestamp format/arithmetic are plain builtins -----------------
-
-
-def session_display_name(base: Column, ts: Column) -> Column:
-    """T7 ← automation_scheduler.py:362-369: '{name} - {YYYY-MM-DD HH:MM UTC}'
-    naming for scheduled sessions (engine pins UTC; tz conversion is
-    `from_utc_timestamp` at the edge)."""
-    return F.concat(base, F.lit(" - "), F.date_format(ts, "yyyy-MM-dd HH:mm 'UTC'"))
 
 
 # --- T9: interval-string parse --------------------------------------------

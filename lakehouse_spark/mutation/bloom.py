@@ -153,7 +153,7 @@ def build_segment_blooms(spark, seg_path: str, cols: list[str]) -> None:
     # negative, i.e. a wrong skip.
     hashed = df.select(
         *[
-            F.coalesce(hash64(F.col(c).cast("string")), F.lit(-1)).alias(c)
+            F.coalesce(hash64(f"cast(`{c}` as string)"), F.lit(-1)).alias(c)
             for c in present
         ]
     )

@@ -7,11 +7,9 @@ property that keeps these viable on 100 TB fact tables.
 
 Provenance: unread counts ← amplifierd/routers/sessions.py:756-789; running
 counters ← sessions/manager.py:286-291; session metrics incl. argmax ←
-webapp useExecutionState.ts:85-112; collect_list per group ←
-content_deduplicator.py:44-68.
-
-Scale additions (not in the reference, free in Spark): approx distinct
-counts and approximate percentiles for the metrics layer.
+webapp useExecutionState.ts:85-112. Collect-list per group (A5) and the
+sketch aggregates (approx distinct, approx percentiles) are catalog
+entries: ``a5_collect_per_group``, ``agg_percentiles``.
 """
 
 from __future__ import annotations
@@ -96,18 +94,6 @@ def page_probe(df: DataFrame, offset: int, limit: int) -> bool:
     return df.limit(offset + limit + 1).count() > offset + limit
 
 
-def collect_per_group(
-    df: DataFrame, key, content_col: str, list_col: str
-) -> DataFrame:
-    """A5: all values per group as a deterministic (sorted) array — the
-    reference credits every source path to one deduped content row."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return df.groupBy(*keys).agg(
-        F.first(content_col).alias(content_col),
-        F.array_sort(F.collect_list(list_col)).alias(f"{list_col}s"),
-    )
-
-
 def duplicate_keys(df: DataFrame, *keys: str) -> DataFrame:
     """A6: uniqueness violation check (duplicate automation names per
     project)."""
@@ -116,11 +102,3 @@ def duplicate_keys(df: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-def approx_metrics(df: DataFrame, key: str, value_col: str) -> DataFrame:
-    """Scale extension: sketch-based aggregates — approx distinct (HLL) and
-    approx percentiles (t-digest-style) run in one pass with constant state
-    per key; the exact versions would need a full sort/shuffle of values."""
-    return df.groupBy(key).agg(
-        F.approx_count_distinct(value_col).alias("approx_distinct"),
-        F.percentile_approx(value_col, [0.5, 0.95, 0.99], 10000).alias("pcts"),
-    )

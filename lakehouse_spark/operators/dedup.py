@@ -25,10 +25,11 @@ services/mention_loader.py:102-106.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from lakehouse_spark.functions.scalar import hash64, hash64_spark_sql
+from lakehouse_spark.functions.scalar import _MASK60, hash64, hash64_spark_sql
+from lakehouse_spark.operators.similarity import _dot_sql, _norm_sql
 from lakehouse_spark.operators.skew import spread
 
 # --- cache bookkeeping -------------------------------------------------------
@@ -211,9 +212,6 @@ def shingle_frame(
 # --- MinHash + LSH -----------------------------------------------------------
 
 
-_MASK60 = (1 << 60) - 1
-
-
 def xor_salts(k: int) -> list[int]:
     """Deterministic 60-bit permutation salts shared with the DuckDB oracle.
     XOR with a fixed salt permutes the 60-bit hash space, giving k minhash
@@ -223,33 +221,21 @@ def xor_salts(k: int) -> list[int]:
     return [((i + 1) * 0x9E3779B97F4A7C15) & _MASK60 for i in range(k)]
 
 
-def minhash_signature(hashes: Column, k: int = 16) -> Column:
-    """k-permutation MinHash signature over pre-hashed shingles
-    (ARRAY<BIGINT>, from :func:`hash64`): per salt, min over XOR-permuted
-    values. Empty inputs keep the +inf sentinel — filter empty docs first.
+def minhash_signature_sql(hashes: str, k: int = 16) -> str:
+    """k-permutation MinHash signature, as Spark-SQL source, over a
+    pre-hashed shingle array expression (ARRAY<BIGINT>, from
+    :func:`hash64_spark_sql`): per salt, min over XOR-permuted values.
+    Empty inputs keep the +inf sentinel — filter empty docs first. One
+    ``expr()`` parse (see :func:`shingle_frame` on why construction
+    round-trips matter).
 
     Shape: ONE fold over the hash array carrying a k-wide accumulator
     (zip_with against a constant salt array), instead of k independent
     array_min(transform(...)) branches. Identical math, but the generated
     code is a single loop — ~5 s less one-time codegen compile per query at
     k=16, which dominated cold-start timings."""
-    salts = F.array(*[F.lit(s).cast("long") for s in xor_salts(k)])
-    # sentinel > any 60-bit hash value; never survives a non-empty input
-    init = F.array_repeat(F.lit(1 << 62).cast("long"), k)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, salts, lambda a, s: F.least(a, h.bitwiseXOR(s))
-        ),
-    )
-
-
-def minhash_signature_sql(hashes: str, k: int = 16) -> str:
-    """Spark-SQL source of :func:`minhash_signature` over a pre-hashed
-    array expression — the one-``expr()``-parse form of the same fold (see
-    :func:`shingle_frame` on why construction round-trips matter)."""
     salts = ", ".join(f"{s}L" for s in xor_salts(k))
+    # sentinel > any 60-bit hash value; never survives a non-empty input
     return (
         f"aggregate({hashes}, array_repeat({1 << 62}L, {k}),"
         f" (acc, h) -> zip_with(acc, array({salts}),"
@@ -488,7 +474,7 @@ def simhash(
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("h", hash64(F.col("tok")))
+    ).withColumn("h", hash64("tok"))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
@@ -577,31 +563,19 @@ def embedding_near_duplicates(
     cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
     if block_col is not None:
         cols.append(F.col(block_col).alias("blk"))
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     # Norm folded once per INPUT row (before the self-join fan-out), not
     # once per pair — identical doubles, only the dot remains per pair.
-    base = spread(df, id_col).select(*cols).withColumn("nv", norm)
+    base = spread(df, id_col).select(*cols).withColumn("nv", F.expr(_norm_sql("v")))
     a, b = base.alias("a"), base.alias("b")
     cond = F.col("a.id") < F.col("b.id")
     if block_col is not None:
         cond = (F.col("a.blk") == F.col("b.blk")) & cond
-    dot = F.aggregate(
-        F.zip_with("a.v", "b.v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, cond)
         .select(
             F.col("a.id").alias("a_id"),
             F.col("b.id").alias("b_id"),
-            (dot / (F.col("a.nv") * F.col("b.nv"))).alias("cosine"),
+            F.expr(f"{_dot_sql('a.v', 'b.v')} / (a.nv * b.nv)").alias("cosine"),
         )
         .filter(F.col("cosine") >= min_cosine)
     )
@@ -892,20 +866,19 @@ def hyperplanes(k: int, dim: int, seed: int = 5) -> list[list[float]]:
     return out
 
 
-def rp_signature(v, planes) -> "F.Column":
-    """Sign-bit signature column: bit p = [<v, planes[p]> >= 0] (Charikar
-    SimHash for vectors). One HOF fold per plane, no shuffle; planes are
-    inlined literals so the signature replays identically cross-engine."""
-    sig = F.lit(0).cast("long")
+def rp_signature(v: str, planes) -> "F.Column":
+    """Sign-bit signature column of the vector expression ``v``: bit p =
+    [<v, planes[p]> >= 0] (Charikar SimHash for vectors). One HOF fold per
+    plane, no shuffle; planes are inlined double literals (``repr`` round-
+    trips exactly) so the signature replays identically cross-engine."""
+    sig = "CAST(0 AS BIGINT)"
     for p, plane in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, lit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        arr = "array(" + ", ".join(f"{float(x)!r}D" for x in plane) + ")"
+        sig += (
+            f" + CAST(CASE WHEN {_dot_sql(v, arr)} >= 0 THEN {1 << p} ELSE 0 END"
+            " AS BIGINT)"
         )
-        sig = sig + F.when(dot >= 0, F.lit(1 << p)).otherwise(0).cast("long")
-    return sig
+    return F.expr(sig)
 
 
 def rp_lsh_near_duplicates(
@@ -934,11 +907,10 @@ def rp_lsh_near_duplicates(
     from pyspark.sql import functions as F
 
     planes = hyperplanes(k, len(emb.select(vec_col).first()[0]), seed)
-    v = F.col(vec_col)
     signed = spread(emb, id_col).select(
         F.col(id_col).alias("id"),
-        v.alias("v"),
-        rp_signature(v, planes).alias("sig"),
+        F.col(vec_col).alias("v"),
+        rp_signature(f"`{vec_col}`", planes).alias("sig"),
     )
 
     width = k // bands
@@ -978,14 +950,10 @@ def rp_lsh_near_duplicates(
         .dropDuplicates(["a_id", "b_id"])
     )
 
-    def _dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda m, n: m * n), F.lit(0.0), lambda acc, t: acc + t
-        )
-
-    cos = _dot(F.col("av"), F.col("bv")) / (
-        F.sqrt(_dot(F.col("av"), F.col("av")))
-        * F.sqrt(_dot(F.col("bv"), F.col("bv")))
+    # norms as self-dots (same doubles as _norm_sql's squares)
+    cos = F.expr(
+        f"{_dot_sql('av', 'bv')}"
+        f" / (sqrt({_dot_sql('av', 'av')}) * sqrt({_dot_sql('bv', 'bv')}))"
     )
     return (
         cand.withColumn("cosine", F.round(cos, 6))
@@ -1094,8 +1062,6 @@ def semdedup(
     survives 100 TB. Assignment cost is n * n_clusters broadcast
     comparisons — at extreme scale swap the flat argmax for the IVF
     two-level assignment in operators/similarity (same contract)."""
-    from lakehouse_spark.operators.similarity import cosine
-
     e = spread(df, id_col).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if n_clusters is None:
         import math
@@ -1127,7 +1093,7 @@ def semdedup(
             dim = len(e.select("v").first()[0])
             planes = hyperplanes(h, dim)
             clustered = e.withColumn(
-                "cluster_id", rp_signature(F.col("v"), planes).cast("string")
+                "cluster_id", rp_signature("v", planes).cast("string")
             )
             # Skew control (round-9 advisor fix): sign-bit signatures over
             # correlated embeddings can pile mass into one bucket,
@@ -1153,7 +1119,7 @@ def semdedup(
                         F.concat_ws(
                             "_",
                             F.col("cluster_id"),
-                            rp_signature(F.col("v"), extra).cast("string"),
+                            rp_signature("v", extra).cast("string"),
                         ),
                     ).otherwise(F.col("cluster_id")),
                 )
@@ -1183,36 +1149,14 @@ def semdedup(
         .select(F.col("id").alias("cid"), F.col("v").alias("cv"))
     )
 
-    def _vnorm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    def _vdot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # Norms folded once per corpus row / per seed (not once per
     # (row, seed) pair): same doubles, n_clusters× fewer norm folds in
     # the argmax assignment — the dominant per-row cost of this path.
     scored = (
-        e.withColumn("nv", _vnorm(F.col("v")))
-        .crossJoin(F.broadcast(seeds.withColumn("cnv", _vnorm(F.col("cv")))))
-        .select(
-            "id",
-            "cid",
-            F.round(
-                _vdot(F.col("v"), F.col("cv"))
-                / (F.col("nv") * F.col("cnv")),
-                6,
-            ).alias("cos"),
+        e.withColumn("nv", F.expr(_norm_sql("v")))
+        .crossJoin(F.broadcast(seeds.withColumn("cnv", F.expr(_norm_sql("cv")))))
+        .selectExpr(
+            "id", "cid", f"round({_dot_sql('v', 'cv')} / (nv * cnv), 6) as cos"
         )
     )
     # argmax by (cos desc, cid asc): max_by over a (cos, -cid) struct —

@@ -40,9 +40,9 @@ def export_training_shards(
     with_split = hash_split(
         docs, id_col, weights=weights or {"train": 18, "val": 1, "test": 1}
     )
-    shard = (
-        hash64(F.col(id_col).cast("string"), seed=seed) % n_shards
-    ).alias("shard")
+    shard = (hash64(f"cast(`{id_col}` as string)", seed=seed) % n_shards).alias(
+        "shard"
+    )
     keyed = with_split.withColumn("shard", shard)
     (
         keyed.repartition(n_shards, "shard")

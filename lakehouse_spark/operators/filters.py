@@ -34,12 +34,6 @@ def since(df: DataFrame, col: str, ts) -> DataFrame:
     return df.filter(F.col(col) >= F.lit(ts))
 
 
-def retention_cutoff(df: DataFrame, ended_col: str, created_col: str, cutoff) -> DataFrame:
-    """F2 cleanup shape: ``coalesce(ended, created) < cutoff`` — rows old
-    enough to expire under the reference's 30-day retention sweep."""
-    return df.filter(F.coalesce(F.col(ended_col), F.col(created_col)) < F.lit(cutoff))
-
-
 def flag(df: DataFrame, col: str, value: bool = True) -> DataFrame:
     """F3: boolean filter (unread sessions / enabled automations)."""
     return df.filter(F.col(col) == F.lit(value))
@@ -94,6 +88,3 @@ def project(df: DataFrame, *cols: str | Column) -> DataFrame:
     return df.select(*cols)
 
 
-def rename_wire(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """F9: wire-format renames (snake_case ↔ camelCase at the API edge)."""
-    return df.withColumnsRenamed(mapping)

@@ -30,14 +30,6 @@ def semi_fetch(full: DataFrame, keys: DataFrame, key: str) -> DataFrame:
     return full.join(F.broadcast(keys.select(key).distinct()), key, "left_semi")
 
 
-def children_of(df: DataFrame, parent_col: str, id_col: str) -> DataFrame:
-    """J2: parent→children self-join (subsessions of a session)."""
-    parents = df.select(F.col(id_col).alias("__pid"))
-    return df.join(
-        F.broadcast(parents), F.col(parent_col) == F.col("__pid"), "left_semi"
-    )
-
-
 def fk_lookup(
     fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str, how: str = "left"
 ) -> DataFrame:

@@ -40,24 +40,9 @@ from pyspark.sql import functions as F
 from lakehouse_spark.operators.skew import spread
 
 
-def _dot(a, b) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(v) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-
-
-# SQL-string mirrors of _dot/_norm (identical expression trees; 0.0D keeps
-# the accumulator a DOUBLE literal exactly like F.lit(0.0) — a bare 0.0 in
-# Spark SQL parses as DECIMAL). Hot constructors compose these into one
-# expr() parse instead of ~10 py4j round-trips per fold; see
+# Vector folds as Spark-SQL source (0.0D keeps the accumulator a DOUBLE —
+# a bare 0.0 in Spark SQL parses as DECIMAL). Hot constructors compose
+# these into one expr() parse instead of ~10 py4j round-trips per fold; see
 # functions.scalar.hash64_spark_sql for the round-trip economics.
 
 
@@ -75,9 +60,10 @@ def _norm_sql(v: str) -> str:
     )
 
 
-def cosine(a, b) -> Column:
-    """Cosine similarity between two ARRAY<FLOAT/DOUBLE> columns."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity between two ARRAY<FLOAT/DOUBLE> columns, given as
+    SQL expressions (column names)."""
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
 def cosine_topk_bruteforce(
@@ -307,7 +293,7 @@ def ivf_topk(
         cand.filter(F.col("neighbor_id") != F.col("query_id"))
         # spill>1 can surface the same neighbor via several probed buckets
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
+        .withColumn("cosine", F.round(cosine("qv", "cv"), 6))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -575,7 +561,7 @@ def pq_topk_reranked(
     scored = (
         cand.join(nv, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
+        .withColumn("cosine", F.round(cosine("qv", "cv"), 6))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -717,7 +703,7 @@ def ivfpq_topk(
     rer = (
         short.join(nv, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
+        .withColumn("cosine", F.round(cosine("qv", "cv"), 6))
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")

@@ -14,9 +14,10 @@ Scale notes
 
 Provenance (read, not copied): sort desc + limit ←
 amplifier_library/sessions/manager.py:408-414; offset/limit ←
-automations/manager.py:353-357; tail-N ← manager.py:343-345; multi-key
-heterogeneous sort ← amplifierd/routers/directories.py:66-68,168; global
-re-sort ← routers/sessions.py:1384; delete-last ← manager.py:293-325.
+automations/manager.py:353-357; tail-N ← manager.py:343-345. The
+multi-key heterogeneous sort (O5) and the global re-sort (O7) are catalog
+entries (``o5_completion_sort``, ``o7_global_sort``); delete-last (O9) is
+a store operation (``mutation/dml.py``).
 """
 
 from __future__ import annotations
@@ -96,23 +97,3 @@ def tail_n(
     )
 
 
-def completion_sort(df: DataFrame, is_dir_col: str = "is_directory", name_col: str = "name") -> DataFrame:
-    """O5: multi-key heterogeneous sort — directories first, then
-    case-insensitive name."""
-    return df.orderBy(F.desc(is_dir_col), F.lower(F.col(name_col)))
-
-
-def global_sort(df: DataFrame, *order: Column | str) -> DataFrame:
-    """O7: global sort (range-partitioned exchange + per-partition sort)."""
-    return df.orderBy(*order)
-
-
-def drop_last_per_group(df: DataFrame, group: str, order: list[Column]) -> DataFrame:
-    """O9: remove the newest row per group (reference's delete-last-message).
-    ``order`` must put the newest row first (rn=1 is dropped)."""
-    w = Window.partitionBy(group).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") > 1)
-        .drop("__rn")
-    )

@@ -14,8 +14,10 @@ from pyspark.sql import functions as F
 
 from lakehouse_spark.functions.scalar import (  # noqa: F401  (re-export)
     extract_mentions,
+    hash64,
     normalize_mention,
 )
+from lakehouse_spark.operators.sessionize import _sql_str
 from lakehouse_spark.operators.skew import spread
 
 # --- token counting -----------------------------------------------------------
@@ -241,7 +243,7 @@ def stratified_sample(
 # --- intra-document repetition (Gopher-style quality signal) -------------------
 
 
-def repetition_score(col: Column | str, n: int = 3) -> Column:
+def repetition_score(col: str, n: int = 3) -> Column:
     """Fraction of duplicated word n-grams within one document:
     ``1 - distinct_ngrams / total_ngrams`` (0 = no repetition). High values
     flag boilerplate/spam — one of the Gopher/C4 repetition filters.
@@ -249,23 +251,25 @@ def repetition_score(col: Column | str, n: int = 3) -> Column:
     Pure Catalyst (split + sequence + slice + array_distinct): per-row only,
     no shuffle, runs at scan speed. Documents with fewer than ``n`` words
     yield NULL (no n-grams to judge)."""
-    if isinstance(col, str):
-        g = word_ngrams_sql(f"`{col}`", n)
-        return F.expr(
-            f"round(1.0D - size(array_distinct({g})) / size({g}), 6)"
-        )
-    grams = word_ngrams(col, n)
-    return F.round(
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6
-    )
+    g = word_ngrams_sql(f"`{col}`", n)
+    return F.expr(f"round(1.0D - size(array_distinct({g})) / size({g}), 6)")
 
 
 def word_ngrams_sql(col: str, n: int) -> str:
-    """Spark-SQL source of :func:`word_ngrams` over a column/expression
-    string — ONE expr() parse instead of the DSL's ~10 py4j round-trips per
-    zip_with level (see functions.scalar.hash64_spark_sql). The repeated
-    ``split`` text parses to structurally equal subtrees, exactly what the
-    Column form's reused object produces after analysis."""
+    """Array of space-joined word n-grams of a column/expression string, as
+    Spark-SQL source; NULL when the document has fewer than ``n`` words.
+    Pure Catalyst, per-row, ONE expr() parse (see
+    functions.scalar.hash64_spark_sql on why hot builders compose strings).
+
+    Grams are built by folding ``n`` word-aligned slices with ``zip_with``
+    (gram i = w[i] ⊔ w[i+1] ⊔ … ⊔ w[i+n-1]) — the same shape as
+    operators.dedup.shingle_frame, which measured 3-4× faster than the
+    earlier ``transform(sequence(1, k), i -> concat_ws(slice(words, i, n)))``
+    form: each zip_with walks the arrays pairwise instead of allocating a
+    per-gram slice. Output is identical (split produces no NULL elements,
+    so concat == concat_ws element-wise). The ``k >= 1`` guard keeps the
+    slices from ever being built with a non-positive length. The repeated
+    ``split`` text parses to structurally equal subtrees."""
     words = f"split({col}, ' ')"
     k = f"(size({words}) - {n - 1})"
     # right-fold: acc = suffix words joined; every slice has length
@@ -279,39 +283,9 @@ def word_ngrams_sql(col: str, n: int) -> str:
     return f"(CASE WHEN {k} >= 1 THEN {acc} END)"
 
 
-def word_ngrams(col: Column | str, n: int) -> Column:
-    """Array of space-joined word n-grams; NULL when the document has fewer
-    than ``n`` words. Pure Catalyst, per-row.
-
-    Grams are built by folding ``n`` word-aligned slices with ``zip_with``
-    (gram i = w[i] ⊔ w[i+1] ⊔ … ⊔ w[i+n-1]) — the same shape as
-    operators.dedup.shingle_frame, which measured 3-4× faster than the
-    earlier ``transform(sequence(1, k), i -> concat_ws(slice(words, i, n)))``
-    form: each zip_with walks the arrays pairwise instead of allocating a
-    per-gram slice. Output is identical (split produces no NULL elements,
-    so concat == concat_ws element-wise). The ``k >= 1`` guard keeps the
-    slices from ever being built with a non-positive length.
-
-    String inputs route through :func:`word_ngrams_sql` (one parse);
-    Column inputs keep the equivalent DSL fold."""
-    if isinstance(col, str):
-        return F.expr(word_ngrams_sql(f"`{col}`", n))
-    words = F.split(col, " ")
-    k = F.size(words) - (n - 1)  # number of n-grams; all slices use it
-
-    def grams() -> Column:
-        # right-fold: acc = suffix words joined; every slice has length
-        # k, so zip_with never NULL-pads
-        acc = F.slice(words, n, k)
-        for off in range(n - 1, 0, -1):
-            acc = F.zip_with(
-                F.slice(words, off, k),
-                acc,
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        return acc
-
-    return F.when(k >= 1, grams())
+def word_ngrams(col: str, n: int) -> Column:
+    """:func:`word_ngrams_sql` over the column named ``col``."""
+    return F.expr(word_ngrams_sql(f"`{col}`", n))
 
 
 # --- benchmark decontamination -------------------------------------------------
@@ -470,12 +444,10 @@ def hash_split(
     Scale shape: one narrow projection, no shuffle — the md5-derived
     :func:`hash64` bucket is computed inline at scan speed; downstream
     writers can partition by the label column."""
-    from lakehouse_spark.functions.scalar import hash64
-
     total = sum(weights.values())
     bucket = F.pmod(
         hash64(
-            F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")),
+            f"concat({_sql_str(f'{salt}:')}, cast(`{id_col}` as string))",
             mode=hash_mode,
         ),
         F.lit(total),
@@ -503,13 +475,11 @@ def deterministic_sample(
     reproducible across engines and re-runs, repartition-stable, and
     joinable (the SAME ids survive every run, unlike rand()-based
     sampling). The workhorse behind quality resampling and source mixing."""
-    from lakehouse_spark.functions.scalar import hash64
-
     p = F.lit(prob) if isinstance(prob, (int, float)) else prob
     u = (
         F.pmod(
             hash64(
-                F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")),
+                f"concat({_sql_str(f'{salt}:')}, cast(`{id_col}` as string))",
                 mode=hash_mode,
             ),
             F.lit(1_000_000),
@@ -744,9 +714,7 @@ def weighted_sample(
     the sample must be reproducible and oracle-checkable): u = (h+1)/2^60
     in (0, 1]. ln(1) = 0 is the best possible key, -inf cannot occur.
     """
-    from lakehouse_spark.functions.scalar import hash64
-
-    h = hash64(F.col(id_col).cast("string"), seed=seed, mode=hash_mode)
+    h = hash64(f"cast(`{id_col}` as string)", seed=seed, mode=hash_mode)
     u = (h + F.lit(1)) / F.lit(float(1 << 60))
     key = F.log(u) / F.col(weight_col)
     return (
@@ -843,9 +811,7 @@ def bloom_decontaminate(
     and inlined as an array<long> literal: k md5-derived probes per gram,
     deterministic — the same hash family as every other cross-engine op.
     """
-    from lakehouse_spark.functions.scalar import hash64
-
-    grams_col = word_ngrams(F.col(text_col), n)
+    grams_col = word_ngrams(text_col, n)
     bench_grams = [
         r.g
         for r in bench.select(
@@ -873,7 +839,7 @@ def bloom_decontaminate(
     probes = []
     for i, s in enumerate(seeds):
         doc_grams = doc_grams.withColumn(
-            f"__p{i}", F.pmod(hash64(F.col("g"), seed=s), F.lit(m_bits))
+            f"__p{i}", F.pmod(hash64("g", seed=s), F.lit(m_bits))
         )
         probes.append(
             f"bit_get(element_at(__bloom, CAST(__p{i} / 64 AS INT) + 1), "

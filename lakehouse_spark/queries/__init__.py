@@ -14,7 +14,8 @@ Cross-engine determinism rules applied throughout:
 - row_number outputs are cast to INTEGER on the DuckDB side (Spark emits
   INT32);
 - the shared 60-bit hash is md5-based: Spark `conv(substr(md5(x),1,15),16,10)`
-  == DuckDB `CAST('0x'||substr(md5(x),1,15) AS BIGINT)` (functions.scalar.hash64).
+  == DuckDB `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`
+  (functions.scalar.hash64_spark_sql / dedup_sim._hash64_sql).
 
 Layout: entries register into ``CATALOG`` (defined in :mod:`._core`) at
 import time, one domain module each — :mod:`.tpch` (analytical shapes),

@@ -1,29 +1,9 @@
-"""Query catalog: every implemented operator as a named (Spark builder,
-DuckDB oracle SQL) pair over the driver's testdata tables.
-
-This is the correctness gate's contract (see __spark_entry__.py): the driver
-runs each builder on Spark and the oracle SQL on DuckDB at sf0.01 and
-compares row counts, schemas, and order-insensitive value hashes.
-
-Cross-engine determinism rules applied throughout:
-- every aggregate/computed column is aliased IDENTICALLY on both sides;
-- every float is rounded (4 decimals; 6 for cosine) on BOTH sides;
-- every LIMIT sits on a TOTAL order (explicit tie-break columns);
-- sums of integers are cast to BIGINT on the DuckDB side (DuckDB widens to
-  INT128 where Spark stays INT64);
-- row_number outputs are cast to INTEGER on the DuckDB side (Spark emits
-  INT32);
-- the shared 60-bit hash is md5-based: Spark `conv(substr(md5(x),1,15),16,10)`
-  == DuckDB `CAST('0x'||substr(md5(x),1,15) AS BIGINT)` (functions.scalar.hash64).
-"""
-
 from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lakehouse_spark.io import load_table
 
@@ -51,32 +31,33 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _dsum(col, digits: int = 2):
-    """Order-independent rounded sum for money/quantity columns.
+def _dsum_sql(expr: str, digits: int = 2) -> str:
+    """Order-independent rounded sum for money/quantity columns, as SQL
+    source valid in both Spark and DuckDB.
 
     Double summation order is schedule-dependent (partial-aggregate combine
     order varies with partitioning), so round(sum(double), 2) can flip a
     cent between runs/engines whenever a group's true sum sits near a
     half-cent boundary — ~1% of groups at 100-row group sizes (measured on
     tpch_q7: 4 of 600 groups). Summing in DECIMAL is exact and
-    order-independent; the oracle SQL mirrors it with
-    ``CAST(round(sum(CAST(x AS DECIMAL(18,4))), d) AS DOUBLE)``. The 18,4
-    input widens automatically during aggregation in both engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast("decimal(18,4)")), digits).cast("double")
-
-
-def _davg(col, digits: int = 4):
-    """Order-independent rounded mean: exact decimal sum, one double
-    division (deterministic), then round. Mirrors
-    ``round(CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / count(x), d)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(c.cast("decimal(18,4)")).cast("double") / F.count(c), digits
+    order-independent. The 18,4 input widens automatically during
+    aggregation in both engines."""
+    return (
+        f"CAST(round(sum(CAST(({expr}) AS DECIMAL(18,4))), {digits})"
+        " AS DOUBLE)"
     )
 
 
-def _ssum(col, digits: int = 2, scale: int = 10000):
+def _davg_sql(expr: str, digits: int = 4) -> str:
+    """Order-independent rounded mean: exact decimal sum, one double
+    division (deterministic), then round."""
+    return (
+        f"round(CAST(sum(CAST(({expr}) AS DECIMAL(18,4))) AS DOUBLE)"
+        f" / count({expr}), {digits})"
+    )
+
+
+def _ssum_sql(expr: str, digits: int = 2, scale: int = 10000) -> str:
     """Order-independent rounded sum at INT64 speed: the value is snapped to
     a 1/scale grid (exact for money/quantity columns with <= 4 decimal
     digits), summed as bigint (exact, order-independent, no decimal-kernel
@@ -87,28 +68,15 @@ def _ssum(col, digits: int = 2, scale: int = 10000):
     passed ~1e14 grid units (caught by the round-10 sf0.1 sweep on
     agg_grouping_sets): engine ``round(double, 2)`` implementations differ
     there, so rounding must happen BEFORE the value ever becomes a double.
-    int64 overflow bound unchanged: |sum(x)| * scale < 9.2e18 — fine to
-    ~1e14 in column units; use _dsum where totals can exceed that.
-    Oracle mirror: :func:`_ssum_sql` (same CASE/%% arithmetic — bigint
-    remainder carries the dividend's sign in BOTH engines, so the sign
-    split makes the snap HALF-UP-away-from-zero exactly)."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.sum(F.round(c * scale).cast("long"))
-    mod = scale // (10**digits)
-    if mod > 1:
-        half = mod // 2
-        pos = (s + half) - (s + half) % mod
-        neg = -((-s + half) - (-s + half) % mod)
-        s = F.when(s >= 0, pos).otherwise(neg)
-    return s.cast("double") / F.lit(float(scale))
+    int64 overflow bound: |sum(x)| * scale < 9.2e18 — fine to ~1e14 in
+    column units; use :func:`_dsum_sql` where totals can exceed that.
 
-
-def _ssum_sql(expr: str, digits: int = 2, scale: int = 10000) -> str:
-    """DuckDB mirror of :func:`_ssum`: identical int64 snap, one double
-    division. The aggregate sub-expression repeats textually; engines
-    dedupe identical aggregates so it computes once. ``CAST(scale AS
-    DOUBLE)`` (not a ``10000.0`` literal) so the same string is also safe
-    under Spark SQL, where a bare decimal literal is DECIMAL typed."""
+    The same string serves both engines: bigint remainder carries the
+    dividend's sign in BOTH, so the sign split makes the snap
+    HALF-UP-away-from-zero exactly. The aggregate sub-expression repeats
+    textually; engines dedupe identical aggregates so it computes once.
+    ``CAST(scale AS DOUBLE)`` (not a ``10000.0`` literal) because a bare
+    decimal literal is DECIMAL typed in Spark SQL."""
     s = f"sum(CAST(round(({expr}) * {scale}) AS BIGINT))"
     mod = scale // (10**digits)
     if mod > 1:
@@ -121,35 +89,15 @@ def _ssum_sql(expr: str, digits: int = 2, scale: int = 10000) -> str:
     return f"CAST({s} AS DOUBLE) / CAST({scale} AS DOUBLE)"
 
 
-def _dsum_sql(expr: str, digits: int = 2) -> str:
-    """Spark/DuckDB-safe SQL source of :func:`_dsum` (identical expression
-    tree; see hash64_spark_sql on why hot builders compose SQL strings
-    instead of Column chains)."""
-    return (
-        f"CAST(round(sum(CAST(({expr}) AS DECIMAL(18,4))), {digits})"
-        " AS DOUBLE)"
-    )
-
-
 def _savg_sql(expr: str, digits: int = 4, scale: int = 10000) -> str:
-    """Spark-safe SQL source of :func:`_savg` — CAST({scale} AS DOUBLE)
-    rather than a bare decimal literal, same reason as :func:`_ssum_sql`."""
+    """Scaled-int mean, same exactness argument as :func:`_ssum_sql`; the
+    single double division is bit-identical across engines, and the final
+    ``round(double, d)`` does NOT carry the sum's sf-bump hazard: a mean's
+    magnitude is data-valued (constant in sf), so it never grows into the
+    ~1e10+ range where engine round(double) implementations diverge — the
+    time bomb was group TOTALS growing with scale, which a /count cancels.
+    ``CAST(scale AS DOUBLE)`` for the reason given on :func:`_ssum_sql`."""
     return (
         f"round(sum(CAST(round(({expr}) * {scale}) AS BIGINT))"
         f" / (CAST({scale} AS DOUBLE) * count({expr})), {digits})"
-    )
-
-
-def _savg(col, digits: int = 4, scale: int = 10000):
-    """Scaled-int mean, same exactness argument as :func:`_ssum`; the single
-    double division is bit-identical across engines, and the final
-    ``round(double, d)`` does NOT carry _ssum's sf-bump hazard: a mean's
-    magnitude is data-valued (constant in sf), so it never grows into the
-    ~1e10+ range where engine round(double) implementations diverge — the
-    time bomb was group TOTALS growing with scale, which a /count cancels."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(F.round(c * scale).cast("long"))
-        / (F.lit(float(scale)) * F.count(c)),
-        digits,
     )

@@ -12,28 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_spark.functions.scalar import truncate_payload
-from lakehouse_spark.operators import (
-    aggregates,
-    dedup,
-    filters,
-    joins,
-    similarity,
-    sorts,
-    text,
-)
-from lakehouse_spark.operators.sessionize import (
-    pair_tool_events,
-    turn_number,
-    turn_stats,
-)
-from lakehouse_spark.plans import closure
+from lakehouse_spark.operators import aggregates, dedup, joins, sorts
 from lakehouse_spark.queries._core import (
-    _davg,
-    _dsum,
+    _davg_sql,
+    _dsum_sql,
     _q,
-    _savg,
-    _ssum,
+    _savg_sql,
     _ssum_sql,
     _t,
 )
@@ -94,7 +78,7 @@ def a3_metrics_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("total"),
-        _davg("value").alias("avg_value"),
+        F.expr(_davg_sql("value")).alias("avg_value"),
         F.round(F.max("value"), 4).alias("max_value"),
         F.max(F.struct(F.col("value"), F.col("event_id"))).alias("__mx"),
     ).select(
@@ -341,7 +325,7 @@ def rollup_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "1 day",
         ["event_type"],
-        [F.count("*").alias("n"), _dsum("value").alias("value_sum")],
+        [F.count("*").alias("n"), F.expr(_dsum_sql("value")).alias("value_sum")],
     ).select("bucket_start", "event_type", "n", "value_sum")
 
 
@@ -370,7 +354,7 @@ def rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ru.hierarchy_rollup(
         j,
         ["r_name", "n_name"],
-        [F.count("*").alias("n"), _dsum("c_acctbal").alias("bal")],
+        [F.count("*").alias("n"), F.expr(_dsum_sql("c_acctbal")).alias("bal")],
     )
     # Subtotal NULL labels -> 'ALL': value canonicalizers that sort rows
     # with pandas throw on mixed None/str cells (the a5 lesson); the data
@@ -534,7 +518,7 @@ def agg_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            F.expr(_dsum_sql("l_extendedprice * (1 - l_discount)")).alias(
                 "revenue"
             ),
             F.grouping_id().alias("gid"),
@@ -814,10 +798,11 @@ def agg_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             # count(lit(1)): count(*) star-expansion is rejected inside Pivot
             F.count(F.lit(1)).alias("n"),
-            _ssum(
-                F.when(F.col("o_orderstatus") == "O", F.col("o_totalprice"))
-                .otherwise(0.0),
-                2,
+            F.expr(
+                _ssum_sql(
+                    "CASE WHEN o_orderstatus = 'O' THEN o_totalprice"
+                    " ELSE 0.0D END"
+                )
             ).alias("rev"),
         )
     )
@@ -850,7 +835,10 @@ def agg_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
-        .agg(_ssum("l_extendedprice", 2).alias("revenue"), F.count("*").alias("n"))
+        .agg(
+            F.expr(_ssum_sql("l_extendedprice")).alias("revenue"),
+            F.count("*").alias("n"),
+        )
         .select(
             F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
             F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
@@ -887,7 +875,7 @@ def w4_running_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.date_trunc("day", "l_shipdate").cast("date").alias("ship_day")
-    ).agg(_ssum("l_extendedprice", 2).alias("revenue"))
+    ).agg(F.expr(_ssum_sql("l_extendedprice")).alias("revenue"))
     w_run = Window.orderBy("ship_day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1028,7 +1016,7 @@ def rollup_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.filter((F.col("event_type") == "error") & (F.col("value") > 520))
         .groupBy(F.to_date("ts").alias("day"))
-        .agg(_savg("value", 4).alias("v"))
+        .agg(F.expr(_savg_sql("value")).alias("v"))
     )
     bounds = ev.agg(
         F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")

@@ -731,7 +731,7 @@ def sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q),
         (F.col("neighbor_id") != F.col("query_id"))
         & (F.col("label") == F.col("q_label")),
-    ).withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6))
+    ).withColumn("cosine", F.round(cosine("qv", "cv"), 6))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -829,7 +829,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vec = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("v")), 6))
+        .withColumn("cosine", F.round(cosine("qv", "v"), 6))
         .withColumn("doc_id", F.col("vec_id"))
         .withColumn("rank_vec", F.row_number().over(w_vec))
         .filter(F.col("rank_vec") <= 50)

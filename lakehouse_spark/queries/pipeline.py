@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_spark.operators import sorts, text
 from lakehouse_spark.operators.skew import spread
-from lakehouse_spark.queries._core import _q, _ssum, _ssum_sql, _t
+from lakehouse_spark.queries._core import _q, _ssum_sql, _t
 
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in text._STOPWORDS) + "]"
 
@@ -869,7 +869,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality filtering, e.g. CCNet). Vocab is Zipf-bounded so it "
         "broadcasts; the corpus shuffles only for the per-doc mean. "
         "Per-token NLL snapped to a 1e-6 grid and summed as int64 so the "
-        "mean is order-independent (see _ssum)."
+        "mean is order-independent (see _ssum_sql)."
     ),
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,7 +1009,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = skew.salted_broadcast_join(li, dim, "l_returnflag")
     return joined.groupBy("flag_label").agg(
-        _ssum("l_extendedprice", 2).alias("revenue"),
+        F.expr(_ssum_sql("l_extendedprice")).alias("revenue"),
         F.count("*").alias("n"),
     )
 
@@ -1184,7 +1184,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     grams = docs.select(
-        "doc_id", F.explode(text.word_ngrams(F.col("text"), 5)).alias("gram")
+        "doc_id", F.explode(text.word_ngrams("text", 5)).alias("gram")
     )
     benches = [
         ("holdout_a", F.col("doc_id") % 97 == 0),

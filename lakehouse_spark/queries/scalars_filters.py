@@ -11,28 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_spark.functions.scalar import truncate_payload
-from lakehouse_spark.operators import (
-    aggregates,
-    dedup,
-    filters,
-    joins,
-    similarity,
-    sorts,
-    text,
-)
-from lakehouse_spark.operators.sessionize import (
-    pair_tool_events,
-    turn_number,
-    turn_stats,
-)
-from lakehouse_spark.plans import closure
+from lakehouse_spark.operators import filters
 from lakehouse_spark.queries._core import (
-    _davg,
-    _dsum,
+    _dsum_sql,
     _q,
-    _savg,
-    _ssum,
     _ssum_sql,
     _t,
 )
@@ -73,7 +55,7 @@ def f2_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("1999-06-01").cast("timestamp"),
     )
     return li.groupBy("l_returnflag").agg(
-        F.count("*").alias("n"), _dsum("l_quantity").alias("qty")
+        F.count("*").alias("n"), F.expr(_dsum_sql("l_quantity")).alias("qty")
     )
 
 
@@ -432,7 +414,7 @@ def t14_nested_access(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("data.result.success").alias("success"),
     ).agg(
         F.count("*").alias("n"),
-        _dsum(F.col("data.result.output")).alias("output_sum"),
+        F.expr(_dsum_sql("data.result.output")).alias("output_sum"),
     )
 
 
@@ -726,7 +708,7 @@ def t21_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("ratio").isNull().cast("long")).alias("n_null_ratio"),
-            _ssum(F.coalesce("ratio", F.lit(0.0))).alias("sum_ratio"),
+            F.expr(_ssum_sql("coalesce(ratio, 0.0D)")).alias("sum_ratio"),
             F.sum(F.col("parsed").isNull().cast("long")).alias("n_unparseable"),
         )
     )

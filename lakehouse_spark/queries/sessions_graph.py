@@ -13,15 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_spark.functions.scalar import truncate_payload
-from lakehouse_spark.operators import (
-    aggregates,
-    dedup,
-    filters,
-    joins,
-    similarity,
-    sorts,
-    text,
-)
+from lakehouse_spark.operators import joins, sorts
 from lakehouse_spark.operators.sessionize import (
     pair_tool_events,
     turn_number,
@@ -29,11 +21,8 @@ from lakehouse_spark.operators.sessionize import (
 )
 from lakehouse_spark.plans import closure
 from lakehouse_spark.queries._core import (
-    _davg,
-    _dsum,
+    _davg_sql,
     _q,
-    _savg,
-    _ssum,
     _ssum_sql,
     _t,
 )
@@ -186,7 +175,7 @@ def j5_fk_lookup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = joins.fk_lookup(cust, nation, "c_nationkey", "n_nationkey", "inner")
     j = joins.fk_lookup(j, region, "n_regionkey", "r_regionkey", "inner")
     return j.groupBy("r_name", "n_name").agg(
-        F.count("*").alias("n_cust"), _davg("c_acctbal").alias("avg_bal")
+        F.count("*").alias("n_cust"), F.expr(_davg_sql("c_acctbal")).alias("avg_bal")
     )
 
 
@@ -793,7 +782,11 @@ def j_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     k = F.nullif(F.col("user_id") % 7, F.lit(0)).alias("k")
     a = ev.select(k).groupBy("k").agg(F.count("*").alias("n_a"))
-    b = ev.select(k, "value").groupBy("k").agg(_ssum("value", 2).alias("sum_b"))
+    b = (
+        ev.select(k, "value")
+        .groupBy("k")
+        .agg(F.expr(_ssum_sql("value")).alias("sum_b"))
+    )
     return a.join(b, a["k"].eqNullSafe(b["k"])).select(
         a["k"], "n_a", "sum_b"
     )

@@ -23,7 +23,7 @@ from lakehouse_spark.queries._core import CATALOG, _q
 
 # One portable SQL text per entry: Spark runs it via the catalog, DuckDB as
 # the oracle. Decimal-sum rounding keeps both engines order-independent
-# (see _core._dsum).
+# (see _core._dsum_sql).
 _Q3_SQL = CATALOG["tpch_q3_shipping_priority"].oracle
 _Q5_SQL = CATALOG["tpch_q5_local_supplier_volume"].oracle
 

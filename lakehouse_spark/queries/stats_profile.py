@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_spark.operators import sorts
-from lakehouse_spark.queries._core import _q, _dsum, _ssum, _ssum_sql, _t
+from lakehouse_spark.queries._core import _q, _ssum_sql, _t
 
 
 # Cent-rounding stays INTEGER until one final division (shared by both
@@ -205,7 +205,7 @@ def w6_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     weekly = li.groupBy(
         F.date_trunc("week", "l_shipdate").cast("date").alias("week")
-    ).agg(_ssum("l_extendedprice", 2).alias("revenue"))
+    ).agg(F.expr(_ssum_sql("l_extendedprice")).alias("revenue"))
     w = Window.orderBy("week")
     prev = F.lag("revenue").over(w)
     return weekly.select(
@@ -441,7 +441,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     od = _t(spark, sf_dir, "orders")
     seg = od.groupBy("o_orderpriority").agg(
-        _ssum("o_totalprice", 2).alias("revenue")
+        F.expr(_ssum_sql("o_totalprice")).alias("revenue")
     )
     t = F.sum("revenue").over(Window.partitionBy())
     return (
@@ -516,7 +516,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     od = _t(spark, sf_dir, "orders")
-    cust = od.groupBy("o_custkey").agg(_ssum("o_totalprice", 2).alias("rev"))
+    cust = od.groupBy("o_custkey").agg(F.expr(_ssum_sql("o_totalprice")).alias("rev"))
     w = Window.orderBy("rev", "o_custkey")
     wa = Window.partitionBy()
     ranked = cust.select(

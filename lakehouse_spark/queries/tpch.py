@@ -12,31 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_spark.functions.scalar import truncate_payload
-from lakehouse_spark.operators import (
-    aggregates,
-    dedup,
-    filters,
-    joins,
-    similarity,
-    sorts,
-    text,
-)
-from lakehouse_spark.operators.sessionize import (
-    pair_tool_events,
-    turn_number,
-    turn_stats,
-)
-from lakehouse_spark.plans import closure
+from lakehouse_spark.operators import sorts
 from lakehouse_spark.operators.skew import spread
 from lakehouse_spark.queries._core import (
-    _davg,
-    _dsum,
+    _davg_sql,
     _dsum_sql,
     _q,
-    _savg,
     _savg_sql,
-    _ssum,
     _ssum_sql,
     _t,
 )
@@ -538,9 +520,7 @@ def tpch_q19_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return j.filter(band).agg(
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "revenue"
-        )
+        F.expr(_dsum_sql("l_extendedprice * (1 - l_discount)")).alias("revenue")
     )
 
 
@@ -694,7 +674,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+        F.expr(_dsum_sql("l_extendedprice * (1 - l_discount)")).alias(
             "total_revenue"
         )
     )
@@ -832,7 +812,7 @@ def tpch_q22_global_sales_opportunity(
     in_codes = cust.filter(F.col("cntrycode").isin(codes))
     threshold = (
         in_codes.filter(F.col("c_acctbal") > 0.0)
-        .agg(_davg("c_acctbal").alias("a"))
+        .agg(F.expr(_davg_sql("c_acctbal")).alias("a"))
         .collect()[0]["a"]
     )
     orders = (
@@ -846,7 +826,7 @@ def tpch_q22_global_sales_opportunity(
         .groupBy("cntrycode")
         .agg(
             F.count("*").alias("numcust"),
-            _dsum("c_acctbal").alias("totacctbal"),
+            F.expr(_dsum_sql("c_acctbal")).alias("totacctbal"),
         )
     )
 
@@ -1010,7 +990,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         li.join(F.broadcast(good_supp), li.l_suppkey == good_supp.s_suppkey)
         .groupBy("l_partkey")
-        .agg(_dsum("l_extendedprice").alias("value"))
+        .agg(F.expr(_dsum_sql("l_extendedprice")).alias("value"))
         .localCheckpoint(eager=True)
     )
     threshold = v.agg(

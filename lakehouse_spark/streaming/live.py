@@ -6,8 +6,9 @@ and keepalives (streaming.py:89-132, routers/stream.py:90-152 — read, not
 copied). The Spark-native shape:
 
 - **source** (ST4/SC12): file-source `readStream` over the append-only
-  events directory — matches the reference's single-writer JSONL tail-read.
-  Explicit schema required by Structured Streaming anyway.
+  events directory (`sources.jsonl.read_jsonl_stream`) — matches the
+  reference's single-writer JSONL tail-read. Explicit schema required by
+  Structured Streaming anyway.
 - **filtering at the emitter** (ST3): `isin` allowlist + 'hook:' prefix.
 - **fan-out** (ST1): `foreachBatch` handing each micro-batch to N sinks —
   Spark's unit of multiplexing; per-subscriber queues live outside the
@@ -29,9 +30,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 DEFAULT_STREAMING_HOOKS = (
     # ← hooks/__init__.py:15-26: the emit allowlist (names re-typed from
@@ -51,19 +51,6 @@ DEFAULT_STREAMING_HOOKS = (
 CANCELLATION_EVENT = "execution_cancelled"
 ERROR_EVENT = "execution_error"
 LIFECYCLE_EVENTS = (CANCELLATION_EVENT, ERROR_EVENT)
-
-
-def read_event_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """ST4/SC12: streaming scan of an append-only JSONL events directory."""
-    reader = spark.readStream.schema(schema).option("mode", "PERMISSIVE")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
 
 
 def emitter_filter(

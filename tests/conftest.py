@@ -62,21 +62,47 @@ _SLOW_NODEIDS = {
 }
 
 
+@pytest.hookimpl(tryfirst=True)  # before -k/-m deselection
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("PYTEST_FULL") == "1":
-        return
+    full = os.environ.get("PYTEST_FULL") == "1"
     skip = pytest.mark.skip(reason="slow; set PYTEST_FULL=1 to run")
+    modules = {}  # file -> module object, for files collected at all
+    collected = set()  # (file, function name) pairs collected
     matched = set()
     for item in items:
         # nodeid is like "tests/test_x.py::test_y[param]" — compare on the
         # basename::name form so the gate works from any rootdir.
         nid = item.nodeid.split("/")[-1]
+        file = nid.split("::")[0]
+        modules.setdefault(file, getattr(item, "module", None))
+        collected.add((file, getattr(item, "originalname", item.name)))
         if nid in _SLOW_NODEIDS:
-            item.add_marker(skip)
+            if not full:
+                item.add_marker(skip)
             matched.add(nid)
-    # A renamed/deleted slow test must not silently un-gate: leave the
-    # stale entry detectable (full runs and `-q` output both show counts).
-    config._slow_gate_unmatched = _SLOW_NODEIDS - matched
+    # A renamed/deleted slow test would silently un-gate its replacement:
+    # report entries whose file was collected but whose function no longer
+    # exists, or whose parameter id is gone while the function's others
+    # were collected (a node-id or -k selection is not staleness).
+    stale = []
+    for nid in sorted(_SLOW_NODEIDS - matched):
+        file, name = nid.split("::")
+        func = name.split("[")[0]
+        if file not in modules:
+            continue
+        if not hasattr(modules[file], func) or (
+            "[" in name and (file, func) in collected
+        ):
+            stale.append(nid)
+    config._slow_gate_stale = stale
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    stale = getattr(config, "_slow_gate_stale", [])
+    if stale:
+        terminalreporter.write_sep("=", "stale _SLOW_NODEIDS entries")
+        for nid in stale:
+            terminalreporter.write_line(f"not collected: {nid}")
 
 
 @pytest.fixture(scope="session")

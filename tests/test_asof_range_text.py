@@ -441,7 +441,7 @@ class TestBloomDecontaminate:
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
         bench = docs.filter(F.col("doc_id") < 5)
         grams = docs.select(
-            F.explode(F.array_distinct(text.word_ngrams(F.col("text"), 5))).alias("g")
+            F.explode(F.array_distinct(text.word_ngrams("text", 5))).alias("g")
         )
         total = grams.count()
 
@@ -458,7 +458,7 @@ class TestBloomDecontaminate:
         # benchmark is 1% of docs; an effective prescreen leaves well under
         # a tenth of corpus grams as candidates
         bench_grams = bench.select(
-            F.explode(F.array_distinct(text.word_ngrams(F.col("text"), 5))).alias("g")
+            F.explode(F.array_distinct(text.word_ngrams("text", 5))).alias("g")
         ).distinct().count()
         assert bench_grams < total / 10
 

@@ -1,7 +1,7 @@
-"""The xxhash64 production hash path: every operator that routes through
-functions.scalar.hash64 must be deterministic and semantically equivalent
-in both modes — md5 stays the default for DuckDB-oracle parity, xxhash64
-is the JVM-native fast path for production runs."""
+"""The two hash modes of functions.scalar.hash64: md5 (the default) must
+equal its Python and DuckDB replays; xxhash64, the JVM-native fast path
+for production runs, must be deterministic, in range, and semantically
+equivalent wherever an operator routes through it."""
 
 from __future__ import annotations
 
@@ -95,3 +95,29 @@ def test_minhash_modes_agree_on_verified_pairs(spark):
     }
     dedup.release_caches()
     assert md5_pairs and md5_pairs == xxh_pairs
+
+
+def test_hash64_md5_matches_python_mirror_and_duckdb(spark):
+    """md5 mode is the cross-engine hash: Spark's value must equal the
+    Python mirror (bloom.py_hash64 over the seed-prefixed string) and DuckDB
+    running the oracle's rendering on the same strings."""
+    import duckdb
+
+    from lakehouse_spark.mutation.bloom import py_hash64
+    from lakehouse_spark.queries.dedup_sim import _hash64_sql
+
+    strings = ["", "a", "doc-17", "The quick brown fox", "héllo wörld", "日本語 ✓"]
+    rows = list(enumerate(strings))
+    df = spark.createDataFrame(rows, "i int, x string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, x VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    for seed in (0, 7):
+        got = df.select("i", hash64("x", seed=seed).alias("h")).collect()
+        spark_h = {r.i: r.h for r in got}
+        duck_sql = f"SELECT i, {_hash64_sql('x', seed)} FROM t"
+        duck_h = dict(con.execute(duck_sql).fetchall())
+        py_h = {i: py_hash64(f"s{seed}:{x}" if seed else x) for i, x in rows}
+        assert spark_h == py_h == duck_h, seed
+        assert all(0 <= h < (1 << 60) for h in py_h.values())
+    con.close()

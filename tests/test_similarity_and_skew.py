@@ -130,7 +130,7 @@ def test_kmeans_centroids_improve_ivf(spark):
             "bucket_id",
         )
         return joined.select(
-            F.avg(similarity.cosine(F.col("embedding"), F.col("cv"))).alias("s")
+            F.avg(similarity.cosine("embedding", "cv")).alias("s")
         ).first()["s"]
 
     naive = emb.filter(F.col("vec_id") % 25 == 0).select(

@@ -1,9 +1,9 @@
-"""Round-13 continuation: the hot query constructors compose Spark-SQL
-strings (one expr()/selectExpr parse) instead of Column-DSL chains — one
-py4j round-trip per F.* call measured ~0.5-1 ms on a virtualized driver and
-query CONSTRUCTION was ~45% of the headline suite. These tests pin that the
-string composers build the SAME values as the Column forms they replaced,
-and that the io-layer schema memo never changes what a read returns.
+"""The hot query constructors compose Spark-SQL strings (one
+expr()/selectExpr parse) instead of Column-DSL chains — one py4j round-trip
+per F.* call measured ~0.5-1 ms on a virtualized host and query
+CONSTRUCTION was ~45% of the headline suite. These tests pin the string
+templates against independent pure-Python references, and that the
+io-layer schema memo never changes what a read returns.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from lakehouse_spark.functions.scalar import hash64, hash64_spark_sql
+from lakehouse_spark.functions.scalar import hash64_spark_sql
 
 
 @pytest.fixture()
@@ -31,57 +31,71 @@ def docs(spark):
     )
 
 
-def test_hash64_spark_sql_matches_column_form(spark, docs):
-    for mode in ("md5", "xxhash64"):
-        for seed in (0, 7):
-            got = docs.selectExpr(
-                "doc_id",
-                f"{hash64_spark_sql('text', seed=seed, mode=mode)} as h",
-            ).collect()
-            want = docs.select(
-                "doc_id", hash64("text", seed=seed, mode=mode).alias("h")
-            ).collect()
-            assert sorted(got) == sorted(want), (mode, seed)
-
-
 def test_hash64_spark_sql_rejects_unknown_mode():
     with pytest.raises(ValueError):
         hash64_spark_sql("x", mode="fnv")
 
 
-def test_word_ngrams_sql_matches_column_form(spark, docs):
-    from lakehouse_spark.operators.text import word_ngrams, word_ngrams_sql
-
-    for n in (2, 3, 5):
-        got = docs.selectExpr(
-            "doc_id", f"{word_ngrams_sql('text', n)} as g"
-        ).collect()
-        # Column-input path still uses the DSL fold — compare against it.
-        want = docs.select(
-            "doc_id", word_ngrams(F.col("text"), n).alias("g")
-        ).collect()
-        assert sorted(got, key=lambda r: r.doc_id) == sorted(
-            want, key=lambda r: r.doc_id
-        ), n
+def _py_word_ngrams(text, n):
+    """Reference: a plain sliding window over Spark's split-on-space."""
+    if text is None:
+        return None
+    words = text.split(" ")
+    if len(words) < n:
+        return None
+    return [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
 
 
-def test_minhash_signature_sql_matches_column_form(spark, docs):
+def test_word_ngrams_sql_matches_python_sliding_window(spark, docs):
+    from lakehouse_spark.operators.text import word_ngrams_sql
+
+    extra = spark.createDataFrame(
+        [(6, "a  b c "), (7, "héllo wörld ñ 日本 語"), (8, None)],
+        "doc_id long, text string",
+    )
+    all_docs = docs.union(extra)
+    rows = all_docs.collect()
+    for n in range(1, 6):
+        got = {
+            r.doc_id: r.g
+            for r in all_docs.selectExpr(
+                "doc_id", f"{word_ngrams_sql('text', n)} as g"
+            ).collect()
+        }
+        want = {r.doc_id: _py_word_ngrams(r.text, n) for r in rows}
+        assert got == want, n
+    # documents shorter than n give NULL, not an empty array
+    assert want[3] is None and want[1] is not None
+
+
+def test_minhash_signature_sql_matches_python_xor_min(spark, docs):
+    from lakehouse_spark.mutation.bloom import py_hash64
     from lakehouse_spark.operators.dedup import (
-        minhash_signature,
         minhash_signature_sql,
         shingle_frame,
+        xor_salts,
     )
 
     sh = shingle_frame(docs, "doc_id", "text", 3, spread_input=False)
-    hs = "transform(sh, s -> xxhash64(s) & 1152921504606846975L)"
-    got = sh.selectExpr("id", f"{minhash_signature_sql(hs, 16)} as sig").collect()
-    want = sh.select(
-        "id",
-        minhash_signature(
-            F.transform("sh", lambda s: hash64(s, mode="xxhash64")), 16
-        ).alias("sig"),
-    ).collect()
-    assert sorted(got) == sorted(want)
+    sh = sh.union(
+        spark.createDataFrame([(99, [])], "id long, sh array<string>")
+    )
+    hs = f"transform(sh, s -> {hash64_spark_sql('s')})"
+    got = {
+        r.id: r.sig
+        for r in sh.selectExpr(
+            "id", f"{minhash_signature_sql(hs, 16)} as sig"
+        ).collect()
+    }
+    want = {}
+    for r in sh.collect():
+        hashes = [py_hash64(s) for s in r.sh]
+        want[r.id] = [
+            min((h ^ salt for h in hashes), default=1 << 62)
+            for salt in xor_salts(16)
+        ]
+    assert got == want
+    assert got[99] == [1 << 62] * 16  # empty input keeps the sentinel
 
 
 def test_pair_tool_events_quoted_kind_values(spark):

@@ -468,21 +468,23 @@ def manifest_plane_section(spark) -> dict:
             t0 = time.perf_counter()
             fresh._snapshot(fresh.current_version())
             cold_load = round(time.perf_counter() - t0, 4)
-            # Metadata-only commits through the append LANE (what
-            # store.append() and the streaming sink use): prior segments
+            # Metadata-only commits through the delta lane removing nothing
+            # (what store.append() and the streaming sink use): prior segments
             # ride by reference, the head mirror evolves in place. The
             # FIRST commit pays a one-time O(n) head-mirror build (dict
             # copies off the cold snapshot) — report it separately so
             # the steady-state latency claim measures steady state
             # (same warm-up convention as the query suite).
             t0 = time.perf_counter()
-            fresh._transact(None, append_make=lambda v: [f"_synthw{v:06d}"])
+            fresh._transact(
+                None, mutate_make=([], lambda v: [f"_synthw{v:06d}"])
+            )
             first_commit = round(time.perf_counter() - t0, 4)
             commit_secs = []
             for _ in range(9):
                 t0 = time.perf_counter()
                 fresh._transact(
-                    None, append_make=lambda v: [f"_synthx{v:06d}"]
+                    None, mutate_make=([], lambda v: [f"_synthx{v:06d}"])
                 )
                 commit_secs.append(round(time.perf_counter() - t0, 4))
             head = fresh.current_version()
@@ -552,7 +554,7 @@ def manifest_plane_section(spark) -> dict:
         # shard reuse makes this O(tail shard), not O(table).
         fresh = TableStore(spark, tdir, key="id", stats_cols=("id",))
         fresh.checkpoint_sync = True
-        fresh._transact(None, append_make=lambda v: [f"_synthx{v:06d}"])
+        fresh._transact(None, mutate_make=([], lambda v: [f"_synthx{v:06d}"]))
         t0 = time.perf_counter()
         fresh._write_checkpoint(fresh.current_version())
         ckpt_incr_write = round(time.perf_counter() - t0, 4)
@@ -606,8 +608,8 @@ def _dml_metadata_section(spark, root: str) -> dict:
     - ``selection_sec``: predicate-scoped planning (_dml_manifest +
       _split_by_key_overlap over the pruned superset) — flat: list doc +
       matched shard, both cached across statements.
-    - ``mutate_commit_sec``: a metadata-only mutate-lane commit (remove one
-      synthetic segment, add one) — the DML analog of the append-lane
+    - ``mutate_commit_sec``: a metadata-only delta-lane commit (remove one
+      synthetic segment, add one) — the DML analog of the append
       numbers above; flat and sub-ms.
     - ``statement_sec``: a REAL end-to-end rewrite-mode upsert of one key
       living in the one real segment (selection + touched-only aligned

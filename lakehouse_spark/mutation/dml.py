@@ -283,15 +283,16 @@ class DmlMixin:
             return
         rows = self._apply_generated(rows)
         self._reject_schema_conflicts(rows)
-        # Append LANE: prior segments ride by reference inside the claimed
-        # transaction (once v is claimed, v-1 is immutable) and the commit
-        # touches O(new segments) manifest state — the head mirror evolves
-        # in place, so ingest commit latency is flat in table size.
+        # Delta lane, removing nothing: prior segments ride by reference
+        # inside the claimed transaction (once v is claimed, v-1 is
+        # immutable) and the commit touches O(new segments) manifest state
+        # — the head mirror evolves in place, so ingest commit latency is
+        # flat in table size.
         nv = self._transact(
             None,
             meta,
             txn,
-            append_make=lambda v: self._write_partitioned(rows, v),
+            mutate_make=([], lambda v: self._write_partitioned(rows, v)),
         )
         self._carry_schema_union(nv, rows.schema)
 
@@ -566,14 +567,15 @@ class DmlMixin:
                     self._pending_dv[name] = list(touched)
                 return new_segs
 
-            # Append lane (prior segments by reference): the commit writes
-            # O(changed rows) data AND touches O(changed) manifest state.
+            # Delta lane, removing nothing (prior segments by reference):
+            # the commit writes O(changed rows) data AND touches O(changed)
+            # manifest state.
             nv = self._transact(
                 None,
                 txn=txn,
                 base_version=v0,
                 rebase_predicate=rebase_pred,
-                append_make=_mor,
+                mutate_make=([], _mor),
             )
             self._carry_schema(nv)
             return
@@ -882,7 +884,7 @@ class DmlMixin:
                 txn=txn,
                 base_version=v0,
                 rebase_predicate=rebase_pred,
-                append_make=_mor,
+                mutate_make=([], _mor),
             )
             if unknown and extra_cols == "evolve":
                 self._schema_cache = None  # schema widened: rebuild
@@ -1026,7 +1028,7 @@ class DmlMixin:
                 txn=txn,
                 base_version=v0,
                 rebase_predicate=rebase_pred,
-                append_make=_keep,
+                mutate_make=([], _keep),
             )
             self._carry_schema(nv)
             return removed
@@ -1116,7 +1118,7 @@ class DmlMixin:
             None,
             base_version=v0,
             rebase_predicate=rebase_pred,
-            append_make=_keep,
+            mutate_make=([], _keep),
         )
         self._carry_schema(nv)
         return removed

@@ -317,6 +317,30 @@ def _schema_union(prev: dict | None, new: dict | None) -> dict | None:
     return {"type": "struct", "fields": list(prev["fields"]) + extra}
 
 
+def _next_schema(
+    prev: dict | None, pending: dict | None, full_replace: bool
+) -> dict | None:
+    """The schema scalar a commit records, given the previous one and the
+    schema this commit wrote (``pending``; None when it wrote nothing).
+    Written schemas union forward; a FULL-REPLACE commit (creation,
+    overwrite, whole-table compaction: every prior segment removed)
+    RESETS to exactly what was written, because overwrite legitimately
+    redefines the schema and a full rewrite physically purges dropped
+    columns. UNKNOWN stays unknown: a pre-scalar table's true schema is
+    the footer union over segments this commit did NOT rewrite, so
+    recording just this commit's written schema would make later
+    targeted DML align to a SUBSET and physically drop the other columns
+    from rewritten segments. Only a full replace may seed the scalar on
+    such a table."""
+    if pending is None:
+        return prev
+    if full_replace:
+        return pending
+    if prev is None:
+        return None
+    return _schema_union(prev, pending)
+
+
 def _apply_delta(prev: dict, d: dict) -> dict:
     """Snapshot at v from the snapshot at v-1 plus v's delta manifest.
     Returns a NEW dict with fresh top-level containers; per-segment stat
@@ -813,7 +837,7 @@ class TxnMixin:
         cache and share substructure with their neighbors.
 
         When this instance's mutable head-state (maintained by the
-        append-lane commit, see :meth:`_head_for`) holds ``v``, the
+        delta-lane commit, see :meth:`_head_for`) holds ``v``, the
         snapshot is materialized from it — O(n) copy once, then cached —
         instead of replaying the delta chain from disk. Top-level
         containers are COPIED under the head lock so later in-place head
@@ -849,7 +873,7 @@ class TxnMixin:
 
     def _head_for(self, cur: int) -> dict:
         """This instance's OWNED, mutable head-state at version ``cur`` —
-        the in-memory mirror the append-lane commit evolves in place so a
+        the in-memory mirror the delta-lane commit evolves in place so a
         pure append costs O(new segments), not O(table), in driver CPU
         (the same incremental-snapshot-update shape Delta's Snapshot
         keeps). Rebuilt from the materialized snapshot when absent or
@@ -865,7 +889,7 @@ class TxnMixin:
                 return head
         snap = self._snapshot(cur)  # not under the lock (it takes it)
         # ``segments`` is an insertion-ordered dict used as an ordered SET:
-        # the mutate lane removes O(affected) names per DML commit, and a
+        # the delta lane removes O(affected) names per DML commit, and a
         # list would make each removal O(table). ``dvrev`` is the reverse
         # index segment -> dv names masking it, so a rewrite that drops
         # segments finds the dvs it made inert in O(affected), not by
@@ -1253,134 +1277,6 @@ class TxnMixin:
                 adds.append(s)
         return adds
 
-    def _commit_append(
-        self,
-        nxt: int,
-        cur: int,
-        append_make,
-        meta: dict | None,
-        txn: tuple[str, int] | None,
-    ) -> int:
-        """The append lane of :meth:`_transact` (caller holds the claim on
-        ``nxt`` and routes abort cleanup): commit ``append_make(nxt)``'s
-        new segments on top of version ``cur`` touching O(new segments)
-        state — the head mirror evolves in place instead of rebuilding
-        O(table) containers per commit, which is what keeps a streaming
-        ingest's commit latency flat from 10^3 to 10^6 segments.
-
-        Also serves merge-on-read DML (dv delete / dv upsert / MoR merge):
-        those commits are prev-segments-plus-new-segments plus a deletion
-        vector riding in ``_pending_dv`` — the same delta shape. Their
-        ``base_version`` conflict check (and the disjoint-append rebase)
-        already ran in the caller before dispatch, and the head mirror at
-        ``cur`` inherently carries any rebased-in interleaved appends."""
-        head = self._head_for(cur)
-        dv_before = set(self._pending_dv)
-        added = append_make(nxt)
-        dv_set: dict = {}
-        for name in list(self._pending_dv):
-            if name not in dv_before:
-                dv_set[name] = self._pending_dv.pop(name)
-        st_new: dict = {}
-        pt_new: dict = {}
-        for s in added:
-            st = self._pending_stats.pop(s, None)
-            if st:
-                st_new[s] = st
-            p = self._pending_parts.pop(s, None)
-            if p is not None:
-                pt_new[s] = p
-        pending_schema = getattr(self, "_pending_schema", None)
-        self._pending_schema = None
-        # Union only over a KNOWN prev schema — seeding the scalar from one
-        # append's written subset on a pre-scalar table would poison later
-        # DML alignment (see the general lane's prev_schema-is-None note).
-        new_schema = (
-            _schema_union(head.get("schema"), pending_schema)
-            if head.get("schema") is not None
-            else None
-        )
-        delta_doc: dict = {
-            "delta": 1,
-            "add": list(added),
-            "remove": [],
-            "meta": meta or {},
-            "committed_at": time.time(),
-        }
-        if st_new:
-            delta_doc["stats"] = st_new
-        if pt_new:
-            delta_doc["partitions"] = pt_new
-        if dv_set:
-            delta_doc["dv_set"] = dv_set
-        if new_schema != head.get("schema"):
-            # Schema-evolving append: the delta records the widened union
-            # (and thereby stops counting as a pure append for the
-            # conflict-rebase commute proof — conservative by design).
-            delta_doc["schema"] = new_schema
-        if txn is not None:
-            app, ver = txn
-            delta_doc["txn_set"] = {
-                app: max(int(ver), int(head["txn"].get(app, -1)))
-            }
-        # Canonicalize through JSON once so the in-memory head mirror is
-        # bit-identical to what a cold reader replays from the file
-        # (dates/decimals in harvested stats degrade to strings exactly as
-        # the round-trip would).
-        doc = json.loads(json.dumps(delta_doc, default=str))
-        if self.write_cdf:
-            # This lane also serves merge-on-read DML (docstring above):
-            # an add+dv_set delta classifies as a REWRITE, so the
-            # changes-readable invariant requires its change file before
-            # the pointer moves — a pure append or dv-only delete needs
-            # none (materialize_cdf returns False for those kinds), and
-            # the restricted diff keeps this O(touched segments). Without
-            # this, a dv upsert on a CDF store published a rewrite
-            # version no stream could ever read (round-12 finding #1).
-            # Ordered BEFORE the manifest finalize: the doc in hand is
-            # all the diff needs, and a failure then aborts a mere
-            # zero-length claim — nothing a concurrent _recover_slot
-            # could roll forward while our abort handler unlinks it
-            # (round-12 pass-2 finding #2).
-            self._touch_claim(nxt)
-            self.materialize_cdf(nxt, _raw=doc, _prefinalize=True)
-        tmp = self._manifest_path(nxt) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._manifest_path(nxt))
-        self._swap_pointer(nxt)
-        # -- committed. Nothing below may raise into the caller's abort
-        # cleanup (it would unlink the LIVE manifest): the head mirror and
-        # the periodic checkpoint are maintenance — on any failure drop
-        # the mirror (rebuilt from files on demand) and move on. Exit
-        # signals (KeyboardInterrupt/SystemExit) RE-RAISE after the mirror
-        # drop: the commit is already durable so propagating is safe, and
-        # swallowing them would keep the process running as if it had
-        # never been interrupted.
-        try:
-            with self._head_lock:
-                for s in doc["add"]:
-                    head["segments"][s] = None
-                head["stats"].update(doc.get("stats", {}))
-                head["partitions"].update(doc.get("partitions", {}))
-                for n, ap in doc.get("dv_set", {}).items():
-                    head["dv"][n] = ap
-                    for s in ap:
-                        head["dvrev"].setdefault(s, set()).add(n)
-                head["txn"].update(doc.get("txn_set", {}))
-                if "schema" in doc:
-                    head["schema"] = doc["schema"]
-                head["meta"] = doc["meta"]
-                head["committed_at"] = doc["committed_at"]
-                head["version"] = nxt
-            self._maybe_checkpoint(nxt)
-        except Exception:
-            self._head = None
-        except BaseException:
-            self._head = None
-            raise
-        return nxt
-
     def _commit_mutate(
         self,
         nxt: int,
@@ -1390,17 +1286,18 @@ class TxnMixin:
         meta: dict | None,
         txn: tuple[str, int] | None,
     ) -> int:
-        """The MUTATE lane of :meth:`_transact` (caller holds the claim on
-        ``nxt`` and routes abort cleanup): commit a targeted rewrite —
-        drop ``removed`` segments, add ``make_added(nxt)``'s — touching
-        O(affected) driver metadata, not O(table). This is the DML half of
-        the round-9 append lane: the head mirror's ordered segment dict
-        evolves in place (O(1) per removed/added name), per-segment
-        stats/partitions pop only the removed names, and the delta
-        manifest lists exactly the change. A 1-row targeted DELETE on a
-        10^6-segment table pays microseconds of metadata CPU, same as an
-        append — previously every DML rebuilt full snapshot containers
-        (the round-10 verdict's #1 residual, mutation/dml.py:734/:851).
+        """The DELTA lane of :meth:`_transact` (caller holds the claim on
+        ``nxt`` and routes abort cleanup): drop ``removed`` segments and add
+        ``make_added(nxt)``'s on top of version ``cur``, touching
+        O(affected) driver metadata, not O(table). The head mirror's ordered
+        segment dict evolves in place (O(1) per removed/added name),
+        per-segment stats/partitions pop only the removed names, and the
+        delta manifest lists exactly the change. A pure append is the
+        ``removed=[]`` case, as is merge-on-read DML (dv delete / dv upsert
+        / dv merge), whose deletion vector rides in ``_pending_dv``: a
+        streaming ingest's commit latency stays flat from 10^3 to 10^6
+        segments, and a 1-row targeted DELETE pays microseconds of metadata
+        CPU.
 
         Semantics are byte-identical to the general lane's delta-encodable
         form: the resulting segment order is prev-minus-removed-plus-
@@ -1477,20 +1374,17 @@ class TxnMixin:
             delta_doc["dv_unset"] = sorted(dv_unset)
         pending_schema = getattr(self, "_pending_schema", None)
         self._pending_schema = None
-        if pending_schema is not None and len(removed) == len(segmap):
-            # FULL REPLACE through the mutate lane (whole-table compaction
-            # routes here since round 11): same rule as the general lane —
-            # the written schema IS the table schema, so RESET (a full
-            # rewrite physically purges dropped columns) and legitimately
-            # SEED a pre-scalar table.
-            new_schema = pending_schema
-        else:
-            new_schema = (
-                _schema_union(head.get("schema"), pending_schema)
-                if head.get("schema") is not None
-                else None
-            )
+        # Only a commit that removes every live segment is a full replace
+        # (whole-table compaction routes here since round 11). An append
+        # onto a zero-segment head removes nothing and keeps the union.
+        new_schema = _next_schema(
+            head.get("schema"),
+            pending_schema,
+            bool(removed) and len(removed) == len(segmap),
+        )
         if new_schema != head.get("schema"):
+            # A schema-evolving append thereby stops counting as a pure
+            # append for the conflict-rebase commute proof (conservative).
             delta_doc["schema"] = new_schema
         if txn is not None:
             app, ver = txn
@@ -1506,7 +1400,9 @@ class TxnMixin:
             # are readable. The doc in hand routes materialize through
             # the RESTRICTED diff (_changes_delta) — O(touched segments)
             # data read, so a 1-row DML on a 10^6-segment CDF table never
-            # diffs the whole table. Ordered BEFORE the manifest finalize
+            # diffs the whole table; a pure append or a dv-only delete
+            # needs no change file at all (materialize_cdf returns False
+            # for those kinds). Ordered BEFORE the manifest finalize
             # so a failure aborts a zero-length claim (caller's cleanup
             # unlinks it and removes the partial change file) — a
             # FINALIZED manifest here would race the abort-unlink against
@@ -1519,9 +1415,14 @@ class TxnMixin:
             json.dump(doc, f)
         os.replace(tmp, self._manifest_path(nxt))
         self._swap_pointer(nxt)
-        # -- committed. Same maintenance contract as the append lane:
-        # nothing below may raise into the caller's abort cleanup; drop
-        # the mirror on failure, re-raise exit signals after the drop.
+        # -- committed. Nothing below may raise into the caller's abort
+        # cleanup (it would unlink the LIVE manifest): the head mirror and
+        # the periodic checkpoint are maintenance — on any failure drop
+        # the mirror (rebuilt from files on demand) and move on. Exit
+        # signals (KeyboardInterrupt/SystemExit) RE-RAISE after the mirror
+        # drop: the commit is already durable so propagating is safe, and
+        # swallowing them would keep the process running as if it had
+        # never been interrupted.
         try:
             with self._head_lock:
                 dvrev = head["dvrev"]
@@ -1572,7 +1473,6 @@ class TxnMixin:
         stats_override: dict | None = None,
         partitions_override: dict | None = None,
         rebase_predicate: dict | None = None,
-        append_make=None,
         mutate_make: tuple[list, object] | None = None,
         schema_override=_SCHEMA_UNSET,
     ) -> int:
@@ -1634,19 +1534,23 @@ class TxnMixin:
                     continue
                 raise
         if mutate_make is not None:
-            # The mutate LANE (targeted rewrites: DML, compaction folds):
-            # ``(removed_names, make_added)`` — O(affected) metadata via
-            # _commit_mutate. Falls back to the general lane with
-            # byte-identical semantics (prev-minus-removed-plus-appended
-            # is exactly the delta-encodable order) when there is no head
-            # to evolve (creation) or a state-override commit pins planes
-            # the in-place evolution doesn't model. CDF stores take this
-            # lane too (round-12 ask #1): the change file is materialized
-            # pre-pointer from the RESTRICTED diff over exactly the
-            # touched segments (reads._changes_delta), so their
+            # The delta LANE (appends, dv DML, targeted rewrites, compaction
+            # folds): ``(removed_names, make_added)`` — O(affected) metadata
+            # via _commit_mutate. Falls back to the general lane with
+            # byte-identical semantics when there is no head to evolve
+            # (creation: nothing exists to remove, so the new segments are
+            # the table) or a state-override commit pins planes the
+            # in-place evolution doesn't model (prev-minus-removed-plus-
+            # appended is exactly the delta-encodable order). CDF stores
+            # take this lane too (round-12 ask #1): the change file is
+            # materialized pre-pointer from the RESTRICTED diff over
+            # exactly the touched segments (reads._changes_delta), so their
             # per-statement metadata stays O(affected) as well.
             _mut_rm, _mut_mk = mutate_make
-            _overridden = (
+            if cur is None:
+                make_segments = _mut_mk
+                mutate_make = None
+            elif (
                 dv_override is not None
                 or constraints_override is not None
                 or generated_override is not None
@@ -1654,27 +1558,12 @@ class TxnMixin:
                 or partition_by_override is not None
                 or stats_override is not None
                 or partitions_override is not None
-            )
-            if cur is None or _overridden:
+            ):
                 _rms = set(_mut_rm)
                 make_segments = lambda v: [  # noqa: E731
                     s for s in self._segments(v - 1) if s not in _rms
                 ] + _mut_mk(v)
                 mutate_make = None
-        if append_make is not None and cur is None:
-            # The append LANE (below) needs an existing head-state to
-            # evolve; creation commits fall back to the general lane with
-            # byte-identical semantics. CDF stores keep the append lane
-            # (round-12): an append commit needs NO change file at all —
-            # commit_kind classifies the delta doc as "append" and the
-            # feed reads the added segments directly — so the pre-pointer
-            # changes-readable invariant holds by construction.
-            _am = append_make
-            append_make = None
-            if cur is None:
-                make_segments = _am
-            else:
-                make_segments = lambda v: self._segments(v - 1) + _am(v)  # noqa: E731
         rebase_adds: list[str] = []
         if base_version is not None and nxt != base_version + 1:
             # The table advanced past the snapshot this rewrite was derived
@@ -1709,18 +1598,13 @@ class TxnMixin:
         parts_pending_before = set(self._pending_parts)
         schema_pending_before = getattr(self, "_pending_schema", None)
         try:
-            if append_make is not None:
-                # Pure-append fast lane: O(new segments) driver CPU — no
-                # full-list diff, no snapshot-container copies, a delta
-                # manifest by construction. Shares this claim and the
-                # abort cleanup below.
-                return self._commit_append(nxt, cur, append_make, meta, txn)
             if mutate_make is not None:
-                # Targeted-rewrite fast lane: O(affected) driver CPU.
-                # Shares this claim and the abort cleanup below; the
-                # base_version / rebase proof already ran above (the head
-                # at ``cur`` carries any rebased-in disjoint appends, and
-                # the remove/add form applies to it directly).
+                # Delta fast lane: O(affected) driver CPU — no full-list
+                # diff, no snapshot-container copies, a delta manifest by
+                # construction. Shares this claim and the abort cleanup
+                # below; the base_version / rebase proof already ran above
+                # (the head at ``cur`` carries any rebased-in disjoint
+                # appends, and the remove/add form applies to it directly).
                 return self._commit_mutate(
                     nxt, cur, list(mutate_make[0]), mutate_make[1], meta, txn
                 )
@@ -1872,34 +1756,21 @@ class TxnMixin:
                 else list(partition_by_override)
             )
             new_key = self.key or prev_key
-            # Schema scalar: written-schema union-forward; a FULL-REPLACE
-            # commit (creation, overwrite, whole-table compaction — every
-            # prior segment removed) RESETS to exactly what was written
-            # (overwrite legitimately redefines the schema, and a full
-            # rewrite physically purges dropped columns). restore/clone
-            # pin the restored state via schema_override.
+            # Schema scalar (_next_schema). n_prev == 0 counts as a full
+            # replace here: writing into a zero-segment table through this
+            # lane carries nothing forward, so phantom columns from the
+            # pre-empty history must not survive. restore/clone pin the
+            # restored state via schema_override.
             pending_schema = getattr(self, "_pending_schema", None)
             self._pending_schema = None
             if schema_override is not _SCHEMA_UNSET:
                 new_schema = schema_override
-            elif pending_schema is None:
-                new_schema = prev_schema
-            elif cur is None or len(removed) == n_prev:
-                # n_prev == 0 counts as full replace too: writing into a
-                # zero-segment table carries nothing forward, so phantom
-                # columns from the pre-empty history must not survive.
-                new_schema = pending_schema
-            elif prev_schema is None:
-                # UNKNOWN stays unknown: a pre-scalar table's true schema
-                # is the footer union over segments this commit did NOT
-                # rewrite — recording just this commit's written schema
-                # would make later targeted DML align to a SUBSET and
-                # physically drop the other columns from rewritten
-                # segments. Only a full replace (above) may seed the
-                # scalar on such a table.
-                new_schema = None
             else:
-                new_schema = _schema_union(prev_schema, pending_schema)
+                new_schema = _next_schema(
+                    prev_schema,
+                    pending_schema,
+                    cur is None or len(removed) == n_prev,
+                )
             # Choose the manifest shape. FULL is forced for table creation
             # and for state-override commits (restore/clone pin stats/dv of
             # segments the head no longer knows); everything else writes a
@@ -2007,9 +1878,10 @@ class TxnMixin:
             while len(cache) > 16:
                 cache.pop(next(iter(cache)))
             # The general lane rebuilt the snapshot from scratch; the
-            # append lane's in-place head mirror is now stale — drop it
-            # (the next append rebuilds it once, O(n) per rewrite→append
-            # transition, amortized noise next to the rewrite itself).
+            # delta lane's in-place head mirror is now stale — drop it
+            # (the next delta commit rebuilds it once, O(n) per
+            # general→delta transition, amortized noise next to the
+            # rewrite itself).
             with self._head_lock:
                 self._head = None
             if self.write_cdf:
@@ -2052,7 +1924,7 @@ class TxnMixin:
                 # The pointer already advanced AT LEAST to our claimed
                 # slot: the commit IS durable and the exception escaped
                 # from post-commit maintenance (e.g. an exit signal mid-
-                # checkpoint in the append lane). ``>=``, not ``==`` — a
+                # checkpoint in the delta lane). ``>=``, not ``==`` — a
                 # concurrent writer may have committed nxt+1 between our
                 # swap and this read (claim_wait polling), and unlinking
                 # manifest nxt would then delete a file in the LIVE delta

@@ -185,9 +185,10 @@ class TableStore(TxnMixin, MetadataMixin, ReadsMixin, DmlMixin, LayoutMixin):
         # {version: materialized snapshot} — versions are immutable once
         # committed, so the cache never invalidates (bounded LRU-ish).
         self._snap_cache: dict[int, dict] = {}
-        # Mutable head-state mirror for the append-lane commit (manifest
+        # Mutable head-state mirror for the delta-lane commit (manifest
         # TxnMixin._head_for): owned containers evolved in place under
-        # the lock, so pure appends stay O(new segments) in driver CPU.
+        # the lock, so appends and targeted DML stay O(affected) in
+        # driver CPU.
         # None = rebuild lazily from the materialized snapshot.
         self._head: dict | None = None
         self._head_lock = threading.Lock()

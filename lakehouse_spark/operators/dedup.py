@@ -907,9 +907,13 @@ def rp_lsh_near_duplicates(
     from pyspark.sql import functions as F
 
     planes = hyperplanes(k, len(emb.select(vec_col).first()[0]), seed)
+    # Norm folded once per signed row (before the banding fan-out), not
+    # once per candidate pair — identical doubles, as in
+    # embedding_near_duplicates.
     signed = spread(emb, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
+        F.expr(_norm_sql(f"`{vec_col}`")).alias("nv"),
         rp_signature(f"`{vec_col}`", planes).alias("sig"),
     )
 
@@ -918,6 +922,7 @@ def rp_lsh_near_duplicates(
     banded = signed.select(
         "id",
         "v",
+        "nv",
         F.explode(
             F.array(
                 *[
@@ -931,7 +936,7 @@ def rp_lsh_near_duplicates(
                 ]
             )
         ).alias("bb"),
-    ).select("id", "v", "bb.band", "bb.bits")
+    ).select("id", "v", "nv", "bb.band", "bb.bits")
 
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -946,15 +951,13 @@ def rp_lsh_near_duplicates(
             F.col("b.id").alias("b_id"),
             F.col("a.v").alias("av"),
             F.col("b.v").alias("bv"),
+            F.col("a.nv").alias("anv"),
+            F.col("b.nv").alias("bnv"),
         )
         .dropDuplicates(["a_id", "b_id"])
     )
 
-    # norms as self-dots (same doubles as _norm_sql's squares)
-    cos = F.expr(
-        f"{_dot_sql('av', 'bv')}"
-        f" / (sqrt({_dot_sql('av', 'av')}) * sqrt({_dot_sql('bv', 'bv')}))"
-    )
+    cos = F.expr(f"{_dot_sql('av', 'bv')} / (anv * bnv)")
     return (
         cand.withColumn("cosine", F.round(cos, 6))
         .filter(F.col("cosine") >= min_cosine)

@@ -4,8 +4,9 @@ operators/dedup.connected_components).
 
 PageRank here is the canonical "iterative joins at scale" shape: each
 round is ONE shuffle (contributions grouped by destination) plus a
-broadcast-scale scalar for dangling mass; lineage is cut with
-localCheckpoint on a cadence so 10+ rounds don't build a 10-deep plan.
+broadcast-scale scalar for dangling mass; lineage is cut with an
+observed localCheckpoint every round so 10+ rounds don't build a
+10-deep plan.
 At 100 TB the edge table partitions by src and the rank table by node;
 AQE handles the power-law hub skew the same way it handles hot keys in
 any aggregation.
@@ -23,7 +24,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iters: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Standard PageRank (sum of ranks = 1): uniform seed, per round
 
@@ -51,9 +51,6 @@ def pagerank(
     ``out_deg`` is a static node attribute, so it is joined onto the rank
     vector ONCE before the loop and carried through the checkpoints
     (NULL = dangling node) instead of re-joined every round.
-
-    ``checkpoint_every`` is kept for API compatibility; lineage is now
-    cut every round by the observed checkpoint itself.
 
     Returns (node, rank).
     """

@@ -81,30 +81,17 @@ def bfs_reachable(
     """J8: mention-graph BFS with visited-set dedup (cycles, diamonds, and
     self-loops are all safe). Returns (node, depth) — first-reach depth.
 
-    Same loop as :func:`descendants` but over an arbitrary (src→dst) edge
-    relation keyed by node id column ``node``."""
-    seeds_n = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    frontier = seeds_n.withColumn("depth", F.lit(0)).localCheckpoint(eager=True)
-    visited = frontier
-    for depth in range(1, max_depth + 1):
-        obs = Observation()
-        step = (
-            edges.select(
-                F.col(src_col).alias("node"), F.col(dst_col).alias("__next")
-            )
-            .join(F.broadcast(frontier.select("node")), "node")
-            .select(F.col("__next").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(depth))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        visited = visited.unionByName(step)
-        frontier = step
-    return visited
+    :func:`descendants` over the (src→dst) relation, with the node id
+    column named ``node``."""
+    return descendants(
+        edges.select(
+            F.col(src_col).alias("__src"), F.col(dst_col).alias("node")
+        ),
+        seeds.select(F.col(seeds.columns[0]).alias("node")),
+        "__src",
+        "node",
+        max_depth,
+    )
 
 
 def cascade_delete_targets(

@@ -1581,7 +1581,7 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(self.staging, exist_ok=True)
         # One store instance per QUERY (this writer object lives across
         # micro-batches; only commit() runs on the driver): its snapshot
-        # cache and append-lane head mirror persist batch to batch, so the
+        # cache and delta-lane head mirror persist batch to batch, so the
         # per-batch commit touches O(new segments) manifest state instead
         # of replaying/copying the full segment list every batch — the
         # property that keeps a long-running ingest's commit cadence flat
@@ -1626,7 +1626,9 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
                 return
 
             store._transact(
-                None, txn=(self.app_id, batchId), append_make=lambda v: []
+                None,
+                txn=(self.app_id, batchId),
+                mutate_make=([], lambda v: []),
             )
             return
 
@@ -1652,11 +1654,11 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
                 store._pending_stats[seg] = stats
             return [seg]
 
-        # Append lane: prior segments ride by reference (O(new segments)
-        # manifest work per batch; falls back to a full first commit when
-        # the table has no version yet).
+        # Delta lane, removing nothing: prior segments ride by reference
+        # (O(new segments) manifest work per batch; falls back to a full
+        # first commit when the table has no version yet).
         store._transact(
-            None, txn=(self.app_id, batchId), append_make=_new_segment
+            None, txn=(self.app_id, batchId), mutate_make=([], _new_segment)
         )
         # Sweep abandoned task files (a retried task that died before its
         # abort ran). Batches are sequential, so anything still in staging

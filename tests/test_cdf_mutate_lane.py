@@ -10,7 +10,7 @@ O(affected) per-statement metadata as everyone else.
 Pins: mutate commits on CDF stores write DELTA manifests with the change
 file present at pointer-advance; the restricted diff's images equal the
 full snapshot diff's; only touched segments are read; appends on CDF
-stores take the append lane (no change file needed); dv-mode deletes stay
+stores take the same delta lane with no change file; dv-mode deletes stay
 delete_dv (no change file); and CDF-vs-non-CDF stores stay image-
 identical over the same DML sequence.
 """
@@ -208,9 +208,10 @@ def test_compaction_on_cdf_store_emits_no_changes(spark, tmp_path):
 
 def test_cdf_mor_upsert_materializes_change_file(spark, tmp_path):
     """Merge-on-read DML (dv-mode upsert: new segments + dv_set, committed
-    through the APPEND lane) classifies as a REWRITE — its change file
-    must exist at pointer-advance or a CDF stream holds back forever
-    waiting for a file nothing will write (round-12 review finding #1)."""
+    through the delta lane, removing nothing) classifies as a REWRITE —
+    its change file must exist at pointer-advance or a CDF stream holds
+    back forever waiting for a file nothing will write (round-12 review
+    finding #1)."""
     from lakehouse_spark.sources.table_source import _changes_ready
 
     st = _mk(spark, tmp_path / "t", write_cdf=True)

@@ -321,3 +321,27 @@ def test_full_replace_compact_seeds_schema_on_pre_scalar_table(
     assert snap2["schema"] is not None
     assert {f["name"] for f in snap2["schema"]["fields"]} == {"id", "g"}
     assert st2.read().count() == 12
+
+
+def test_append_onto_zero_live_segments_unions_schema(spark, tmp_path):
+    """An append onto a head with NO live segments removes nothing, so it
+    is not a full replace: the recorded schema stays the union (a later
+    append does not drop the pre-empty columns from the schema scalar),
+    reads expose exactly that schema, and the writer's warm snapshot
+    equals a cold replay."""
+    root = str(tmp_path / "t")
+    st = TableStore(spark, root, key="id", partition_by=("p",))
+    st.init(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)], "id long, p string, z long"
+        )
+    )
+    st.delete_where(predicate={"p": ("a", "b")})
+    assert st._snapshot(st.current_version())["segments"] == []
+    st.append(spark.createDataFrame([(3, "a", 30)], "id long, p string, w long"))
+    v = st.current_version()
+    snap = st._snapshot(v)
+    names = [f["name"] for f in snap["schema"]["fields"]]
+    assert names == ["id", "p", "z", "w"]
+    assert st.read().columns == names
+    assert M.load_snapshot(root, v) == snap

@@ -493,10 +493,10 @@ def test_vacuum_sweeps_stale_checkpoint_tmp_debris(spark, tmp_path):
 
 
 def test_append_lane_head_mirror_parity_across_mixed_dml(spark, tmp_path):
-    """Round-9 append lane: pure appends evolve an in-place head mirror
-    (O(new segments) driver CPU) instead of rebuilding the snapshot;
-    rewrites invalidate the mirror. At every step, the writing instance's
-    warm snapshot must equal a cold reader's file replay — the mirror can
+    """Appends through the delta lane (removing nothing) evolve an
+    in-place head mirror (O(new segments) driver CPU) instead of
+    rebuilding the snapshot; general-lane rewrites invalidate the
+    mirror. At every step, the writing instance's warm snapshot must equal a cold reader's file replay — the mirror can
     never drift from the log — and older versions stay time-travelable
     (in-place evolution must not leak into handed-out snapshots)."""
     st = _mk(spark, tmp_path, n=10)
@@ -546,7 +546,7 @@ def test_append_lane_stale_head_rebuilds_across_instances(spark, tmp_path):
 def test_append_lane_abort_releases_claim_and_keeps_head_consistent(
     spark, tmp_path
 ):
-    """A failure inside the append lane (segment write, manifest write)
+    """A failure inside a delta-lane append (segment write, manifest write)
     must release the version slot, discard this attempt's pending stats,
     and leave the head mirror at the pre-attempt version — the next
     append claims the same slot and succeeds with correct pruning stats."""
@@ -560,7 +560,7 @@ def test_append_lane_abort_releases_claim_and_keeps_head_consistent(
         raise RuntimeError("synthetic segment-write failure")
 
     with pytest.raises(RuntimeError, match="synthetic"):
-        st._transact(None, append_make=_boom)
+        st._transact(None, mutate_make=([], _boom))
     assert st.current_version() == v_before  # pointer unmoved
     assert "_seg_phantom" not in st._pending_stats  # attempt state cleaned
     assert not os.path.exists(st._manifest_path(v_before + 1))
@@ -572,3 +572,48 @@ def test_append_lane_abort_releases_claim_and_keeps_head_consistent(
     assert st._snapshot(st.current_version()) == load_snapshot(
         st.root, st.current_version()
     )
+
+
+def _ids(df):
+    return sorted(r.id for r in df.collect())
+
+
+def test_aborted_txn_discards_pending_stats(spark, tmp_path):
+    """The advisor's exact scenario: writer A's transaction writes a
+    segment (recording pending stats) then aborts; writer B claims the
+    same version slot and rewrites the same _segNNNNNN dir with DIFFERENT
+    data; writer A later commits. A's stale stats must not override B's —
+    pruning must never change results."""
+    root = str(tmp_path / "t")
+    a = TableStore(spark, root, key="id", stats_cols=("x",))
+    a.init(spark.createDataFrame([(1, 5), (2, 7)], "id long, x long"))
+
+    # A's failed attempt: the segment lands on disk (x in 1000..2000),
+    # stats go pending, then the commit dies before finalizing.
+    high = spark.createDataFrame([(90, 1000), (91, 2000)], "id long, x long")
+
+    def write_then_die(v):
+        a._write_segment(high, v)
+        raise RuntimeError("simulated mid-commit crash")
+
+    with pytest.raises(RuntimeError, match="mid-commit crash"):
+        a._transact(write_then_die)
+    assert a._pending_stats == {}, "abort must clear this attempt's stats"
+
+    # B claims the slot A released and writes LOW data into the very same
+    # _seg000001 directory.
+    b = TableStore(spark, root, key="id", stats_cols=("x",))
+    b.append(spark.createDataFrame([(10, 20), (11, 30)], "id long, x long"))
+
+    # A commits later; its manifest must carry B's stats for _seg000001
+    # forward, not resurrect the stale 1000..2000 range.
+    a.append(spark.createDataFrame([(50, 500)], "id long, x long"))
+
+    pruned = a.read(predicate={"x": (20, 30)})
+    assert _ids(pruned) == [10, 11], (
+        "stats-pruned read lost rows — stale pending stats overrode the "
+        "rewritten segment's real range"
+    )
+    # and the invariant read(predicate=p) == read().filter(p) holds
+    full = a.read().filter("x >= 20 and x <= 30")
+    assert _ids(pruned) == _ids(full)

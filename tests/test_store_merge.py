@@ -1,9 +1,11 @@
 """Conditional MERGE: the Delta clause semantics on TableStore — DELETE
 before UPDATE, condition-gated updates, partial column updates, insert
-toggling, schema-superset targets, and txn idempotence."""
+toggling, schema-superset targets, txn idempotence, unknown source
+columns, NULL source keys, and model checks of both MERGE modes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_spark.mutation.store import TableStore
@@ -130,51 +132,127 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert {r.id: r.label for r in s.read().collect()}[2] == "tag2"
 
 
+def test_merge_rejects_unknown_source_columns(spark, tmp_path):
+    s = TableStore(spark, str(tmp_path / "m"), key="id")
+    s.init(spark.createDataFrame([(1, "a")], "id long, v string"))
+    src = spark.createDataFrame(
+        [(1, "A", "precious")], "id long, v string, extra string"
+    )
+    with pytest.raises(ValueError, match="absent from the target schema"):
+        s.merge(src)
+    # data unchanged by the rejected merge
+    assert [(r.id, r.v) for r in s.read().collect()] == [(1, "a")]
+    # explicit opt-in drops the column and applies the rest
+    s.merge(src, extra_cols="ignore")
+    assert [(r.id, r.v) for r in s.read().collect()] == [(1, "A")]
+    with pytest.raises(ValueError, match="extra_cols"):
+        s.merge(src, extra_cols="banana")
+
+
+def test_merge_allows_duplicate_null_source_keys(spark, tmp_path):
+    """Two null-key source rows can't fan any matched target row out (NULL
+    never satisfies the equi-join) — they are legal, and with insert=True
+    each inserts. A duplicate NON-null key still raises."""
+    s = TableStore(spark, str(tmp_path / "n"), key="id")
+    s.init(spark.createDataFrame([(1, "a")], "id long, v string"))
+    src = spark.createDataFrame(
+        [(None, "n1"), (None, "n2"), (2, "b")], "id long, v string"
+    )
+    s.merge(src)  # must not raise
+    got = sorted(((r.id, r.v) for r in s.read().collect()), key=str)
+    assert (1, "a") in got and (2, "b") in got
+    assert sorted(v for i, v in got if i is None) == ["n1", "n2"]
+
+    dup = spark.createDataFrame([(3, "x"), (3, "y")], "id long, v string")
+    with pytest.raises(ValueError, match="multiple rows"):
+        s.merge(dup)
+
+
+def _merge_model(base_rows, src_rows, update_cond, delete_cond, insert):
+    """Clause-by-clause reference MERGE over (id, x) pairs for the
+    conditions the property tests use: DELETE before UPDATE, unmatched
+    target kept, unmatched source inserted."""
+    src = dict(src_rows)
+    want = {}
+    for i, x in base_rows:
+        if i in src:
+            sx = src[i]
+            if delete_cond is not None and sx < 10:
+                continue
+            if update_cond is None or sx > x:
+                want[i] = sx
+            else:
+                want[i] = x
+        else:
+            want[i] = x
+    if insert:
+        for i, sx in src.items():
+            if i not in dict(base_rows):
+                want[i] = sx
+    return want
+
+
+def _merge_vs_model(spark, root, base_rows, src_rows, modes):
+    """Run every clause combination as a MERGE in each of ``modes`` on a
+    fresh store and compare each result with :func:`_merge_model`. The
+    stores are independent, so the cases run as concurrent Spark jobs."""
+    import itertools
+    from concurrent.futures import ThreadPoolExecutor
+
+    def one(case):
+        mode, update_cond, delete_cond, insert = case
+        s = TableStore(
+            spark, f"{root}_{mode}_{update_cond}_{delete_cond}_{insert}",
+            key="id",
+        )
+        s.init(spark.createDataFrame(base_rows, "id long, x long"))
+        s.merge(
+            spark.createDataFrame(src_rows, "id long, x long"),
+            update_cond=update_cond,
+            delete_cond=delete_cond,
+            insert=insert,
+            mode=mode,
+        )
+        got = {r.id: r.x for r in s.read().collect()}
+        want = _merge_model(base_rows, src_rows, update_cond, delete_cond, insert)
+        return case, got, want
+
+    cases = itertools.product(
+        modes, [None, "s.x > t.x"], [None, "s.x < 10"], [True, False]
+    )
+    with ThreadPoolExecutor(4) as pool:
+        for case, got, want in pool.map(one, cases):
+            assert got == want, (case, got, want)
+
+
+def _random_merge_inputs(rng):
+    base_rows = [(i, rng.randint(0, 50)) for i in rng.sample(range(12), 7)]
+    src_rows = [(i, rng.randint(0, 50)) for i in rng.sample(range(12), 7)]
+    return base_rows, src_rows
+
+
+def test_merge_both_modes_vs_reference_model(spark, tmp_path):
+    """One fixed random base/source pair, every condition combination,
+    MERGE in both ``mode="rewrite"`` and ``mode="dv"`` against the
+    reference model (the cheap default-suite form of the sweep below)."""
+    import random
+
+    base_rows, src_rows = _random_merge_inputs(random.Random(20260814))
+    _merge_vs_model(
+        spark, str(tmp_path / "m"), base_rows, src_rows, ("rewrite", "dv")
+    )
+
+
 def test_merge_property_vs_reference_model(spark, tmp_path):
     """Randomized MERGE against a python reference model: for random
     base/source key-value sets and every condition combination, the store
     result must equal clause-by-clause simulation (DELETE before UPDATE,
     unmatched target kept, unmatched source inserted)."""
-    import itertools
     import random
 
     rng = random.Random(20260814)
     for trial in range(6):
-        base_rows = [(i, rng.randint(0, 50)) for i in rng.sample(range(12), 7)]
-        src_rows = [(i, rng.randint(0, 50)) for i in rng.sample(range(12), 7)]
-        for update_cond, delete_cond, insert in itertools.product(
-            [None, "s.x > t.x"], [None, "s.x < 10"], [True, False]
-        ):
-            s = TableStore(
-                spark, str(tmp_path / f"m{trial}_{update_cond}_{delete_cond}_{insert}"),
-                key="id",
-            )
-            s.init(spark.createDataFrame(base_rows, "id long, x long"))
-            s.merge(
-                spark.createDataFrame(src_rows, "id long, x long"),
-                update_cond=update_cond,
-                delete_cond=delete_cond,
-                insert=insert,
-            )
-            got = {r.id: r.x for r in s.read().collect()}
-
-            src = dict(src_rows)
-            want = {}
-            for i, x in base_rows:
-                if i in src:
-                    sx = src[i]
-                    if delete_cond is not None and sx < 10:
-                        continue
-                    if update_cond is None or sx > x:
-                        want[i] = sx
-                    else:
-                        want[i] = x
-                else:
-                    want[i] = x
-            if insert:
-                for i, sx in src.items():
-                    if i not in dict(base_rows):
-                        want[i] = sx
-            assert got == want, (
-                trial, update_cond, delete_cond, insert, got, want
-            )
+        base_rows, src_rows = _random_merge_inputs(rng)
+        _merge_vs_model(
+            spark, str(tmp_path / f"m{trial}"), base_rows, src_rows, ("rewrite",)
+        )

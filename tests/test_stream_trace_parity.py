@@ -1,7 +1,8 @@
 """Batch/streaming parity for marker-based sessionization (ST8):
 `stream_trace_turns` must emit exactly the turns the batch fold
 (`aggregate_trace`) closes, including when a turn's events span
-micro-batches.
+micro-batches, and its per-session state must be evicted after the
+retention horizon.
 """
 
 from __future__ import annotations
@@ -210,5 +211,74 @@ def test_timeout_flush_preserves_turn_numbering(spark, tmp_path):
         assert sorted(by_turn) == [1, 2], f"turn ids: {sorted(by_turn)}"
         assert by_turn[2].user_message == "second"
         assert by_turn[2].status == "completed"
+    finally:
+        q.stop()
+
+
+def test_stream_state_retention_evicts_idle_counter(spark, tmp_path):
+    """After retention_ms of full idleness the per-session counter row is
+    removed: stateOperators.numRowsTotal returns to 0, so long-running
+    streams hold state proportional to ACTIVE sessions, not to every
+    session ever seen."""
+    import json
+    import time
+
+    from lakehouse_spark.schemas import TRACE_EVENT
+    from lakehouse_spark.sources import jsonl as jl
+    from lakehouse_spark.streaming import live
+
+    events_dir = tmp_path / "ev"
+    events_dir.mkdir()
+    (events_dir / "a.jsonl").write_text(
+        json.dumps(
+            {
+                "session_id": "s1",
+                "ts": "2026-01-01T00:00:00+00:00",
+                "lvl": "INFO",
+                "event": "prompt:submit",
+                "data": {"prompt": "hello"},
+                "encounter_seq": 1,
+            }
+        )
+        + "\n"
+    )
+
+    stream = jl.read_jsonl_stream(spark, str(events_dir), TRACE_EVENT)
+    q = (
+        live.stream_trace_turns(stream, timeout_ms=100, retention_ms=1500)
+        .writeStream.format("memory")
+        .queryName("retention_evict")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 120
+        # 1) the open turn flushes via the processing-time timeout
+        rows = []
+        while not rows and time.monotonic() < deadline:
+            time.sleep(0.3)
+            rows = spark.sql("SELECT * FROM retention_evict").collect()
+        assert [r.turn_id for r in rows] == [1]
+
+        # 2) the counter row survives the flush but is evicted once the
+        # retention horizon passes — observable in the progress metrics
+        def state_rows():
+            p = q.lastProgress
+            ops = (p or {}).get("stateOperators") or []
+            return ops[0]["numRowsTotal"] if ops else None
+
+        seen_one = False
+        evicted = False
+        while time.monotonic() < deadline:
+            n = state_rows()
+            if n == 1:
+                seen_one = True
+            if seen_one and n == 0:
+                evicted = True
+                break
+            time.sleep(0.3)
+        assert seen_one, "counter row never observed in state"
+        assert evicted, "idle counter row was never evicted"
     finally:
         q.stop()

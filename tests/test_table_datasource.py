@@ -717,7 +717,7 @@ def test_snapshot_predicate_option_is_cache_safe_pruning(spark, tmp_path):
 
 
 def test_stream_writer_batch_commits_are_delta_manifests(spark, tmp_path):
-    """The streaming sink commits through the append lane: every
+    """The streaming sink commits through the delta lane: every
     micro-batch past table creation writes a DELTA manifest (no full
     segment list — O(new segments) metadata per batch), and the cached
     store instance's head mirror matches a cold file replay."""

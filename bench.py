@@ -596,10 +596,11 @@ def _dml_metadata_section(spark, root: str) -> dict:
     """Round-11 verdict ask #1: per-DML-statement DRIVER METADATA time must
     be flat vs segment count. Previously every DML commit rebuilt full
     snapshot containers (O(n-segments) dict copies + a full-list diff) and
-    the file selection loop tested every segment record in Python; now the
-    mutate lane (_commit_mutate) evolves the head mirror's segment dict in
-    place, O(affected) per statement, and selection goes through the
-    two-level checkpoint's shard bounds (_dml_manifest).
+    the file selection loop tested every segment record in Python; now
+    every delta-manifest commit goes through _commit_mutate, which evolves
+    the head mirror's segment dict in place, O(affected) per statement
+    (only full-manifest commits rebuild the snapshot), and selection goes
+    through the two-level checkpoint's shard bounds (_dml_manifest).
 
     Three measurements per size (1k / 50k / 200k synthetic segments, same
     fabrication as the sections above — metadata only, fake segments are

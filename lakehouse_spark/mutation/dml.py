@@ -361,7 +361,6 @@ class DmlMixin:
         v = self._transact(
             lambda _v: m["segments"],
             meta={"restored_from": version},
-            schema_override=m.get("schema"),
             # Pin the restored version's FULL state, not just its data:
             # deletion vectors (carrying the head's would keep masking
             # rows the restored state had), per-segment stats/partition
@@ -372,13 +371,13 @@ class DmlMixin:
             # repartition_table must bring the old schema and layout back,
             # exactly Delta's RESTORE contract (data AND metadata roll
             # back; the bad commits stay inspectable in history).
-            dv_override=m.get("dv", {}),
-            stats_override=m.get("stats", {}),
-            partitions_override=m.get("partitions", {}),
-            constraints_override=m.get("constraints", {}),
-            generated_override=m.get("generated", {}),
-            columns_override=(m.get("renames", {}), m.get("dropped", [])),
-            partition_by_override=m.get("partition_by", []),
+            planes={
+                k: m[k]
+                for k in (
+                    "constraints", "generated", "renames", "dropped",
+                    "partition_by", "schema", "stats", "partitions", "dv",
+                )
+            },
         )
         # Future writes from THIS instance follow the restored layout (the
         # same instance-state roll that repartition_table performs).

@@ -87,7 +87,7 @@ class MetadataMixin:
             )
         return self._transact(
             lambda v: self._segments(v - 1),
-            constraints_override={**cons, name: expr},
+            planes={"constraints": {**cons, name: expr}},
             base_version=cur,
         )
 
@@ -127,7 +127,7 @@ class MetadataMixin:
             )
         return self._transact(
             lambda v: self._segments(v - 1),
-            generated_override={**gen, col: expr},
+            planes={"generated": {**gen, col: expr}},
             base_version=cur,
         )
 
@@ -139,7 +139,7 @@ class MetadataMixin:
         gen = {k: v for k, v in gen.items() if k != col}
         return self._transact(
             lambda v: self._segments(v - 1),
-            generated_override=gen,
+            planes={"generated": gen},
             base_version=self.current_version(),
         )
 
@@ -262,7 +262,7 @@ class MetadataMixin:
             lambda v: self._segments(v - 1),
             meta={"rename_column": [old, new]},
             base_version=self.current_version(),
-            columns_override=(renames, dropped),
+            planes={"renames": renames, "dropped": dropped},
         )
 
     def drop_column(self, col: str) -> int:
@@ -287,7 +287,7 @@ class MetadataMixin:
             lambda v: self._segments(v - 1),
             meta={"drop_column": col},
             base_version=self.current_version(),
-            columns_override=(renames, dropped),
+            planes={"renames": renames, "dropped": dropped},
         )
 
     def _to_physical(self, df: DataFrame) -> DataFrame:
@@ -351,7 +351,7 @@ class MetadataMixin:
         cons = {k: v for k, v in cons.items() if k != name}
         return self._transact(
             lambda v: self._segments(v - 1),
-            constraints_override=cons,
+            planes={"constraints": cons},
             base_version=self.current_version(),
         )
 
@@ -402,7 +402,7 @@ class MetadataMixin:
             lambda w: self._segments(w - 1),
             meta={"backfill_schema": True},
             base_version=v,
-            schema_override=harvested,
+            planes={"schema": harvested},
         )
 
 
@@ -504,10 +504,12 @@ class MetadataMixin:
         dst._transact(
             _segments,
             meta={"cloned_from": self.root, "source_version": v},
-            constraints_override=m.get("constraints", {}),
-            generated_override=m.get("generated", {}),
-            columns_override=(m.get("renames", {}), m.get("dropped", [])),
-            schema_override=m.get("schema"),
+            planes={
+                k: m[k]
+                for k in (
+                    "constraints", "generated", "renames", "dropped", "schema"
+                )
+            },
         )
         return dst
 

@@ -348,11 +348,11 @@ class ReadsMixin:
         rename), so a concurrent reader never sees a partial change file.
         ``_raw`` marks a claim-held COMMIT call and hands over the
         manifest doc the lane just wrote (no manifest file read inside
-        the critical section). ``_prefinalize`` marks the delta lanes'
-        call BEFORE the manifest finalizes: there an already-existing
-        dir is a crashed earlier claimant's poison (its content
-        described THAT attempt's doc) and is strictly rewritten.
-        Post-finalize callers — the general commit lane and all
+        the critical section). ``_prefinalize`` marks the delta-manifest
+        commit's call BEFORE the manifest finalizes: there an
+        already-existing dir is a crashed earlier claimant's poison (its
+        content described THAT attempt's doc) and is strictly rewritten.
+        Post-finalize callers — full-manifest commits and all
         recovery/repair paths — keep the idempotent short-circuit,
         which is sound for them because a finalized manifest implies
         its change file came from the same attempt (_recover_slot
@@ -375,16 +375,15 @@ class ReadsMixin:
             if not _prefinalize:
                 # Idempotent short-circuit. Recovery/repair callers: a
                 # finalized manifest implies a same-attempt change file
-                # (_recover_slot purges stolen slots' debris). The
-                # GENERAL lane (any doc shape — it delta-encodes most
-                # rewrites too) commits POST-finalize, so an existing dir
-                # there can only be a roll-forward racer's
+                # (_recover_slot purges stolen slots' debris).
+                # Full-manifest commits materialize POST-finalize, so an
+                # existing dir there can only be a roll-forward racer's
                 # materialization of the SAME finalized manifest —
                 # identical content; removing and recomputing it would
                 # open a pointer-visible has_cdf=false window for the
                 # duration of the diff job (pass-5 #2 / pass-6 #1).
                 return True
-            # PRE-finalize delta-lane commits (no racer can exist — the
+            # PRE-finalize delta-manifest commits (no racer can exist — the
             # claim is held and nothing is finalized), so an existing
             # dir is a crashed earlier claimant's poison. STRICT
             # removal: publishing over any remnant would advance the
@@ -404,12 +403,11 @@ class ReadsMixin:
 
     def _changes_one(self, v: int, raw: dict | None = None) -> DataFrame:
         """Row-level changes of the single commit ``v``. DELTA-manifest
-        rewrites (the mutate lane: targeted DML, compaction folds, plus
-        any delta-encodable rewrite) take the RESTRICTED diff — only the
-        commit's touched segments are read, O(affected) data, which is
-        what lets ``write_cdf=True`` stores keep the mutate lane's
-        O(affected) per-statement cost (round-12 ask #1). FULL-manifest
-        rewrites (overwrite / restore / state-override commits) keep the
+        rewrites (targeted DML, compaction, overwrite) take the RESTRICTED
+        diff — only the commit's touched segments are read, O(affected)
+        data, which is what lets ``write_cdf=True`` stores keep the delta
+        commit's O(affected) per-statement cost (round-12 ask #1).
+        FULL-manifest rewrites (restore, reordering rebases) keep the
         whole-snapshot diff."""
         from lakehouse_spark.mutation.manifest import read_manifest_file
 
@@ -467,9 +465,8 @@ class ReadsMixin:
         )
         post_dv = {n: ap for n, ap in prev_dv.items() if n not in dv_unset}
         post_dv.update(dv_set)
-        # Logical presentation: mutate deltas never change column mapping
-        # (columns_override forces the general lane), so v-1's mapping is
-        # v's unless the doc carries one explicitly.
+        # Logical presentation: v-1's column mapping is v's unless the doc
+        # carries one (rename_column / drop_column write it in the delta).
         renames = raw.get("renames", prev_snap.get("renames", {}))
         dropped = raw.get("dropped", prev_snap.get("dropped", []))
 

@@ -164,7 +164,7 @@ class TableStore(TxnMixin, MetadataMixin, ReadsMixin, DmlMixin, LayoutMixin):
         # snapshot checkpoint (_checkpoint_NNNNNN.json) is written every
         # this-many commits post-pointer-swap, bounding reader replay.
         # 0/None disables checkpoints (replay then runs to the last FULL
-        # manifest — table creation or a restore/clone-style override).
+        # manifest — table creation, a clone or a restore).
         self.checkpoint_interval = checkpoint_interval
         # Round 10: checkpoints are two-level (list doc + shard files of
         # this many segments each; see manifest.py's design comment).

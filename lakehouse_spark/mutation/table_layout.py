@@ -98,7 +98,7 @@ class LayoutMixin:
                 lambda nv: self._write_partitioned(snapshot, nv),
                 meta=meta or {"repartitioned_to": list(new_cols)},
                 base_version=v0,
-                partition_by_override=list(new_cols),
+                planes={"partition_by": list(new_cols)},
             )
         finally:
             self._pending_partition_by = None

@@ -1528,9 +1528,6 @@ class LakehouseWriter(DataSourceArrowWriter):
         store._pending_schema = _staged_schema_json(staged)
 
         def _segments(v: int) -> list[str]:
-            # Base the append on v-1, the version this transaction actually
-            # claimed against — not a pre-read head a racing writer may
-            # have advanced past (that would silently drop their segments).
             seg = f"_seg{v:06d}"
             dst = os.path.join(self.root, seg)
             if os.path.isdir(dst):
@@ -1541,11 +1538,14 @@ class LakehouseWriter(DataSourceArrowWriter):
             stats = _merged_stats(kept)
             if stats:
                 store._pending_stats[seg] = stats
-            if self.overwrite or v == 0:
-                return [seg]
-            return _manifest(self.root, v - 1)["segments"] + [seg]
+            return [seg]
 
-        store._transact(_segments)
+        if self.overwrite:
+            store._transact(_segments)
+        else:
+            # An append removes nothing: the delta lane adds the segment on
+            # top of whatever version this transaction claimed against.
+            store._transact(None, mutate_make=([], _segments))
 
     def abort(self, messages) -> None:
         shutil.rmtree(self.staging, ignore_errors=True)

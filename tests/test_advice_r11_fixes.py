@@ -9,10 +9,6 @@
    minted for the statement currently being rewritten: a single query with
    >8 distinct timestamps on one table used to drop a temp view its own
    rewritten SQL still referenced.
-3. mutation/manifest.py — the abort handler's ``current_version()`` probe
-   is retried and can no longer REPLACE the original exception: a transient
-   pointer-read failure used to escape, skipping the claim release (slot
-   wedged until orphan-grace stealing).
 """
 
 from __future__ import annotations
@@ -94,46 +90,6 @@ def test_many_timestamps_one_statement_no_self_evict(spark, tmp_path):
     # The NEXT statement drains the fifo back under the cap.
     cat.sql(f"SELECT * FROM t TIMESTAMP AS OF '{iso[-1]}'").collect()
     assert len(cat._ts_aliases["t"]) <= 8
-
-
-# -- 3. abort-path pointer probe ------------------------------------------
-
-
-def test_abort_probe_failure_keeps_original_error_and_releases_slot(
-    spark, tmp_path
-):
-    st = TableStore(spark, str(tmp_path / "t"), key="id")
-    st.init(spark.range(5).selectExpr("id"))
-
-    real_cv = type(st).current_version
-    calls = {"poison": 0}
-
-    class Boom(RuntimeError):
-        pass
-
-    def flaky_cv(self):
-        # Fail the abort handler's first probe attempts (transient OSError
-        # shape); the retry loop must recover and still release the claim.
-        if calls["poison"] > 0:
-            calls["poison"] -= 1
-            raise OSError("transient pointer read failure")
-        return real_cv(self)
-
-    def exploding_make(v):
-        calls["poison"] = 2  # poison the NEXT two current_version reads
-        raise Boom("segment build failed")
-
-    st.current_version = flaky_cv.__get__(st)
-    try:
-        with pytest.raises(Boom):
-            st._transact(exploding_make)
-    finally:
-        del st.current_version
-    # Slot released: a follow-up append commits cleanly at the same slot.
-    v0 = st.current_version()
-    st.append(spark.range(10, 12).selectExpr("id"))
-    assert st.current_version() == v0 + 1
-    assert st.read().count() == 7
 
 
 # -- round-11 mid-round code-review findings -------------------------------
@@ -225,45 +181,6 @@ def test_escaped_string_literals_conf_respected(spark, tmp_path):
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
-def test_prune_miss_memoized(spark, tmp_path):
-    """A table with no sharded checkpoint must not re-walk the manifest
-    chain per DML statement: the None result is memoized until a version
-    where a new checkpoint could exist."""
-    from lakehouse_spark.mutation import manifest as M
-
-    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
-    st.init(spark.range(10).selectExpr("id", "id AS x"))
-    for lo in (10, 20):
-        st.append(spark.range(lo, lo + 10).selectExpr("id", "id AS x"))
-    calls = {"n": 0}
-    real = M.load_snapshot_pruned
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    M.load_snapshot_pruned = counting
-    try:
-        st._snap_cache = {}
-        st._head = None
-        for _ in range(4):
-            st._dml_manifest(st.current_version(), {"id": (5, 6)})
-    finally:
-        M.load_snapshot_pruned = real
-    assert calls["n"] == 1  # walked once, memoized after
-
-
-def test_overwrite_after_empty_resets_schema_scalar(spark, tmp_path):
-    """Full replace of a ZERO-segment table must still reset the schema
-    scalar (no phantom columns from the pre-empty history)."""
-    st = TableStore(spark, str(tmp_path / "t"), key="id")
-    st.init(spark.range(3).selectExpr("id", "id AS z"))
-    st.overwrite(spark.range(2).selectExpr("id", "id AS w"))
-    v = st.current_version()
-    names = [f["name"] for f in st._snapshot(v)["schema"]["fields"]]
-    assert names == ["id", "w"]
-
-
 def test_ts_alias_surplus_drains_on_next_statement_any_table(
     spark, tmp_path
 ):
@@ -320,35 +237,6 @@ def test_unicode_and_octal_escapes_in_where(spark, tmp_path):
     out2 = cat.sql(f"DELETE FROM besc2 WHERE c = '{bs}101'")
     assert out2.collect()[0].affected_rows == 1
     assert {r.k for r in st2.read().collect()} == {"r2"}
-
-
-def test_pre_scalar_table_append_does_not_poison_schema(spark, tmp_path):
-    """A pre-round-11 table (schema scalar None) appending a SUBSET frame
-    must NOT seed the scalar from that subset — later targeted DML would
-    align rewrites to it and physically drop the other columns."""
-    import json as _json
-    import os as _os
-
-    root = str(tmp_path / "t")
-    st = TableStore(spark, root, key="id", stats_cols=("id",))
-    st.init(spark.range(10).selectExpr("id", "id AS a", "id AS b"))
-    # Simulate a pre-scalar table: strip the scalar from the manifest.
-    p = _os.path.join(root, "_manifest_000000.json")
-    with open(p) as f:
-        doc = _json.load(f)
-    doc.pop("schema", None)
-    with open(p, "w") as f:
-        _json.dump(doc, f)
-    st = TableStore(spark, root, key="id", stats_cols=("id",))
-    # Subset append (allowed: missing columns read as null).
-    st.append(spark.range(10, 12).selectExpr("id"))
-    assert st._snapshot(st.current_version())["schema"] is None
-    # Targeted delete must preserve a and b in the rewritten segment.
-    st.delete_keys(spark.range(0, 1).selectExpr("id"))
-    assert st._snapshot(st.current_version())["schema"] is None
-    rows = {(r.id, r.a, r.b) for r in st.read().collect()}
-    assert (5, 5, 5) in rows and (11, None, None) in rows
-    assert len(rows) == 11
 
 
 def test_unescape_strict_hex_and_surrogates(spark, tmp_path):

@@ -262,17 +262,16 @@ def test_commit_rewrites_stale_cdc_from_crashed_claimant(spark, tmp_path):
 def test_materialize_prefinalize_rewrites_postfinalize_keeps(spark, tmp_path):
     """The claim-stage split (pass-6 finding #1): PRE-finalize commit
     calls strictly rewrite an existing change dir (only a dead attempt's
-    poison can exist there), while POST-finalize calls — the general
-    lane and recovery — keep it (only a roll-forward racer's
+    poison can exist there), while POST-finalize calls — full-manifest
+    commits and recovery — keep it (only a roll-forward racer's
     identical-content materialization can exist there; removing it would
-    open a pointer-visible has_cdf=false window). The general lane
-    delta-encodes most rewrites, so the stage flag, not the doc shape,
-    is what decides."""
+    open a pointer-visible has_cdf=false window). The stage flag, not
+    the doc shape, is what decides."""
     st = _mk(spark, tmp_path / "t", n=40, write_cdf=True)
     st.update(set={"x": "x + 1"}, predicate={"id": (3, 3)})
     v = st.current_version()
     raw = M.read_manifest_file(st.root, v)
-    assert "segments" not in raw  # delta-encoded, like general-lane docs
+    assert "segments" not in raw  # delta-encoded
     dst = st._cdc_path(v)
     # Sentinel: survives a keep, vanishes on a rewrite (inode comparison
     # would flake when the fs reuses the just-freed inode number).

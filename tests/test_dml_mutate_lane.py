@@ -202,9 +202,9 @@ def test_dml_selection_uses_sharded_checkpoint(spark, tmp_path):
 
 
 def test_cdf_store_dml_still_correct(spark, tmp_path):
-    """write_cdf stores fall back to the general lane (change-file
-    materialization needs full snapshots mid-commit) with identical
-    semantics — pre/post images intact."""
+    """write_cdf stores commit DML through the same delta writer (the
+    change file is materialized pre-pointer from the restricted diff)
+    with identical semantics — pre/post images intact."""
     st = TableStore(
         spark, str(tmp_path / "t"), key="id", stats_cols=("id",), write_cdf=True
     )
@@ -271,7 +271,7 @@ def test_full_replace_compact_seeds_schema_on_pre_scalar_table(
 ):
     """Whole-table compaction through the mutate lane is a FULL REPLACE:
     it seeds the schema scalar on a pre-scalar table (and resets it
-    generally), matching the general lane's rule."""
+    generally), matching overwrite's rule."""
     import json as _json
 
     root = str(tmp_path / "t")
@@ -343,5 +343,30 @@ def test_append_onto_zero_live_segments_unions_schema(spark, tmp_path):
     snap = st._snapshot(v)
     names = [f["name"] for f in snap["schema"]["fields"]]
     assert names == ["id", "p", "z", "w"]
+    assert st.read().columns == names
+    assert M.load_snapshot(root, v) == snap
+
+
+def test_overwrite_after_empty_resets_schema_scalar(spark, tmp_path):
+    """Full replace of a ZERO-segment table must still reset the schema
+    scalar (no phantom columns from the pre-empty history): an overwrite
+    removes every prior segment — all none of them — so, unlike the
+    append above, it records exactly the schema it wrote."""
+    root = str(tmp_path / "t")
+    st = TableStore(spark, root, key="id", partition_by=("p",))
+    st.init(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)], "id long, p string, z long"
+        )
+    )
+    st.delete_where(predicate={"p": ("a", "b")})
+    assert st._snapshot(st.current_version())["segments"] == []
+    st.overwrite(
+        spark.createDataFrame([(3, "a", 30)], "id long, p string, w long")
+    )
+    v = st.current_version()
+    snap = st._snapshot(v)
+    names = [f["name"] for f in snap["schema"]["fields"]]
+    assert names == ["id", "p", "w"]
     assert st.read().columns == names
     assert M.load_snapshot(root, v) == snap

@@ -493,34 +493,58 @@ def test_vacuum_sweeps_stale_checkpoint_tmp_debris(spark, tmp_path):
 
 
 def test_append_lane_head_mirror_parity_across_mixed_dml(spark, tmp_path):
-    """Appends through the delta lane (removing nothing) evolve an
-    in-place head mirror (O(new segments) driver CPU) instead of
-    rebuilding the snapshot; general-lane rewrites invalidate the
-    mirror. At every step, the writing instance's warm snapshot must equal a cold reader's file replay — the mirror can
-    never drift from the log — and older versions stay time-travelable
-    (in-place evolution must not leak into handed-out snapshots)."""
+    """Every delta commit evolves the in-place head mirror (O(affected)
+    driver CPU) instead of rebuilding the snapshot: appends, a rewrite
+    delete, a scalar-plane commit (add_constraint) and a compaction that
+    removes every live segment. A full manifest (restore) drops the mirror
+    and the next delta commit rebuilds it. After every step the commit's
+    manifest has the expected shape, the writing instance's warm snapshot
+    equals a cold reader's file replay — the mirror can never drift from
+    the log — and older versions stay time-travelable (in-place evolution
+    must not leak into handed-out snapshots)."""
     st = _mk(spark, tmp_path, n=10)
     counts = {0: 10}
-    for i in range(1, 4):  # lane appends
+
+    def step(shape, n_rows):
+        v = st.current_version()
+        assert ("delta" if "delta" in _raw(st, v) else "full") == shape, v
+        assert st._snapshot(v) == load_snapshot(st.root, v), v
+        counts[v] = n_rows
+
+    def append(lo, **kw):
         st.append(
-            spark.range(10 * i, 10 * i + 10).selectExpr("id", "id * 2 AS val"),
-            txn=("lane_app", i),
+            spark.range(lo, lo + 10).selectExpr("id", "id * 2 AS val"), **kw
         )
-        counts[i] = 10 * (i + 1)
-    st.delete_where(predicate={"id": (0, 9)})  # general lane: mirror drops
-    counts[4] = 30
-    st.append(spark.range(100, 110).selectExpr("id", "id * 2 AS val"))
-    counts[5] = 40  # lane append after rebuild
+
+    for i in range(1, 4):  # lane appends
+        append(10 * i, txn=("lane_app", i))
+        step("delta", 10 * (i + 1))
+    st.delete_where(predicate={"id": (0, 9)})  # rewrite delete
+    step("delta", 30)
+    append(100)
+    step("delta", 40)
+    st.add_constraint("nonneg", "id >= 0")  # scalar plane only
+    step("delta", 40)
+    append(110)
+    step("delta", 50)
+    st.compact()  # removes every live segment
+    step("delta", 50)
+    append(120)
+    step("delta", 60)
+    st.restore(version=1)  # pins per-segment planes: full manifest
+    step("full", 20)
+    append(130)  # rebuilds the mirror dropped by the full manifest
+    step("delta", 30)
     v = st.current_version()
-    assert v == 5
-    assert st._snapshot(v) == load_snapshot(st.root, v)
+    assert v == 11
     assert st.last_txn_version("lane_app") == 3
+    assert st.constraints() == {}
     # Snapshot isolation: every retained version still reads its own count
     # (an in-place mirror that leaked into an old snapshot would break this).
     for ver, n in counts.items():
         assert st.read(ver).count() == n, (ver, n)
     cold = TableStore(spark, st.root, key="id", stats_cols=("id",))
-    assert cold.read().count() == 40
+    assert cold.read().count() == 30
     assert cold._snapshot(v) == st._snapshot(v)
 
 
@@ -617,3 +641,40 @@ def test_aborted_txn_discards_pending_stats(spark, tmp_path):
     # and the invariant read(predicate=p) == read().filter(p) holds
     full = a.read().filter("x >= 20 and x <= 30")
     assert _ids(pruned) == _ids(full)
+
+
+def test_abort_probe_failure_keeps_original_error_and_releases_slot(
+    spark, tmp_path
+):
+    st = TableStore(spark, str(tmp_path / "t"), key="id")
+    st.init(spark.range(5).selectExpr("id"))
+
+    real_cv = type(st).current_version
+    calls = {"poison": 0}
+
+    class Boom(RuntimeError):
+        pass
+
+    def flaky_cv(self):
+        # Fail the abort handler's first probe attempts (transient OSError
+        # shape); the retry loop must recover and still release the claim.
+        if calls["poison"] > 0:
+            calls["poison"] -= 1
+            raise OSError("transient pointer read failure")
+        return real_cv(self)
+
+    def exploding_make(v):
+        calls["poison"] = 2  # poison the NEXT two current_version reads
+        raise Boom("segment build failed")
+
+    st.current_version = flaky_cv.__get__(st)
+    try:
+        with pytest.raises(Boom):
+            st._transact(exploding_make)
+    finally:
+        del st.current_version
+    # Slot released: a follow-up append commits cleanly at the same slot.
+    v0 = st.current_version()
+    st.append(spark.range(10, 12).selectExpr("id"))
+    assert st.current_version() == v0 + 1
+    assert st.read().count() == 7

@@ -314,3 +314,31 @@ def test_abort_guard_survives_concurrent_advance(spark, tmp_path):
     assert fresh.current_version() == 5
     assert fresh.read().count() == 600
     assert fresh.read(version=4).count() == 500
+
+
+def test_prune_miss_memoized(spark, tmp_path):
+    """A table with no sharded checkpoint must not re-walk the manifest
+    chain per DML statement: the None result is memoized until a version
+    where a new checkpoint could exist."""
+    from lakehouse_spark.mutation import manifest as M
+
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(10).selectExpr("id", "id AS x"))
+    for lo in (10, 20):
+        st.append(spark.range(lo, lo + 10).selectExpr("id", "id AS x"))
+    calls = {"n": 0}
+    real = M.load_snapshot_pruned
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    M.load_snapshot_pruned = counting
+    try:
+        st._snap_cache = {}
+        st._head = None
+        for _ in range(4):
+            st._dml_manifest(st.current_version(), {"id": (5, 6)})
+    finally:
+        M.load_snapshot_pruned = real
+    assert calls["n"] == 1  # walked once, memoized after

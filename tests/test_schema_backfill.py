@@ -200,3 +200,32 @@ def test_backfill_then_targeted_dml_keeps_evolved_columns(spark, tmp_path):
     assert (1, 101, None) in got
     assert (7, 7, "n") in got  # evolved column intact
     assert len(got) == 10
+
+
+def test_pre_scalar_table_append_does_not_poison_schema(spark, tmp_path):
+    """A pre-round-11 table (schema scalar None) appending a SUBSET frame
+    must NOT seed the scalar from that subset — later targeted DML would
+    align rewrites to it and physically drop the other columns."""
+    import json as _json
+    import os as _os
+
+    root = str(tmp_path / "t")
+    st = TableStore(spark, root, key="id", stats_cols=("id",))
+    st.init(spark.range(10).selectExpr("id", "id AS a", "id AS b"))
+    # Simulate a pre-scalar table: strip the scalar from the manifest.
+    p = _os.path.join(root, "_manifest_000000.json")
+    with open(p) as f:
+        doc = _json.load(f)
+    doc.pop("schema", None)
+    with open(p, "w") as f:
+        _json.dump(doc, f)
+    st = TableStore(spark, root, key="id", stats_cols=("id",))
+    # Subset append (allowed: missing columns read as null).
+    st.append(spark.range(10, 12).selectExpr("id"))
+    assert st._snapshot(st.current_version())["schema"] is None
+    # Targeted delete must preserve a and b in the rewritten segment.
+    st.delete_keys(spark.range(0, 1).selectExpr("id"))
+    assert st._snapshot(st.current_version())["schema"] is None
+    rows = {(r.id, r.a, r.b) for r in st.read().collect()}
+    assert (5, 5, 5) in rows and (11, None, None) in rows
+    assert len(rows) == 11

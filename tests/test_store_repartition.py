@@ -131,7 +131,7 @@ def test_repartition_is_snapshot_conflict_safe(spark, tmp_path):
             s._transact(
                 lambda nv: s._write_partitioned(snapshot_read, nv),
                 base_version=v0,
-                partition_by_override=["g"],
+                planes={"partition_by": ["g"]},
             )
     finally:
         s._pending_partition_by = None

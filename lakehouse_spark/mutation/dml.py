@@ -43,24 +43,97 @@ class DmlMixin:
     # key set to the driver would cost more than it saves, and a source that
     # large usually touches most files anyway. Delta's file-skipping DML has
     # the same shape (join the source against add-file stats; degrade to a
-    # full rewrite when everything matches).
+    # full rewrite when everything matches). The same bound caps the
+    # broadcast key relation the targeted joins use (see _source_keys).
     max_targeted_keys = 200_000
 
-    def _source_key_list(self, source: DataFrame) -> list | None:
-        """Distinct non-null source keys, sorted, or None when the source is
-        too large to target (caller falls back to the full rewrite). NULL
-        keys never match the equi-join, so they can't identify a segment to
-        rewrite — they ride along as inserts regardless."""
-        rows = (
+    def _source_keys(
+        self, source: DataFrame, relation: bool = True
+    ) -> tuple[list | None, DataFrame | None]:
+        """Distinct non-null source keys as ``(sorted list, relation)``, or
+        ``(None, None)`` when the source is too large to target (caller
+        falls back to the full rewrite and the distributed join). The keys
+        are collected once, as Arrow; the relation (None unless
+        ``relation``) is a LocalRelation of the same table, so the
+        statement's key joins broadcast it with a one-task job instead of
+        re-deriving the key set from ``source``. NULL keys never match the
+        equi-join, so they can't identify a segment to rewrite — they ride
+        along as inserts regardless."""
+        kf = (
             source.select(self.key)
             .filter(F.col(self.key).isNotNull())
             .distinct()
             .limit(self.max_targeted_keys + 1)
-            .collect()
         )
-        if len(rows) > self.max_targeted_keys:
-            return None
-        return sorted(r[0] for r in rows)
+        tbl = kf.toArrow()
+        if tbl.num_rows > self.max_targeted_keys:
+            return None, None
+        rel = self._key_relation(tbl, kf.schema[self.key]) if relation else None
+        return sorted(tbl.column(0).to_pylist()), rel
+
+    def _commit_mor(
+        self,
+        pre: DataFrame,
+        touched: list[str],
+        v0: int,
+        rebase_pred: dict | None,
+        txn: tuple[str, int] | None = None,
+        new_rows: DataFrame | None = None,
+        guard=None,
+    ) -> tuple[int | None, int]:
+        """The merge-on-read commit: mask ``pre`` (the old images: they
+        fund the change feed's delete/update records AND define the
+        read-time mask) with a deletion vector scoped to the ``touched``
+        segments only — the mask is never tested against files the keys
+        provably aren't in, and the commit record stays O(touched) — and
+        write ``new_rows`` as new segments; prior segments ride by
+        reference. ``pre`` is persisted, so the key collection (the masked
+        row count, and the new dv's key-cache entry) and the dv write share
+        one evaluation. ``guard(keys)`` may raise before anything is
+        written. ``base_version=v0`` pins the dv's pre-images to the
+        segment list they were computed from (provably-disjoint appends
+        rebase through unmasked: the dv never applies to them). Returns
+        ``(new version, masked rows)``; nothing to mask and no rows to
+        write commits nothing: ``(None, 0)``."""
+        pre = pre.persist()
+        try:
+            keys = pre.select(self.key).toArrow() if touched else None
+            masked = 0 if keys is None else keys.num_rows
+            if not masked and new_rows is None:
+                return None, 0
+            if guard is not None:
+                guard(keys)
+
+            def _make(v: int) -> list[str]:
+                segs = [] if new_rows is None else self._write_partitioned(new_rows, v)
+                if masked:
+                    name = f"_dv{v:06d}"
+                    pre.write.mode("overwrite").parquet(self._dv_path(name))
+                    self._pending_dv[name] = list(touched)
+                return segs
+
+            nv = self._transact(
+                None,
+                txn=txn,
+                base_version=v0,
+                rebase_predicate=rebase_pred,
+                mutate_make=([], _make),
+            )
+        finally:
+            pre.unpersist()
+        if masked:  # committed: only now is the dv name final
+            self._cache_dv_keys(f"_dv{nv:06d}", keys)
+        return nv, masked
+
+    def _survivors(
+        self, base: DataFrame, rel: DataFrame, touched: list[str], live: list[str]
+    ) -> DataFrame:
+        """``base`` minus the rows whose key is in the key relation
+        ``rel``, broadcast, and coalesced to the touched segments' size
+        (:meth:`_rewrite_partitions`) so a small rewrite stays one file."""
+        return base.join(F.broadcast(rel), self.key, "left_anti").coalesce(
+            self._rewrite_partitions(touched, live)
+        )
 
     def _bloom_rules_out(self, seg: str, col: str, hashes, family) -> bool:
         """True when the segment's bloom sidecar PROVES none of the hashed
@@ -523,7 +596,7 @@ class DmlMixin:
         # snapshot-conflict check back to that read — a commit landing after
         # the derivation raises instead of silently losing it.
         v0 = self.current_version() if base_version is None else base_version
-        keys = self._source_key_list(rows)
+        keys, rel = self._source_keys(rows)
         # Key-range shard pruning: selection scans only the checkpoint
         # shards whose key bounds overlap the source keys, not every
         # segment record (falls back to the full snapshot when there is
@@ -544,41 +617,20 @@ class DmlMixin:
         base = self._aligned_base(manifest, touched, version=v0)
         if mode == "dv":
             new_rows = rows.select(*base.columns)
-            # Pre-images of the keys being replaced: they fund the change
-            # feed's delete/update records AND define the read-time mask.
-            matched = base.join(
-                F.broadcast(new_rows.select(self.key).distinct()),
-                self.key,
-                "left_semi",
-            )
-            has_matches = bool(touched) and matched.limit(1).count() > 0
-
-            def _mor(v: int) -> list[str]:
-                new_segs = self._write_partitioned(new_rows, v)
-                if has_matches:
-                    name = f"_dv{v:06d}"
-                    matched.write.mode("overwrite").parquet(
-                        self._dv_path(name)
-                    )
-                    # Scoped to the touched segments only: the mask never
-                    # has to be tested against files the keys provably
-                    # aren't in — fewer read-time anti-join groups.
-                    self._pending_dv[name] = list(touched)
-                return new_segs
-
-            # Delta lane, removing nothing (prior segments by reference):
-            # the commit writes O(changed rows) data AND touches O(changed)
-            # manifest state.
-            nv = self._transact(
-                None,
-                txn=txn,
-                base_version=v0,
-                rebase_predicate=rebase_pred,
-                mutate_make=([], _mor),
+            if rel is None:
+                rel = new_rows.select(self.key).distinct()
+            # Pre-images of the keys being replaced; the commit writes
+            # O(changed rows) data AND touches O(changed) manifest state.
+            matched = base.join(F.broadcast(rel), self.key, "left_semi")
+            nv, _ = self._commit_mor(
+                matched, touched, v0, rebase_pred, txn, new_rows
             )
             self._carry_schema(nv)
             return
-        survivors = base.join(rows.select(self.key), self.key, "left_anti")
+        if keys is None:
+            survivors = base.join(rows.select(self.key), self.key, "left_anti")
+        else:
+            survivors = self._survivors(base, rel, touched, manifest["segments"])
         out = survivors.unionByName(rows.select(*base.columns))
         nv = self._transact(
             None,
@@ -753,9 +805,10 @@ class DmlMixin:
             .count()
             .filter(F.col("count") > 1)
             .limit(1)
+            .collect()
         )
-        if dup.count():
-            k = dup.collect()[0][self.key]
+        if dup:
+            k = dup[0][self.key]
             raise ValueError(
                 f"merge source has multiple rows for key {k!r}; a duplicate "
                 "key would fan matched target rows out (Delta raises "
@@ -773,7 +826,7 @@ class DmlMixin:
         # the unknown-column check and clause evaluation below are
         # byte-identical to the untargeted form.
         v0 = self.current_version()
-        tkeys = self._source_key_list(source)
+        tkeys, _ = self._source_keys(source, relation=False)
         manifest = self._dml_manifest(
             v0, {self.key: (tkeys[0], tkeys[-1])} if tkeys else None
         )
@@ -868,22 +921,8 @@ class DmlMixin:
                 ]
             )
             new_seg_rows = post if ins is None else post.unionByName(ins)
-            has_masks = bool(touched) and pre.limit(1).count() > 0
-
-            def _mor(v: int) -> list[str]:
-                new_segs = self._write_partitioned(new_seg_rows, v)
-                if has_masks:
-                    name = f"_dv{v:06d}"
-                    pre.write.mode("overwrite").parquet(self._dv_path(name))
-                    self._pending_dv[name] = list(touched)
-                return new_segs
-
-            nv = self._transact(
-                None,
-                txn=txn,
-                base_version=v0,
-                rebase_predicate=rebase_pred,
-                mutate_make=([], _mor),
+            nv, _ = self._commit_mor(
+                pre, touched, v0, rebase_pred, txn, new_seg_rows
             )
             if unknown and extra_cols == "evolve":
                 self._schema_cache = None  # schema widened: rebuild
@@ -994,15 +1033,17 @@ class DmlMixin:
                 return removed
             finally:
                 base.unpersist()
-        pre = base.filter(matched_cond).persist()
-        try:
-            removed = pre.count()
-            if removed == 0:
-                return 0
+        def _whole_keys(keys) -> None:
+            # The guard inspects only the touched segments, which is why
+            # the dv must be scoped to them: registered against ALL
+            # segments it would silently mask a matched key's sibling rows
+            # living in predicate-pruned segments.
             key_rows = base.join(
-                pre.select(self.key).distinct(), self.key, "left_semi"
+                F.broadcast(self._key_relation(keys, base.schema[self.key])),
+                self.key,
+                "left_semi",
             ).count()
-            if key_rows != removed:
+            if key_rows != keys.num_rows:
                 raise ValueError(
                     "mode='dv' masks by key, but the condition matches only "
                     "SOME rows of at least one key — a dv would also delete "
@@ -1010,29 +1051,16 @@ class DmlMixin:
                     "row-exact deletes on duplicate-key tables"
                 )
 
-            def _keep(v: int) -> list[str]:
-                name = f"_dv{v:06d}"
-                pre.write.mode("overwrite").parquet(self._dv_path(name))
-                # Scope the dv to the predicate-touched segments only
-                # (matching the upsert/merge dv paths at :424/:690). The
-                # key-granularity guard above only inspects rows in the
-                # touched segments, so registering against ALL segments
-                # would silently mask a matched key's sibling rows living
-                # in predicate-pruned segments.
-                self._pending_dv[name] = list(touched)
-                return []
-
-            nv = self._transact(
-                None,
-                txn=txn,
-                base_version=v0,
-                rebase_predicate=rebase_pred,
-                mutate_make=([], _keep),
-            )
-            self._carry_schema(nv)
-            return removed
-        finally:
-            pre.unpersist()
+        nv, removed = self._commit_mor(
+            base.filter(matched_cond),
+            touched,
+            v0,
+            rebase_pred,
+            txn,
+            guard=_whole_keys,
+        )
+        self._carry_schema(nv)
+        return removed
 
     def delete_keys(self, keys: DataFrame, mode: str = "rewrite") -> int:
         """J4 target: delete all rows whose key appears in ``keys`` (feed
@@ -1063,7 +1091,7 @@ class DmlMixin:
         # key set — read (and in rewrite mode, rewrite) just those. Shard
         # pruning narrows the selection scan itself to the checkpoint
         # shards whose key bounds overlap.
-        klist = self._source_key_list(keyset)
+        klist, rel = self._source_keys(keyset)
         manifest = self._dml_manifest(
             v0, {self.key: (klist[0], klist[-1])} if klist else None
         )
@@ -1078,7 +1106,10 @@ class DmlMixin:
             return 0  # provably nothing to delete; no commit needed
         base = self._aligned_base(manifest, touched, version=v0)
         if mode == "rewrite":
-            out = base.join(keyset, self.key, "left_anti")
+            if klist is None:
+                out = base.join(keyset, self.key, "left_anti")
+            else:
+                out = self._survivors(base, rel, touched, manifest["segments"])
             removed = base.count() - out.count()
             nv = self._transact(
                 None,
@@ -1091,34 +1122,12 @@ class DmlMixin:
             )
             self._carry_schema(nv)
             return removed
-        deleted = base.join(F.broadcast(keyset), self.key, "left_semi")
-        removed = deleted.count()
-        if removed == 0:
-            return 0
-        def _keep(v: int) -> list[str]:
-            name = f"_dv{v:06d}"
-            deleted.write.mode("overwrite").parquet(self._dv_path(name))
-            # Scope applies_to to the key-touched segments (stats overlap,
-            # computed above): segments provably free of the deleted keys
-            # never need the read-time anti-join mask, and the commit
-            # record stays O(touched) instead of listing every live
-            # segment. Unclustered keys (klist None) degrade to all
-            # segments, as before.
-            self._pending_dv[name] = list(touched)
-            return []
-
-        # base_version pins the dv's pre-images to the segment list they
-        # were computed from — a commit landing between the read above and
-        # the claim would make applies_to describe the wrong snapshot
-        # (unless provably-disjoint appends, which the rebase carries
-        # through unmasked — the head at v-1 already holds them, and the
-        # dv never applies to them by construction).
-        nv = self._transact(
-            None,
-            base_version=v0,
-            rebase_predicate=rebase_pred,
-            mutate_make=([], _keep),
+        # applies_to is the key-touched segments (stats overlap, computed
+        # above); unclustered keys (klist None) degrade to all segments.
+        deleted = base.join(
+            F.broadcast(keyset if rel is None else rel), self.key, "left_semi"
         )
+        nv, removed = self._commit_mor(deleted, touched, v0, rebase_pred)
         self._carry_schema(nv)
         return removed
 

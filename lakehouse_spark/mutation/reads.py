@@ -13,7 +13,7 @@ import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from lakehouse_spark.mutation.manifest import (
     _predicate_expr,
@@ -126,9 +126,14 @@ class ReadsMixin:
         newer segments no dv covers) survive. Segments are grouped by the
         set of dvs covering them — one broadcast anti-join per group, and
         the group count is bounded by the dv count (compaction folds dvs
-        away, resetting it). ``schema`` is the version's manifest
-        ``schema`` scalar: its PHYSICAL footer union, recorded at write
-        time (None for a version written before the scalar existed)."""
+        away, resetting it). Each group's keys enter the plan as a
+        LocalRelation built from the per-instance dv key cache
+        (:meth:`_dv_keys`): no distinct shuffle, a one-task broadcast, and
+        a key filter on the read folds into the relation at optimization
+        time — a point read on a key no dv holds drops the anti-join.
+        ``schema`` is the version's manifest ``schema`` scalar: its
+        PHYSICAL footer union, recorded at write time (None for a version
+        written before the scalar existed)."""
         # Segments may carry evolved schemas (append with new columns —
         # see append's schema note); _scan_files reads them all against
         # the recorded schema, or footer-unions a pre-scalar version.
@@ -139,6 +144,9 @@ class ReadsMixin:
                 [os.path.join(self.root, s) for s in segs], struct
             )
 
+        cache = getattr(self, "_dv_key_cache", None)
+        if cache and not cache.keys() <= dv.keys():
+            self._dv_key_cache = {n: t for n, t in cache.items() if n in dv}
         live_dv = {
             n: set(ap) & set(segments)
             for n, ap in dv.items()
@@ -146,10 +154,6 @@ class ReadsMixin:
         }
         if not live_dv:
             return _scan(segments)
-        # Dv files hold the deleted rows; only their key column is read.
-        key_reader = self.spark.read
-        if struct is not None:
-            key_reader = key_reader.schema(StructType([struct[self.key]]))
         groups: dict[tuple[str, ...], list[str]] = {}
         for s in segments:
             key = tuple(sorted(n for n, ap in live_dv.items() if s in ap))
@@ -158,19 +162,64 @@ class ReadsMixin:
         for names, segs in groups.items():
             df = _scan(segs)
             if names:
-                keys = (
-                    key_reader.parquet(*[self._dv_path(n) for n in names])
-                    .select(self.key)
-                    .distinct()
-                )
                 # Deletes are small between compactions: broadcast the
                 # keys so the anti-join never shuffles the data side.
+                keys = self._dv_keys(names, df.schema[self.key])
                 df = df.join(F.broadcast(keys), self.key, "left_anti")
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
+
+    def _key_relation(self, keys, field) -> DataFrame:
+        """One-column Arrow table ``keys`` as a LocalRelation typed like
+        ``field`` (nullable): real size statistics, so Spark broadcasts it
+        with a one-task job — never shuffles it — and folds filters into
+        it while optimizing."""
+        return self.spark.createDataFrame(
+            keys,
+            StructType([StructField(field.name, field.dataType, True)]),
+        )
+
+    def _cache_dv_keys(self, name: str, keys):
+        """Remember dv ``name``'s deleted keys (one-column Arrow table,
+        deduplicated here) and return the cached table. Callers pass only
+        COMMITTED dvs: a dv directory is immutable once its commit lands,
+        but an aborted attempt's name can be claimed again by another
+        writer."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cache = getattr(self, "_dv_key_cache", None)
+        if cache is None:
+            cache = self._dv_key_cache = {}
+        cache[name] = tbl = pa.table({self.key: pc.unique(keys.column(0))})
+        return tbl
+
+    def _dv_keys(self, names, field) -> DataFrame:
+        """The deleted keys of dvs ``names`` as one LocalRelation. Each
+        dv's key column is read once per instance (one Spark job, Spark's
+        own type mapping) or seeded by the DML that wrote it, then served
+        from the cache (:meth:`_read_segments` prunes it to the live dv
+        names). Duplicate keys across dvs are harmless on an anti-join's
+        build side, so the union needs no distinct. A racing prune may drop
+        an entry another thread just cached: that costs a re-read, never a
+        wrong mask."""
+        import pyarrow as pa
+
+        tables = []
+        for n in names:
+            tbl = (getattr(self, "_dv_key_cache", None) or {}).get(n)
+            if tbl is None:
+                tbl = self._cache_dv_keys(
+                    n,
+                    self._scan_files([self._dv_path(n)], StructType([field]))
+                    .select(self.key)
+                    .toArrow(),
+                )
+            tables.append(tbl)
+        return self._key_relation(pa.concat_tables(tables), field)
 
     def read(
         self,
@@ -419,9 +468,17 @@ class ReadsMixin:
 
     def _diff_versions(self, v: int) -> DataFrame:
         """Keyed full-outer snapshot diff of ``v-1`` vs ``v`` (see
-        :meth:`changes` for semantics)."""
-        prev, cur = self.read(v - 1), self.read(v)
-        return self._diff_frames(prev, cur, v)
+        :meth:`changes` for semantics). Version 0 has no predecessor: its
+        visible rows are all inserts (a clone's version 0 carries the
+        source's live deletion vectors, so it is not a plain append)."""
+        cur = self.read(v)
+        if v == 0:
+            return cur.select(
+                "*",
+                F.lit("insert").alias("_change_type"),
+                F.lit(v).alias("_commit_version"),
+            )
+        return self._diff_frames(self.read(v - 1), cur, v)
 
     def _changes_delta(self, v: int, raw: dict) -> DataFrame:
         """Restricted diff for a DELTA-manifest rewrite: under the store's

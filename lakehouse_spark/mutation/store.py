@@ -124,7 +124,8 @@ class TableStore(TxnMixin, MetadataMixin, ReadsMixin, DmlMixin, LayoutMixin):
         # add-file stats): read(predicate=...) skips whole segments whose
         # range can't match BEFORE Spark lists a single data file. Declare
         # the columns queries range-filter on (numeric or string); stats
-        # cost one column-pruned scan of each NEW segment at commit time.
+        # are harvested from each NEW segment's parquet footers at commit
+        # time — no Spark job, no data re-read.
         self.stats_cols = tuple(stats_cols)
         # Columns that get a per-segment Bloom sidecar at write time
         # (mutation/bloom.py): equality lookups and targeted DML can then

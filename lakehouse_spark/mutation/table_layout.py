@@ -578,6 +578,47 @@ class LayoutMixin:
             mutate_make=(removed, _make_added),
         )
 
+    def _segment_bytes(self, segs: list[str], live: list[str]) -> dict[str, int]:
+        """On-disk bytes of each of ``segs``. Segment directories are
+        immutable once written (a rewrite gets a NEW name), so sizes cache
+        safely by name — without it, every compact_small probe re-walks
+        every live segment directory: O(table) filesystem metadata per
+        call, at exactly the segment counts the feature targets. The cache
+        is pruned to ``live`` so removed segments don't pin entries."""
+        keep = set(live)
+        cache = {
+            s: b
+            for s, b in (getattr(self, "_segsize_cache", None) or {}).items()
+            if s in keep
+        }
+        out = {}
+        for s in segs:
+            total = cache.get(s)
+            if total is None:
+                total = 0
+                for dirpath, _dirs, files in os.walk(os.path.join(self.root, s)):
+                    for f in files:
+                        try:
+                            total += os.path.getsize(os.path.join(dirpath, f))
+                        except OSError:
+                            pass
+                cache[s] = total
+            out[s] = total
+        self._segsize_cache = cache
+        return out
+
+    def _rewrite_partitions(self, touched: list[str], live: list[str]) -> int:
+        """Output partitions for rewriting the survivors of ``touched``
+        after a broadcast join: one per ``spark.sql.files.maxPartitionBytes``
+        of their on-disk size. A broadcast join keeps the scan's
+        partitioning, where every small file is its own split
+        (openCostInBytes), so without this a 1-row targeted rewrite would
+        add one file per rewritten input file on every statement. At scale
+        this is the scan's own split count."""
+        mpb = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        total = sum(self._segment_bytes(touched, live).values())
+        return max(1, -(-total // mpb))
+
     def compact_small(
         self,
         max_bytes: int = 64 << 20,
@@ -604,33 +645,8 @@ class LayoutMixin:
             return None
         manifest = self._snapshot(v0)
         segs = manifest["segments"]
-
-        # Segment directories are immutable once written (a rewrite gets a
-        # NEW name), so on-disk size caches safely by name — without it,
-        # every compact_small probe re-walks every live segment directory:
-        # O(table) filesystem metadata per call, at exactly the segment
-        # counts the feature targets. Pruned to the live set so removed
-        # segments don't pin entries.
-        cache: dict = getattr(self, "_segsize_cache", None) or {}
-        live = set(segs)
-        cache = {s: b for s, b in cache.items() if s in live}
-
-        def _seg_bytes(s: str) -> int:
-            got = cache.get(s)
-            if got is not None:
-                return got
-            total = 0
-            for dirpath, _dirs, files in os.walk(os.path.join(self.root, s)):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-            cache[s] = total
-            return total
-
-        small = {s for s in segs if _seg_bytes(s) < max_bytes}
-        self._segsize_cache = cache
+        sizes = self._segment_bytes(segs, segs)
+        small = {s for s in segs if sizes[s] < max_bytes}
         if len(small) < 2:
             return None
         folded = [s for s in segs if s in small]

@@ -367,8 +367,19 @@ def extract_predicate(where: str, backslash_escapes: bool = True) -> dict:
 
 
 def _result(spark, op: str, table: str, affected: int) -> DataFrame:
+    """The statement's one-row result, built from Arrow: a LocalRelation,
+    so collecting it runs no Spark job (a list-built frame is an RDD scan
+    with one Python task per core)."""
+    import pyarrow as pa
+
     return spark.createDataFrame(
-        [(op, table, affected)],
+        pa.table(
+            {
+                "op": [op],
+                "table": [table],
+                "affected_rows": pa.array([affected], pa.int64()),
+            }
+        ),
         "op string, table string, affected_rows long",
     )
 

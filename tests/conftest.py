@@ -122,3 +122,24 @@ def spark():
 @pytest.fixture()
 def tmp_store_dir(tmp_path):
     return str(tmp_path / "store")
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (Spark jobs launched while ``fn`` runs, its
+    result). Each call tags its own job group, so counts never
+    accumulate across calls."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def _count(fn):
+        tag = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag)), out
+
+    return _count

@@ -108,6 +108,21 @@ def test_clone_carries_dv_and_constraints(spark, store, tmp_path):
         )
 
 
+def test_clone_with_live_dv_changes_at_version_zero(spark, tmp_path):
+    """A clone's version 0 carries the source's live deletion vectors, so
+    it is neither an append nor a diff against a predecessor: its change
+    feed is exactly its visible rows, as inserts."""
+    src = TableStore(spark, str(tmp_path / "src"), key="id")
+    src.init(spark.range(6).selectExpr("id"))
+    src.delete_keys(spark.createDataFrame([(2,)], "id long"), mode="dv")
+    c = src.clone(str(tmp_path / "c"), version=src.current_version())
+    rows = c.changes(0, 0).collect()
+    assert sorted(r.id for r in rows) == [0, 1, 3, 4, 5]
+    assert {(r._change_type, r._commit_version) for r in rows} == {
+        ("insert", 0)
+    }
+
+
 def test_clone_target_must_not_exist(spark, store, tmp_path):
     store.clone(str(tmp_path / "c"))
     with pytest.raises(ValueError, match="already a table"):

@@ -200,3 +200,63 @@ def test_dv_delete_keys_applies_to_scoped_by_key_stats(spark, tmp_path):
     st.append(spark.range(100, 103).selectExpr("id", "id * 9 AS val"))
     assert st.read().count() == 30
     assert st.read().filter("id = 101 AND val = 909").count() == 1
+
+
+def _two_dv_store(spark, tmp_path, root="j"):
+    """Keys 0..19 in one segment, keys 3 and 7 masked by two live dvs."""
+    st = TableStore(spark, str(tmp_path / root), key="id", stats_cols=("id",))
+    st.init(spark.range(20).selectExpr("id", "id * 2 AS x"))
+    st.delete_keys(_keys(spark, 3), mode="dv")
+    st.delete_keys(_keys(spark, 7), mode="dv")
+    assert len(st._snapshot(st.current_version())["dv"]) == 2
+    return st
+
+
+def test_dv_delete_keys_job_count_with_live_dvs(spark, tmp_path, count_jobs):
+    """The key set enters once as a broadcast LocalRelation, the deleted
+    rows are evaluated once (key collection and dv write share a
+    persisted frame), and the live dvs' keys come from the writer's key
+    cache: 7 jobs with two live dvs (the distributed key set, re-derived
+    per use, ran 13)."""
+    st = _two_dv_store(spark, tmp_path)
+    n, removed = count_jobs(
+        lambda: st.delete_keys(_keys(spark, 11), mode="dv")
+    )
+    assert removed == 1
+    assert n <= 7
+    assert sorted(r.id for r in st.read().collect()) == [
+        i for i in range(20) if i not in (3, 7, 11)
+    ]
+
+
+def test_dv_point_read_folds_dv_keys_away(spark, tmp_path, count_jobs):
+    """A key filter folds into the dv key relations: a point read on a key
+    no live dv holds drops the anti-joins and runs one job (the scan)."""
+    st = _two_dv_store(spark, tmp_path)
+    from pyspark.sql import functions as F
+
+    n, rows = count_jobs(
+        lambda: st.read().filter(F.col("id") == 15).collect()
+    )
+    assert [(r.id, r.x) for r in rows] == [(15, 30)]
+    assert n == 1
+    n, rows = count_jobs(lambda: st.read().filter(F.col("id") == 3).collect())
+    assert rows == []
+
+
+def test_dv_key_cache_reader_instance_and_pruning(spark, tmp_path, count_jobs):
+    """A second instance reads each dv's keys from disk once, then serves
+    them from its cache; compaction folds the dvs and the cache follows
+    the live dv names."""
+    st = _two_dv_store(spark, tmp_path)
+    want = [i for i in range(20) if i not in (3, 7)]
+    reader = TableStore(spark, st.root, key="id")
+    n_cold, df = count_jobs(reader.read)
+    assert n_cold == 2  # one key read per dv, while planning
+    assert set(reader._dv_key_cache) == {"_dv000001", "_dv000002"}
+    n_warm, df = count_jobs(reader.read)
+    assert n_warm == 0
+    assert sorted(r.id for r in df.collect()) == want
+    st.compact()
+    assert sorted(r.id for r in reader.read().collect()) == want
+    assert reader._dv_key_cache == {}

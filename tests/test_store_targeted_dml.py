@@ -349,3 +349,96 @@ def test_mor_merge_change_feed_still_correct(spark, tmp_path):
     assert by_type["update_preimage"][0].val == "v5"
     assert {r.id for r in by_type["update_postimage"]} == {5}
     assert by_type["update_postimage"][0].val == "changed"
+
+
+def test_targeted_upsert_job_count(spark, tmp_path, count_jobs):
+    """A 1-row upsert into a 1-segment table: the collected key set enters
+    as a broadcast LocalRelation, so the rewrite's anti-join shuffles
+    nothing. 4 jobs (a list-built source in a sort-merge join ran 6)."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(20).selectExpr("id", "id * 2 AS x"))
+    n, _ = count_jobs(
+        lambda: st.upsert(spark.createDataFrame([(5, -1)], "id long, x long"))
+    )
+    assert n <= 4
+    got = {r.id: r.x for r in st.read().collect()}
+    assert got == {i: (-1 if i == 5 else i * 2) for i in range(20)}
+
+
+def test_small_upserts_do_not_fragment_segment(spark, tmp_path):
+    """A broadcast join keeps the scan's partitioning (one split per small
+    file), so the survivors are coalesced by the touched bytes: ten 1-row
+    upserts leave the rewritten segment at most two files (survivors +
+    the new row), not one more file per statement."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(40).selectExpr("id", "id * 2 AS x"))
+    for i in range(10):
+        st.upsert(spark.createDataFrame([(i * 3, 1000 + i)], "id long, x long"))
+    (seg,) = _segments_of_head(st)
+    files = [
+        f for f in os.listdir(os.path.join(st.root, seg)) if f.endswith(".parquet")
+    ]
+    assert len(files) <= 2, files
+    assert st.read().count() == 40
+
+
+@pytest.mark.parametrize("ktype", ["long", "string"])
+def test_key_relation_paths_match_python_model(spark, tmp_path, ktype):
+    """upsert and delete_keys in both modes, and dv-masked reads, against
+    a Python model — once with the broadcast key relation (targeted) and
+    once with max_targeted_keys=1, where every multi-key statement takes
+    the distributed join. Both must produce the model's rows exactly."""
+
+    def k(i):
+        return i if ktype == "long" else f"k{i:03d}"
+
+    schema = f"id {ktype}, x long"
+
+    def frame(pairs):
+        return spark.createDataFrame([(k(i), x) for i, x in pairs], schema)
+
+    def keys(*ids):
+        return spark.createDataFrame([(k(i),) for i in ids], f"id {ktype}")
+
+    results = []
+    for cap in (None, 1):
+        st = TableStore(
+            spark, str(tmp_path / f"t{cap}"), key="id", stats_cols=("id",)
+        )
+        if cap is not None:
+            st.max_targeted_keys = cap
+        model = {k(i): i for i in range(12)}
+        st.init(frame([(i, i) for i in range(6)]))
+        st.append(frame([(i, i) for i in range(6, 12)]))
+
+        def upsert(pairs, mode):
+            st.upsert(frame(pairs), mode=mode)
+            model.update({k(i): x for i, x in pairs})
+
+        def delete(ids, mode):
+            removed = st.delete_keys(keys(*ids), mode=mode)
+            assert removed == sum(k(i) in model for i in ids)
+            for i in ids:
+                model.pop(k(i), None)
+
+        def check():
+            got = sorted((r.id, r.x) for r in st.read().collect())
+            assert got == sorted(model.items())
+            for i in (2, 5, 8, 30):
+                pt = st.read().filter(F.col("id") == k(i)).collect()
+                assert [(r.id, r.x) for r in pt] == (
+                    [(k(i), model[k(i)])] if k(i) in model else []
+                )
+            return got
+
+        upsert([(1, 100), (20, 200)], "rewrite")
+        upsert([(2, 101), (3, 102), (21, 201)], "dv")
+        delete([4, 5, 40], "dv")
+        check()
+        delete([6, 21], "rewrite")
+        upsert([(5, 300)], "dv")  # re-inserts a dv-deleted key
+        delete([2, 7], "dv")
+        check()
+        upsert([(8, 400), (3, 401)], "rewrite")  # rewrites dv-masked files
+        results.append(check())
+    assert results[0] == results[1]

@@ -1,22 +1,48 @@
 """DML plane of :class:`~lakehouse_spark.mutation.store.TableStore`:
-append/init, overwrite/overwrite_where/restore, upsert/update/merge,
-delete_keys and friends, plus the targeted-DML machinery that bounds every
-rewrite to the files the affected keys can live in. Split out of store.py.
+append/init, overwrite/restore, and the targeted statements. Split out of
+store.py. Every targeted statement is **target → compute → commit**:
+one targeting step (:meth:`DmlMixin._key_targets` by the source's keys,
+or :meth:`DmlMixin._pred_targets` by a predicate, through the file
+selection ``read()`` uses) picks the touched segments and reads them
+aligned; the statement computes its rows from that base; and one of two
+commit shapes lands them — copy-on-write (:meth:`DmlMixin._commit_cow`:
+rewrite the touched segments) or merge-on-read
+(:meth:`DmlMixin._commit_mor`: mask old images with a deletion vector,
+add new rows as new segments).
 """
 
 from __future__ import annotations
 
-import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakehouse_spark.mutation.manifest import (
-    SchemaMismatchError,
-    _predicate_expr,
-    _segment_may_match,
-)
+from lakehouse_spark.mutation.manifest import SchemaMismatchError, _predicate_expr
 from lakehouse_spark.mutation.reads import _logical_recorded_schema
+
+# Merge-on-read masks every row of a key, so it refuses partial-key matches.
+_PARTIAL_KEY = (
+    "mode='dv' masks by key, but the condition matches only SOME rows of "
+    "at least one key — a dv would also delete the rows the WHERE spared; "
+    "use mode='rewrite' for row-exact statements on duplicate-key tables"
+)
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+
+
+def _matches(predicate: dict | None, where: str | None):
+    """The row condition of a predicated statement: ``predicate`` (the
+    :meth:`read` dict form, logical names) AND ``where`` (SQL), with NULL
+    counting as not matched. Neither given matches every row."""
+    cond = _predicate_expr(predicate) if predicate else None
+    if where is not None:
+        w = F.expr(where)
+        cond = w if cond is None else (cond & w)
+    return F.lit(True) if cond is None else F.coalesce(cond, F.lit(False))
 
 
 def _align_to_fields(df: DataFrame, fields) -> DataFrame:
@@ -34,42 +60,137 @@ def _align_to_fields(df: DataFrame, fields) -> DataFrame:
     return df.select(*[f.name for f in fields])
 
 
+class _Targets(NamedTuple):
+    """A targeted statement's reads at ``version``: the ``touched``
+    segments (the rest ride by reference), the physical-name rebase proof
+    (None: any interleaved commit conflicts), and ``base``, their rows
+    aligned to the full logical schema. Keyed targeting adds the sorted
+    non-null source ``keys`` and the key set ``rel`` to join against
+    (broadcast LocalRelation; above the cap, keys None and ``rel`` the
+    distributed key frame), and the source ``rows`` / ``null_rows``."""
+
+    version: int
+    manifest: dict
+    touched: list[str]
+    rebase_pred: dict | None
+    base: DataFrame
+    keys: list | None = None
+    rel: DataFrame | None = None
+    rows: int | None = None
+    null_rows: int | None = None
+
+
 class DmlMixin:
     """All mutating row operations and their file-skipping helpers."""
 
-    # -- targeted DML: rewrite only the files the keys can live in -----------
+    # -- targeting: which segments a statement reads and replaces ------------
 
     # Above this many distinct source keys, skip targeting: collecting the
     # key set to the driver would cost more than it saves, and a source that
     # large usually touches most files anyway. Delta's file-skipping DML has
     # the same shape (join the source against add-file stats; degrade to a
     # full rewrite when everything matches). The same bound caps the
-    # broadcast key relation the targeted joins use (see _source_keys).
+    # broadcast key relation the targeted joins use.
     max_targeted_keys = 200_000
 
-    def _source_keys(
-        self, source: DataFrame, relation: bool = True
-    ) -> tuple[list | None, DataFrame | None]:
-        """Distinct non-null source keys as ``(sorted list, relation)``, or
-        ``(None, None)`` when the source is too large to target (caller
-        falls back to the full rewrite and the distributed join). The keys
-        are collected once, as Arrow; the relation (None unless
-        ``relation``) is a LocalRelation of the same table, so the
-        statement's key joins broadcast it with a one-task job instead of
-        re-deriving the key set from ``source``. NULL keys never match the
-        equi-join, so they can't identify a segment to rewrite — they ride
-        along as inserts regardless."""
-        kf = (
-            source.select(self.key)
-            .filter(F.col(self.key).isNotNull())
-            .distinct()
-            .limit(self.max_targeted_keys + 1)
+    def _dml_head(self) -> int:
+        """The head version a statement targets (raises on a table with
+        no committed version)."""
+        v = self.current_version()
+        if v is None:
+            raise FileNotFoundError(f"table {self.root} has no committed version")
+        return v
+
+    def _key_targets(
+        self, source: DataFrame, v0: int, relation: bool = True
+    ) -> _Targets:
+        """Keyed targeting: the source's keys, collected once as Arrow row
+        counts per key, pick the touched segments
+        (:meth:`_split_by_key_overlap`), prove the rebase (an interleaved
+        append commutes iff it holds none of them), and enter Spark as a
+        broadcast LocalRelation (unless not ``relation``). Above
+        ``max_targeted_keys`` every segment is touched and joins use the
+        distributed key frame, unhinted. NULL keys identify no segment."""
+        import pyarrow.compute as pc
+
+        counts = source.groupBy(self.key).count()
+        tbl = counts.limit(self.max_targeted_keys + 2).toArrow()
+        keyed = tbl.filter(pc.is_valid(tbl.column(0)))
+        keys = rows = null_rows = None
+        if keyed.num_rows <= self.max_targeted_keys:
+            keys = sorted(keyed.column(0).to_pylist())
+            rows = pc.sum(tbl.column(1)).as_py() or 0
+            null_rows = rows - (pc.sum(keyed.column(1)).as_py() or 0)
+        rel = None
+        if keys is None:
+            rel = counts.select(self.key).filter(F.col(self.key).isNotNull())
+        elif relation:
+            rel = F.broadcast(
+                self._key_relation(keyed.select([0]), counts.schema[self.key])
+            )
+        # Key-range shard pruning: selection scans only the checkpoint
+        # shards whose key bounds overlap the keys (falls back to the full
+        # snapshot when there is no sharded checkpoint).
+        manifest = self._dml_manifest(
+            v0, {self.key: (keys[0], keys[-1])} if keys else None
         )
-        tbl = kf.toArrow()
-        if tbl.num_rows > self.max_targeted_keys:
-            return None, None
-        rel = self._key_relation(tbl, kf.schema[self.key]) if relation else None
-        return sorted(tbl.column(0).to_pylist()), rel
+        if keys is None:
+            touched = manifest["segments"]
+        else:
+            touched, _ = self._split_by_key_overlap(manifest, keys)
+        # The key column is rename-guarded: the logical name IS physical.
+        rebase = None if keys is None else {self.key: keys}
+        base = self._aligned_base(manifest, touched, v0)
+        return _Targets(v0, manifest, touched, rebase, base, keys, rel, rows, null_rows)
+
+    def _pred_targets(self, v0: int, predicate: dict | None) -> _Targets:
+        """Predicated targeting: the segments :meth:`_segments_matching`
+        keeps for ``predicate`` (all of them without one). Interleaved
+        appends provably disjoint from the predicate commute."""
+        manifest = self._dml_manifest(v0, predicate)
+        # Stats, partition values and blooms are keyed by PHYSICAL names;
+        # row conditions stay logical (the base is read logical too).
+        phys = self._pred_to_physical(predicate) if predicate else None
+        touched = manifest["segments"]
+        if phys:
+            touched = self._segments_matching(manifest, phys)
+        base = self._aligned_base(manifest, touched, v0)
+        return _Targets(v0, manifest, touched, phys, base)
+
+    def _survivors(self, t: _Targets, kept: DataFrame) -> DataFrame:
+        """``kept``, the touched rows a rewrite carries over, coalesced to
+        the touched segments' size (:meth:`_rewrite_partitions`) so a small
+        rewrite stays one file."""
+        return kept.coalesce(
+            self._rewrite_partitions(t.touched, t.manifest["segments"])
+        )
+
+    # -- commit: copy-on-write or merge-on-read ------------------------------
+
+    def _commit_cow(
+        self,
+        out: DataFrame,
+        touched: list[str],
+        v0: int,
+        rebase_pred: dict | None,
+        txn: tuple[str, int] | None = None,
+        meta: dict | None = None,
+    ) -> int:
+        """The copy-on-write commit: ``out`` replaces the ``touched``
+        segments, the rest ride by reference (O(touched) manifest state).
+        ``base_version=v0`` pins the snapshot ``out`` came from; appends
+        provably disjoint from ``rebase_pred`` rebase through. The schema
+        cache rolls forward. Returns the new version."""
+        nv = self._transact(
+            None,
+            meta,
+            txn,
+            base_version=v0,
+            rebase_predicate=rebase_pred,
+            mutate_make=(touched, lambda v: self._write_partitioned(out, v)),
+        )
+        self._carry_schema(nv)
+        return nv
 
     def _commit_mor(
         self,
@@ -92,9 +213,9 @@ class DmlMixin:
         one evaluation. ``guard(keys)`` may raise before anything is
         written. ``base_version=v0`` pins the dv's pre-images to the
         segment list they were computed from (provably-disjoint appends
-        rebase through unmasked: the dv never applies to them). Returns
-        ``(new version, masked rows)``; nothing to mask and no rows to
-        write commits nothing: ``(None, 0)``."""
+        rebase through unmasked). The schema cache rolls forward. Returns
+        ``(new version, masked rows)``, or ``(None, 0)`` with no commit
+        when there is nothing to mask or write."""
         pre = pre.persist()
         try:
             keys = pre.select(self.key).toArrow() if touched else None
@@ -123,32 +244,40 @@ class DmlMixin:
             pre.unpersist()
         if masked:  # committed: only now is the dv name final
             self._cache_dv_keys(f"_dv{nv:06d}", keys)
+        self._carry_schema(nv)
         return nv, masked
 
-    def _survivors(
-        self, base: DataFrame, rel: DataFrame, touched: list[str], live: list[str]
-    ) -> DataFrame:
-        """``base`` minus the rows whose key is in the key relation
-        ``rel``, broadcast, and coalesced to the touched segments' size
-        (:meth:`_rewrite_partitions`) so a small rewrite stays one file."""
-        return base.join(F.broadcast(rel), self.key, "left_anti").coalesce(
-            self._rewrite_partitions(touched, live)
-        )
-
-    def _bloom_rules_out(self, seg: str, col: str, hashes, family) -> bool:
-        """True when the segment's bloom sidecar PROVES none of the hashed
-        values is present (no sidecar / non-probeable values / probe
-        ``family`` not matching the sidecar's recorded value type → False:
-        the segment stays). A bloom False is definitive — no false
-        negatives — so ruling a segment out can never change results."""
-        if hashes is None or hashes.size == 0:
-            return False
-        from lakehouse_spark.mutation.bloom import load_bloom, might_contain_any
-
-        bloom = load_bloom(os.path.join(self.root, seg), col, family)
-        if bloom is None:
-            return False
-        return not might_contain_any(bloom, hashes)
+    def _commit_delete(
+        self,
+        t: _Targets,
+        rows: DataFrame,
+        hit,
+        mode: str,
+        txn: tuple[str, int] | None = None,
+        guard=None,
+    ) -> int:
+        """The delete tail: ``rows`` is ``t.base`` plus any columns the
+        match condition ``hit`` reads. ``dv`` masks the matched rows;
+        ``rewrite`` persists ``rows`` (one base read, one key broadcast),
+        counts the removed rows once, and rewrites the survivors. Nothing
+        removed commits nothing. Returns the deleted row count."""
+        if not t.touched:
+            return 0  # provably nothing matches
+        cols = t.base.columns
+        matched = rows.filter(hit).select(*cols)
+        if mode == "dv":
+            return self._commit_mor(
+                matched, t.touched, t.version, t.rebase_pred, txn, guard=guard
+            )[1]
+        rows = rows.persist()
+        try:
+            removed = matched.count()
+            if removed:
+                kept = self._survivors(t, rows.filter(~hit).select(*cols))
+                self._commit_cow(kept, t.touched, t.version, t.rebase_pred, txn)
+            return removed
+        finally:
+            rows.unpersist()
 
     def _split_by_key_overlap(
         self, manifest: dict, keys: list
@@ -290,43 +419,27 @@ class DmlMixin:
         return self._snapshot(v)
 
     def _aligned_base(
-        self, manifest: dict, touched: list[str], version: int | None = None
+        self, manifest: dict, touched: list[str], version: int
     ) -> DataFrame:
         """Read the touched segments (deletion vectors applied) aligned to
-        the FULL table schema, so targeted DML behaves byte-identically to
-        the full-table form even when schema-evolved columns live only in
-        untouched segments. Returned in LOGICAL column names (renames
-        applied, dropped columns gone): every DML path computes in logical
-        space and _write_segment translates back to physical on write —
-        which is also what physically purges dropped columns from any
-        segment a rewrite touches. With ``version`` the alignment schema
-        comes from the per-version cache (O(affected) planning: only the
-        touched segments are opened); without it, the legacy full-union
-        read."""
-        renames = manifest.get("renames", {})
-        drop_cols = manifest.get("dropped", [])
-
-        def _logical(df: DataFrame) -> DataFrame:
-            return self._to_logical_static(df, renames, drop_cols)
-
-        dv = manifest.get("dv", {})
-        phys = manifest.get("schema")
-        if version is not None:
-            schema = self._logical_schema(version, manifest)
-            if not touched:
-                return self.spark.createDataFrame([], schema)
-            return _align_to_fields(
-                _logical(self._read_segments(touched, dv, phys)), schema.fields
-            )
-        full = _logical(self._read_segments(manifest["segments"], dv, phys))
-        if set(touched) == set(manifest["segments"]):
-            return full
+        the FULL table schema at ``version`` (per-version cache: only the
+        touched segments are opened), so targeted DML behaves
+        byte-identically to the full-table form even when schema-evolved
+        columns live only in untouched segments. Returned in LOGICAL
+        column names (renames applied, dropped columns gone): every DML
+        path computes in logical space and _write_segment translates back
+        to physical on write — which is also what physically purges
+        dropped columns from any segment a rewrite touches."""
+        schema = self._logical_schema(version, manifest)
         if not touched:
-            return full.limit(0)
-        return _align_to_fields(
-            _logical(self._read_segments(touched, dv, phys)), full.schema.fields
+            return self.spark.createDataFrame([], schema)
+        df = self._read_segments(
+            touched, manifest.get("dv", {}), manifest.get("schema")
         )
-
+        df = self._to_logical_static(
+            df, manifest.get("renames", {}), manifest.get("dropped", [])
+        )
+        return _align_to_fields(df, schema.fields)
 
     # -- writes ----------------------------------------------------------------
 
@@ -504,68 +617,35 @@ class DmlMixin:
                 "empty predicate would replace the whole table; call "
                 "overwrite() for that"
             )
-        bad = df.filter(~F.coalesce(cond, F.lit(False))).limit(1)
-        if bad.count():
+        hit = F.coalesce(cond, F.lit(False))
+        if df.filter(~hit).limit(1).count():
             raise ValueError(
                 f"replacement rows fall outside the predicate {predicate!r} "
                 "(Delta's replaceWhere rejects this too) — fix the source "
                 "or widen the predicate"
             )
-        v0 = self.current_version()
-        if v0 is None:
-            raise FileNotFoundError(f"table {self.root} has no committed version")
-        manifest = self._dml_manifest(v0, predicate)
-        stats = manifest.get("stats", {})
-        # Stats are keyed by PHYSICAL column names; the predicate arrives
-        # logical. (The row-level cond below stays logical — the base read
-        # is logical too.)
-        phys_pred = self._pred_to_physical(predicate)
-        # Partition-value pruning joins footer stats in the touched-segment
-        # test: date/timestamp partition columns get no footer stats (only
-        # int/float/string are harvested), so without _partition_may_match
-        # a partition-predicate replaceWhere on a date-partitioned table
-        # rewrites every segment — correct but O(table), not O(affected).
-        parts = manifest.get("partitions", {})
-        touched = [
-            s
-            for s in manifest["segments"]
-            if _segment_may_match(stats.get(s), phys_pred)
-            and self._partition_may_match(parts.get(s), phys_pred)
-        ]
-        base = self._aligned_base(manifest, touched, version=v0)
+        t = self._pred_targets(self._dml_head(), predicate)
         # Survivors = rows NOT matching (a null-valued predicate column
-        # means "doesn't match" and therefore survives).
-        survivors = base.filter(~F.coalesce(cond, F.lit(False)))
-        out = survivors.unionByName(df.select(*base.columns))
-        # Interleaved appends provably OUTSIDE the replaced region commute
-        # (serial order: replace, then append) — rebase instead of raising.
-        # Mutate lane: the commit records (touched-removed, added) — the
-        # untouched segments ride by reference with O(affected) metadata.
-        nv = self._transact(
-            None,
-            meta,
-            txn,
-            base_version=v0,
-            rebase_predicate=phys_pred,
-            mutate_make=(
-                touched,
-                lambda v: self._write_partitioned(out, v),
-            ),
-        )
-        self._carry_schema(nv)
-        return nv
+        # means "doesn't match" and therefore survives). Interleaved
+        # appends provably OUTSIDE the replaced region commute (serial
+        # order: replace, then append) — rebase instead of raising.
+        out = self._survivors(t, t.base.filter(~hit))
+        out = out.unionByName(df.select(*t.base.columns))
+        return self._commit_cow(out, t.touched, t.version, t.rebase_pred, txn, meta)
 
     def upsert(
         self,
         rows: DataFrame,
         txn: tuple[str, int] | None = None,
         mode: str = "rewrite",
-        base_version: int | None = None,
     ) -> None:
         """SC5: whole-row upsert keyed by ``self.key`` — the atomic
-        tmp+rename document replace. Delta form: MERGE WHEN MATCHED UPDATE
-        WHEN NOT MATCHED INSERT. ``txn`` stamps an exactly-once watermark
-        (see :meth:`last_txn_version`).
+        tmp+rename document replace: every existing row of a source key
+        (all of them, where the key repeats) is replaced by the source's
+        rows for it. Delta form: MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED
+        INSERT. ``txn`` stamps an exactly-once watermark (see
+        :meth:`last_txn_version`). The keyed skeleton: :meth:`_key_targets`,
+        then :meth:`_commit_cow` or :meth:`_commit_mor`.
 
         ``mode="rewrite"`` (default) cost shape: **O(affected files), not
         O(table)** when the key is in ``stats_cols`` and the layout
@@ -584,65 +664,27 @@ class DmlMixin:
         per outstanding dv until :meth:`compact`/:meth:`maybe_compact`
         folds them (run on a cadence, like Delta's OPTIMIZE after DV
         DML)."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+        _check_mode(mode)
         if not self.exists():
             self.init(rows, txn=txn)
             return
         rows = self._apply_generated(rows)
         self._reject_schema_conflicts(rows, op="upsert")
-        # base_version lets a caller whose SOURCE was derived from a pinned
-        # snapshot (update(): post-images computed from read(v0)) extend the
-        # snapshot-conflict check back to that read — a commit landing after
-        # the derivation raises instead of silently losing it.
-        v0 = self.current_version() if base_version is None else base_version
-        keys, rel = self._source_keys(rows)
-        # Key-range shard pruning: selection scans only the checkpoint
-        # shards whose key bounds overlap the source keys, not every
-        # segment record (falls back to the full snapshot when there is
-        # no sharded checkpoint).
-        manifest = self._dml_manifest(
-            v0, {self.key: (keys[0], keys[-1])} if keys else None
-        )
-        if keys is None:
-            touched = manifest["segments"]
-        else:
-            touched, _ = self._split_by_key_overlap(manifest, keys)
-        # Conflict-rebase proof: an interleaved blind append commutes with
-        # this upsert iff its segments provably hold NONE of the source
-        # keys (else carried-through appended rows would duplicate keys
-        # the new segment also carries). Key column is rename-guarded, so
-        # the logical name IS the physical name.
-        rebase_pred = {self.key: keys} if keys is not None else None
-        base = self._aligned_base(manifest, touched, version=v0)
+        # Rebase proof: an interleaved blind append commutes with this
+        # upsert iff its segments provably hold NONE of the source keys
+        # (else carried-through appended rows would duplicate keys the new
+        # segment also carries).
+        t = self._key_targets(rows, self._dml_head())
+        new_rows = rows.select(*t.base.columns)
         if mode == "dv":
-            new_rows = rows.select(*base.columns)
-            if rel is None:
-                rel = new_rows.select(self.key).distinct()
             # Pre-images of the keys being replaced; the commit writes
             # O(changed rows) data AND touches O(changed) manifest state.
-            matched = base.join(F.broadcast(rel), self.key, "left_semi")
-            nv, _ = self._commit_mor(
-                matched, touched, v0, rebase_pred, txn, new_rows
-            )
-            self._carry_schema(nv)
+            pre = t.base.join(t.rel, self.key, "left_semi")
+            self._commit_mor(pre, t.touched, t.version, t.rebase_pred, txn, new_rows)
             return
-        if keys is None:
-            survivors = base.join(rows.select(self.key), self.key, "left_anti")
-        else:
-            survivors = self._survivors(base, rel, touched, manifest["segments"])
-        out = survivors.unionByName(rows.select(*base.columns))
-        nv = self._transact(
-            None,
-            txn=txn,
-            base_version=v0,
-            rebase_predicate=rebase_pred,
-            mutate_make=(
-                touched,
-                lambda v: self._write_partitioned(out, v),
-            ),
-        )
-        self._carry_schema(nv)
+        out = self._survivors(t, t.base.join(t.rel, self.key, "left_anti"))
+        out = out.unionByName(new_rows)
+        self._commit_cow(out, t.touched, t.version, t.rebase_pred, txn)
 
     def update(
         self,
@@ -662,27 +704,38 @@ class DmlMixin:
         predicate over stats/partition/bloom-tracked columns means only the
         segments that can hold matches are even read, and the key-targeted
         rewrite underneath touches only the files the matched keys live in.
-        ``mode="dv"`` is merge-on-read UPDATE: zero rewrites, old images
-        masked by a deletion vector, post-images in one new segment.
+        ``mode="rewrite"`` (default) is row-exact: the touched segments are
+        rewritten with each matched row replaced by its post-image and
+        every other row — including rows the WHERE spared that share a
+        matched row's key — carried over. ``mode="dv"`` is merge-on-read
+        UPDATE: zero rewrites, old images masked by a deletion vector,
+        post-images in one new segment; a dv masks by KEY, so it raises
+        when a matched key has rows the condition spared (use rewrite
+        mode on duplicate-key tables).
 
         ``keys`` is the DISTRIBUTED key-set form (``UPDATE ... WHERE key
         IN (SELECT ...)`` beyond any inline-literal cap): a one-column
         frame of key values; matched rows are found with a semi-join that
         never materializes the set on the driver, composing with ``where``
-        /``predicate`` as an extra conjunct. The targeted rewrite
-        underneath still applies key-stats file skipping (the POST-image
-        keys drive it); arbitrarily large key sets degrade gracefully to
-        the full rewrite exactly like upsert. This is Delta's
-        UPDATE-with-subquery cost shape.
+        /``predicate`` as an extra conjunct. The commit still applies
+        key-stats file skipping (the matched rows' keys drive it);
+        arbitrarily large key sets degrade gracefully to the full rewrite
+        exactly like upsert. This is Delta's UPDATE-with-subquery cost
+        shape.
+
+        Cost: one collection of the matched rows' keys (with their row
+        counts, which give the returned count), then the keyed skeleton —
+        the commit reads and replaces only the segments those keys can
+        live in. Rows whose key is NULL can't be located by key, so
+        matching one raises.
 
         Generated columns are recomputed from the updated values (Delta's
         UPDATE contract); setting one directly, or the key, is an error.
         Returns the number of updated rows. Concurrency: derived from a
         pinned snapshot and committed with snapshot-conflict detection —
         an interleaved commit raises :exc:`ConcurrentWriteError`."""
-        v0 = self.current_version()
-        if v0 is None:
-            raise FileNotFoundError(f"table {self.root} has no committed version")
+        _check_mode(mode)
+        v0 = self._dml_head()
         key = self.key or self._manifest_key()
         gen = self.generated_columns()
         full_schema = self._logical_schema(v0, None)
@@ -700,43 +753,73 @@ class DmlMixin:
                 )
             if c not in cols:
                 raise KeyError(f"no column {c!r} (have {cols})")
-        matched = self.read(v0, predicate=predicate)
         # Align to the FULL logical schema: a selective predicate can prune
-        # the read to segments that predate an evolved column, and the
-        # post-image rows must still carry it (as null — exactly what an
-        # unpruned read presents). Without this the rewrite failed to
-        # resolve the column (and a conform-by-subset would have silently
-        # dropped it from the rewritten segments).
-        matched = _align_to_fields(matched, full_schema.fields)
+        # the read to segments that predate an evolved column the WHERE
+        # names (it reads null there, exactly as an unpruned read shows).
+        matched = _align_to_fields(
+            self.read(v0, predicate=predicate), full_schema.fields
+        )
         if keys is not None:
-            kf = keys
-            if len(kf.columns) != 1:
+            if len(keys.columns) != 1:
                 raise ValueError(
-                    f"keys frame must have exactly one column, got {kf.columns}"
+                    f"keys frame must have exactly one column, got {keys.columns}"
                 )
-            kf = kf.toDF(key).filter(F.col(key).isNotNull()).distinct()
+            kf = keys.toDF(key).filter(F.col(key).isNotNull()).distinct()
             matched = matched.join(kf, key, "left_semi")
         if where is not None:
             matched = matched.filter(F.expr(where))
+        t = self._key_targets(matched, v0)
+        if t.rows is None:  # above the key cap: count in one aggregate
+            n, keyed = matched.agg(F.count(F.lit(1)), F.count(key)).first()
+            nulls = n - keyed
+        else:
+            n, nulls = t.rows, t.null_rows
+        if nulls:
+            raise ValueError(
+                f"UPDATE matches {nulls} row(s) whose key {key!r} is NULL; "
+                "the store locates rows by key, so it cannot replace them"
+            )
+        if not n:
+            return 0
+        # Every matched row's key is in t.rel, and within those keys' rows
+        # the statement's condition is exactly the row match (a keys frame
+        # only admits keys t.rel already holds).
+        hit = _matches(predicate, where)
+        pre = t.base.join(t.rel, self.key, "left_semi")
         # SET expressions are cast to the column's existing type (Delta's
         # store-assignment rule): UPDATE changes values, never the schema.
-        types = {f.name: f.dataType for f in matched.schema}
-        post = matched.select(
-            *[
-                F.expr(set[c]).cast(types[c]).alias(c) if c in set else F.col(c)
-                for c in matched.columns
-            ]
-        )
-        if gen:  # recompute from the post-update values
-            post = post.drop(*[c for c in gen if c in post.columns])
-        post = post.persist()
-        try:
-            n = post.count()
-            if n:
-                self.upsert(post, txn=txn, mode=mode, base_version=v0)
-            return n
-        finally:
-            post.unpersist()
+        types = {f.name: f.dataType for f in full_schema.fields}
+
+        def _set(df: DataFrame) -> DataFrame:
+            out = df.select(
+                *[
+                    F.when(hit, F.expr(set[c]).cast(types[c]))
+                    .otherwise(F.col(c))
+                    .alias(c)
+                    if c in set
+                    else F.col(c)
+                    for c in cols
+                ]
+            )
+            if gen:  # recompute from the post-update values
+                out = self._apply_generated(out.drop(*gen)).select(*cols)
+            return out
+
+        if mode == "dv":
+
+            def _whole_keys(pre_keys) -> None:
+                if pre_keys.num_rows != n:
+                    raise ValueError(_PARTIAL_KEY)
+
+            post = _set(pre.filter(hit))
+            self._commit_mor(
+                pre, t.touched, v0, t.rebase_pred, txn, post, guard=_whole_keys
+            )
+        else:
+            out = self._survivors(t, t.base.join(t.rel, self.key, "left_anti"))
+            out = out.unionByName(_set(pre))
+            self._commit_cow(out, t.touched, v0, t.rebase_pred, txn)
+        return n
 
     def merge(
         self,
@@ -789,8 +872,7 @@ class DmlMixin:
             raise ValueError(
                 f"extra_cols must be 'error', 'evolve' or 'ignore', got {extra_cols!r}"
             )
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+        _check_mode(mode)
         # Generated columns the source omits are computed up front so
         # INSERTs carry them; an UPDATE whose clause leaves a generated
         # column stale is caught by the write-time enforcement instead.
@@ -820,24 +902,13 @@ class DmlMixin:
                 self.init(source, txn=txn)
             return
         self._reject_schema_conflicts(source, op="merge")
-        # Targeted rewrite (see upsert): only segments whose key stats can
-        # contain a source key are read and rewritten; the rest are reused
-        # by reference. The aligned base carries the FULL table schema, so
+        # Targeted (see upsert): only segments whose key stats can contain
+        # a source key are read and replaced; the rest are reused by
+        # reference. The aligned base carries the FULL table schema, so
         # the unknown-column check and clause evaluation below are
         # byte-identical to the untargeted form.
-        v0 = self.current_version()
-        tkeys, _ = self._source_keys(source, relation=False)
-        manifest = self._dml_manifest(
-            v0, {self.key: (tkeys[0], tkeys[-1])} if tkeys else None
-        )
-        if tkeys is None:
-            touched = manifest["segments"]
-        else:
-            touched, _ = self._split_by_key_overlap(manifest, tkeys)
-        # Same commute proof as upsert: interleaved appends must provably
-        # hold none of the source keys.
-        rebase_pred = {self.key: tkeys} if tkeys is not None else None
-        base = self._aligned_base(manifest, touched, version=v0)
+        t = self._key_targets(source, self._dml_head(), relation=False)
+        base = t.base
         unknown = [c for c in source.columns if c not in base.columns]
         if unknown and extra_cols == "error":
             raise ValueError(
@@ -866,9 +937,9 @@ class DmlMixin:
             for c in (update_cols if update_cols is not None else source.columns)
             if c != self.key and c in cols and c in source.columns
         ]
-        t = base.alias("t")
+        tb = base.alias("t")
         s = source.alias("s")
-        joined = t.join(
+        joined = tb.join(
             s, F.col(f"t.{self.key}") == F.col(f"s.{self.key}"), "left"
         )
         matched = F.col(f"s.{self.key}").isNotNull()
@@ -882,7 +953,7 @@ class DmlMixin:
         ins = None
         if insert:
             new_rows = s.join(
-                t.select(F.col(f"t.{self.key}")),
+                tb.select(F.col(f"t.{self.key}")),
                 F.col(f"s.{self.key}") == F.col(f"t.{self.key}"),
                 "left_anti",
             )
@@ -902,6 +973,14 @@ class DmlMixin:
                         for c in cols
                     ]
                 )
+        # The row a kept target row becomes: the update post-image, or
+        # itself.
+        image = [
+            F.when(updated, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            if c in upd
+            else F.col(f"t.{c}").alias(c)
+            for c in cols
+        ]
         if mode == "dv":
             # Merge-on-read: old images of deleted/updated rows are masked
             # (their pre-images fund the dv file), update post-images and
@@ -910,48 +989,17 @@ class DmlMixin:
             pre = joined.filter(deleted | updated).select(
                 *[F.col(f"t.{c}").alias(c) for c in cols]
             )
-            post = joined.filter(updated).select(
-                *[
-                    F.when(updated, F.col(f"s.{c}"))
-                    .otherwise(F.col(f"t.{c}"))
-                    .alias(c)
-                    if c in upd
-                    else F.col(f"t.{c}").alias(c)
-                    for c in cols
-                ]
-            )
+            post = joined.filter(updated).select(*image)
             new_seg_rows = post if ins is None else post.unionByName(ins)
-            nv, _ = self._commit_mor(
-                pre, touched, v0, rebase_pred, txn, new_seg_rows
+            self._commit_mor(
+                pre, t.touched, t.version, t.rebase_pred, txn, new_seg_rows
             )
-            if unknown and extra_cols == "evolve":
-                self._schema_cache = None  # schema widened: rebuild
-            else:
-                self._carry_schema(nv)
-            return
-        kept = joined.filter(~deleted).select(
-            *[
-                F.when(updated, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-                if c in upd
-                else F.col(f"t.{c}").alias(c)
-                for c in cols
-            ]
-        )
-        out = kept if ins is None else kept.unionByName(ins)
-        nv = self._transact(
-            None,
-            txn=txn,
-            base_version=v0,
-            rebase_predicate=rebase_pred,
-            mutate_make=(
-                touched,
-                lambda v: self._write_partitioned(out, v),
-            ),
-        )
+        else:
+            kept = joined.filter(~deleted).select(*image)
+            out = kept if ins is None else kept.unionByName(ins)
+            self._commit_cow(out, t.touched, t.version, t.rebase_pred, txn)
         if unknown and extra_cols == "evolve":
             self._schema_cache = None  # schema widened: rebuild
-        else:
-            self._carry_schema(nv)
 
     def delete_where(
         self,
@@ -982,92 +1030,35 @@ class DmlMixin:
                 "DELETE with no condition would drop every row; call "
                 "overwrite() with an empty frame if that is really meant"
             )
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-        v0 = self.current_version()
-        if v0 is None:
-            raise FileNotFoundError(f"table {self.root} has no committed version")
-        manifest = self._dml_manifest(v0, predicate)
-        touched = manifest["segments"]
-        rebase_pred = None
-        if predicate:
-            stats = manifest.get("stats", {})
-            parts = manifest.get("partitions", {})
-            phys_pred = self._pred_to_physical(predicate)
-            # Interleaved appends provably disjoint from the delete's
-            # predicate commute (they land "after" the delete in the
-            # serial order, so their rows correctly survive).
-            rebase_pred = phys_pred
-            touched = [
-                s
-                for s in manifest["segments"]
-                if _segment_may_match(stats.get(s), phys_pred)
-                and self._partition_may_match(parts.get(s), phys_pred)
-            ]
-        if not touched:
-            return 0  # provably nothing matches; no commit needed
-        base = self._aligned_base(manifest, touched, version=v0)
-        cond = _predicate_expr(predicate) if predicate else None
-        if where is not None:
-            w = F.expr(where)
-            cond = w if cond is None else (cond & w)
-        matched_cond = F.coalesce(cond, F.lit(False))  # NULL = not matched
-        if mode == "rewrite":
-            base = base.persist()
-            try:
-                survivors = base.filter(~matched_cond)
-                removed = base.count() - survivors.count()
-                if removed == 0:
-                    return 0
-                nv = self._transact(
-                    None,
-                    txn=txn,
-                    base_version=v0,
-                    rebase_predicate=rebase_pred,
-                    mutate_make=(
-                        touched,
-                        lambda v: self._write_partitioned(survivors, v),
-                    ),
-                )
-                self._carry_schema(nv)
-                return removed
-            finally:
-                base.unpersist()
+        _check_mode(mode)
+        # Interleaved appends provably disjoint from the delete's predicate
+        # commute (they land "after" the delete in the serial order, so
+        # their rows correctly survive).
+        t = self._pred_targets(self._dml_head(), predicate)
+        hit = _matches(predicate, where)
+
         def _whole_keys(keys) -> None:
             # The guard inspects only the touched segments, which is why
             # the dv must be scoped to them: registered against ALL
             # segments it would silently mask a matched key's sibling rows
             # living in predicate-pruned segments.
-            key_rows = base.join(
-                F.broadcast(self._key_relation(keys, base.schema[self.key])),
+            key_rows = t.base.join(
+                F.broadcast(self._key_relation(keys, t.base.schema[self.key])),
                 self.key,
                 "left_semi",
             ).count()
             if key_rows != keys.num_rows:
-                raise ValueError(
-                    "mode='dv' masks by key, but the condition matches only "
-                    "SOME rows of at least one key — a dv would also delete "
-                    "the rows the WHERE spared; use mode='rewrite' for "
-                    "row-exact deletes on duplicate-key tables"
-                )
+                raise ValueError(_PARTIAL_KEY)
 
-        nv, removed = self._commit_mor(
-            base.filter(matched_cond),
-            touched,
-            v0,
-            rebase_pred,
-            txn,
-            guard=_whole_keys,
-        )
-        self._carry_schema(nv)
-        return removed
+        return self._commit_delete(t, t.base, hit, mode, txn, _whole_keys)
 
     def delete_keys(self, keys: DataFrame, mode: str = "rewrite") -> int:
         """J4 target: delete all rows whose key appears in ``keys`` (feed
         with plans.closure.cascade_delete_targets for recursive deletes).
 
-        ``mode="rewrite"`` (default) compacts the survivors into one
-        segment — O(table) write, zero read-time cost after.
+        ``mode="rewrite"`` (default) rewrites the survivors of only the
+        segments whose key stats / blooms admit a deleted key — zero
+        read-time cost after.
 
         ``mode="dv"`` is the merge-on-read path (Delta deletion vectors):
         the commit WRITES only the deleted rows (their full pre-images, so
@@ -1081,55 +1072,17 @@ class DmlMixin:
         :meth:`compact` folds them away. Run compaction on a cadence,
         exactly like Delta's OPTIMIZE after DML on deletion-vector
         tables."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-        v0 = self.current_version()
-        if v0 is None:
-            raise FileNotFoundError(f"table {self.root} has no committed version")
-        keyset = keys.select(self.key).distinct()
-        # Deleted rows can only live in segments whose key stats overlap the
-        # key set — read (and in rewrite mode, rewrite) just those. Shard
-        # pruning narrows the selection scan itself to the checkpoint
-        # shards whose key bounds overlap.
-        klist, rel = self._source_keys(keyset)
-        manifest = self._dml_manifest(
-            v0, {self.key: (klist[0], klist[-1])} if klist else None
+        _check_mode(mode)
+        # Deleted rows can only live in segments whose key stats / blooms
+        # admit a deleted key; appends provably free of the keys commute
+        # (their rows survive either serial order).
+        t = self._key_targets(keys, self._dml_head())
+        flagged = t.base.join(
+            t.rel.withColumn("__deleted", F.lit(True)), self.key, "left"
         )
-        if klist is None:
-            touched = manifest["segments"]
-        else:
-            touched, _ = self._split_by_key_overlap(manifest, klist)
-        # Appends provably free of the deleted keys commute with this
-        # delete (their rows survive either serial order).
-        rebase_pred = {self.key: klist} if klist is not None else None
-        if not touched:
-            return 0  # provably nothing to delete; no commit needed
-        base = self._aligned_base(manifest, touched, version=v0)
-        if mode == "rewrite":
-            if klist is None:
-                out = base.join(keyset, self.key, "left_anti")
-            else:
-                out = self._survivors(base, rel, touched, manifest["segments"])
-            removed = base.count() - out.count()
-            nv = self._transact(
-                None,
-                base_version=v0,
-                rebase_predicate=rebase_pred,
-                mutate_make=(
-                    touched,
-                    lambda v: self._write_partitioned(out, v),
-                ),
-            )
-            self._carry_schema(nv)
-            return removed
-        # applies_to is the key-touched segments (stats overlap, computed
-        # above); unclustered keys (klist None) degrade to all segments.
-        deleted = base.join(
-            F.broadcast(keyset if rel is None else rel), self.key, "left_semi"
+        return self._commit_delete(
+            t, flagged, F.col("__deleted").isNotNull(), mode
         )
-        nv, removed = self._commit_mor(deleted, touched, v0, rebase_pred)
-        self._carry_schema(nv)
-        return removed
 
     def delete_last_per_group(self, group: str, order_col: str) -> None:
         """O9 ← manager.py:293-325: drop the newest row per group (the

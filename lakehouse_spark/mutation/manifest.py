@@ -1513,8 +1513,13 @@ class TxnMixin:
         ``partitions`` and ``dv`` maps. Unpinned planes carry forward.
 
         ``base_version`` is snapshot-conflict detection for read-then-rewrite
-        commits (upsert / merge / delete / replaceWhere): those paths read
-        the table at some version and write a result derived from it, so a
+        commits: every targeted statement passes it through
+        ``DmlMixin._commit_cow`` or ``DmlMixin._commit_mor`` (upsert,
+        update, merge, overwrite_where, delete_where, delete_keys, and
+        compact_small's fold), and the full rewrites (compact,
+        delete_last_per_group, retention_sweep) pass it directly. Those
+        paths read the table at some version and write a result derived
+        from it, so a
         commit that landed BETWEEN their read and their claim would be
         silently clobbered by the rewrite. Passing the version the rewrite
         read makes the commit claim exactly ``base_version + 1`` or raise

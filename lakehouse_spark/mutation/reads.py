@@ -221,6 +221,54 @@ class ReadsMixin:
             tables.append(tbl)
         return self._key_relation(pa.concat_tables(tables), field)
 
+    def _bloom_rules_out(self, seg: str, col: str, hashes, family) -> bool:
+        """True when the segment's bloom sidecar PROVES none of the hashed
+        values is present (no sidecar / non-probeable values / probe
+        ``family`` not matching the sidecar's recorded value type → False:
+        the segment stays). A bloom False is definitive — no false
+        negatives — so ruling a segment out can never change results."""
+        if hashes is None or hashes.size == 0:
+            return False
+        from lakehouse_spark.mutation.bloom import load_bloom, might_contain_any
+
+        bloom = load_bloom(os.path.join(self.root, seg), col, family)
+        if bloom is None:
+            return False
+        return not might_contain_any(bloom, hashes)
+
+    def _segments_matching(self, manifest: dict, predicate: dict) -> list[str]:
+        """The file selection of ``read()``, ``overwrite_where`` and
+        ``delete_where``: the segments whose manifest stats, partition
+        values and bloom sidecars each allow a row matching ``predicate``
+        (PHYSICAL names). Equality and IN-set terms probe the blooms
+        (effective where min/max is not: unclustered keys; an IN-set rules
+        a segment out only when ALL values are absent). Each test only
+        rules out segments provably without a match."""
+        from lakehouse_spark.mutation.bloom import hash_values, probe_family
+
+        probes = []
+        for c, bounds in predicate.items():
+            if isinstance(bounds, tuple):
+                continue
+            vals = (
+                [v for v in bounds if v is not None]
+                if isinstance(bounds, (list, set, frozenset))
+                else [bounds]
+            )
+            if vals:  # an empty IN: stats pruning already empties it
+                probes.append((c, hash_values(vals), probe_family(vals)))
+        stats = manifest.get("stats", {})
+        parts = manifest.get("partitions", {})
+        return [
+            s
+            for s in manifest["segments"]
+            if _segment_may_match(stats.get(s), predicate)
+            and self._partition_may_match(parts.get(s), predicate)
+            and not any(
+                self._bloom_rules_out(s, c, hv, fam) for c, hv, fam in probes
+            )
+        ]
+
     def read(
         self,
         version: int | None = None,
@@ -290,40 +338,7 @@ class ReadsMixin:
         )
         cond = None
         if predicate:
-            stats = manifest.get("stats", {})
-            parts = manifest.get("partitions", {})
-            segments = [
-                s
-                for s in segments
-                if _segment_may_match(stats.get(s), predicate)
-                and self._partition_may_match(parts.get(s), predicate)
-            ]
-            # Equality and IN-set terms additionally probe bloom sidecars
-            # — effective exactly where min/max is not (unclustered
-            # high-cardinality keys). For an IN-set a segment is ruled out
-            # only when ALL values are provably absent. Range terms can't
-            # use a bloom.
-            from lakehouse_spark.mutation.bloom import hash_values, probe_family
-
-            for c, bounds in predicate.items():
-                if isinstance(bounds, tuple):
-                    continue
-                vals = (
-                    [v for v in bounds if v is not None]
-                    if isinstance(bounds, (list, set, frozenset))
-                    else [bounds]
-                )
-                if not vals:
-                    continue  # empty IN: stats pruning already emptied it
-                fam = probe_family(vals)
-                hv = hash_values(vals)
-                if hv is None:
-                    continue
-                segments = [
-                    s
-                    for s in segments
-                    if not self._bloom_rules_out(s, c, hv, fam)
-                ]
+            segments = self._segments_matching(manifest, predicate)
             cond = _predicate_expr(predicate)
 
         def _logical(df: DataFrame) -> DataFrame:

@@ -653,19 +653,12 @@ class LayoutMixin:
         base = self._aligned_base(manifest, folded, version=v0)
         base = base.persist()
         try:
-            # Mutate lane: the fold is prev-minus-small-plus-appended, so
-            # the commit touches O(folded) driver metadata and stays a
-            # DELTA manifest — checkpoint shard reuse survives routine
-            # small-files maintenance on a 10^5-segment ingest table.
-            return self._transact(
-                None,
-                meta={"compact_small": len(small)},
-                txn=txn,
-                base_version=v0,
-                mutate_make=(
-                    folded,
-                    lambda v: self._write_partitioned(base, v),
-                ),
+            # Copy-on-write of the folded segments: the commit touches
+            # O(folded) driver metadata and stays a DELTA manifest —
+            # checkpoint shard reuse survives routine small-files
+            # maintenance on a 10^5-segment ingest table.
+            return self._commit_cow(
+                base, folded, v0, None, txn, meta={"compact_small": len(small)}
             )
         finally:
             base.unpersist()

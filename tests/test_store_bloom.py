@@ -6,6 +6,7 @@ and without pruning."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -179,3 +180,59 @@ def test_python_datasource_pushdown_uses_blooms(spark, tmp_path):
         .count()
         == 0
     )
+
+
+# -- value-type gating: sidecars only for integral/string columns, whose
+# writer canonical form (Spark cast-to-string) equals the Python probe's
+# str(value); the sidecar records its value family and the prober refuses
+# mismatched or legacy (untyped) sidecars, so a probe never yields a bloom
+# FALSE NEGATIVE ------------------------------------------------------------
+
+
+def test_bloom_not_built_for_double_column(spark, tmp_path):
+    """A double bloom_col used to build a sidecar hashing "5.0" while the
+    probe hashed "5" — a guaranteed false negative. Now the sidecar is
+    simply not built, so the segment is conservatively kept and the read
+    stays exact."""
+    store = TableStore(
+        spark, str(tmp_path / "t"), key="id", bloom_cols=("score", "id")
+    )
+    store.init(
+        spark.createDataFrame(
+            [(1, 5.0), (2, 7.5)], "id long, score double"
+        )
+    )
+    seg_dir = os.path.join(store.root, "_seg000000")
+    assert not os.path.exists(os.path.join(seg_dir, "_bloom_score.bin"))
+    # integral sibling still gets its sidecar (typed)
+    with open(os.path.join(seg_dir, "_bloom_id.json")) as f:
+        assert json.load(f)["vtype"] == "int"
+    # the advisor's exact probe: int 5 against double 5.0 must match
+    assert store.read(predicate={"score": 5}).count() == 1
+
+
+def test_bloom_probe_family_must_match_sidecar(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path / "t"), key="id", bloom_cols=("id",))
+    store.init(spark.createDataFrame([(5, "a"), (7, "b")], "id long, v string"))
+    seg = os.path.join(store.root, "_seg000000")
+    # matching family loads; mismatched or legacy-untyped refuses
+    assert B.load_bloom(seg, "id", "int") is not None
+    assert B.load_bloom(seg, "id", "str") is None
+    meta_path = os.path.join(seg, "_bloom_id.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["vtype"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert B.load_bloom(seg, "id", "int") is None  # legacy: never prune
+    # and the read path stays exact (segment kept, filter applied)
+    assert store.read(predicate={"id": 5}).count() == 1
+
+
+def test_probe_family_rules():
+    assert B.probe_family([1, 2]) == "int"
+    assert B.probe_family(["a", "b"]) == "str"
+    assert B.probe_family([1, "a"]) is None  # mixed
+    assert B.probe_family([True]) is None  # bool is not int here
+    assert B.probe_family([5.0]) is None
+    assert B.probe_family([dt.date(2024, 1, 1)]) is None

@@ -8,6 +8,7 @@ columns are ~free under parquet RLE), so every read path is unchanged.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -460,3 +461,77 @@ def test_compact_zorder_within_partitions_prunes_2d(spark, tmp_path):
         max_segments=8, zorder_by=("xa", "xb"), n_segments=2
     )
     assert store.read().count() == 1604
+
+
+# -- partition-value pruning: mixed timestamp spellings compare
+# canonically (a stored "2024-01-02 05:00:00" vs an ISO "...T05:00:00"
+# bound must match, not raw-string-compare ' ' < 'T'), and a date-partition
+# replaceWhere prunes by partition values (dates get no footer stats) ------
+
+
+def test_partition_match_mixed_timestamp_separators():
+    may = TableStore._partition_may_match
+    # stored via json default=str (space separator), probed ISO ('T'):
+    # identical instants must MATCH, not prune (' ' < 'T' raw-compare bug)
+    part = {"ts": "2024-01-02 05:00:00"}
+    assert may(part, {"ts": "2024-01-02T05:00:00"})
+    assert may(part, {"ts": ("2024-01-02T00:00:00", "2024-01-02T23:59:59")})
+    # genuinely outside the bound still prunes, across spellings
+    assert not may(part, {"ts": ("2024-01-03T00:00:00", None)})
+    assert not may(part, {"ts": ("2024-01-02 05:00:01", None)})
+    # datetime/date objects as bounds compare canonically too
+    assert may(part, {"ts": dt.datetime(2024, 1, 2, 5, 0, 0)})
+    assert not may(part, {"ts": (dt.datetime(2024, 1, 2, 5, 0, 1), None)})
+    # non-temporal junk bound proves nothing: keep
+    assert may(part, {"ts": "not-a-timestamp"})
+    # aware-vs-naive is incomparable: keep
+    assert may(part, {"ts": "2024-01-02T05:00:00+07:00"})
+
+
+def test_partitioned_timestamp_table_reads_exact(spark, tmp_path):
+    store = TableStore(
+        spark, str(tmp_path / "t"), key="id", partition_by=("day",)
+    )
+    rows = [
+        (1, dt.datetime(2024, 1, 1, 5, 0, 0), "a"),
+        (2, dt.datetime(2024, 1, 2, 5, 0, 0), "b"),
+        (3, dt.datetime(2024, 1, 3, 5, 0, 0), "c"),
+    ]
+    store.init(
+        spark.createDataFrame(rows, "id long, day timestamp, v string")
+    )
+    # ISO-'T' probe of a str(datetime)-stored partition value: must match
+    hit = store.read(predicate={"day": "2024-01-02T05:00:00"})
+    assert [r.v for r in hit.collect()] == ["b"]
+    rng = store.read(
+        predicate={"day": ("2024-01-02T00:00:00", "2024-01-02T23:59:59")}
+    )
+    assert [r.v for r in rng.collect()] == ["b"]
+    # and pruning still actually prunes on the canonical compare
+    assert len(rng.inputFiles()) < len(store.read().inputFiles())
+
+
+def test_overwrite_where_prunes_by_date_partition(spark, tmp_path):
+    store = TableStore(
+        spark, str(tmp_path / "t"), key="id", partition_by=("day",)
+    )
+    rows = [
+        (i, dt.date(2024, 1, 1 + (i % 3)), f"v{i}") for i in range(9)
+    ]
+    store.init(spark.createDataFrame(rows, "id long, day date, v string"))
+    before = store._snapshot(store.current_version())["segments"]
+    assert len(before) == 3  # one per day — and days get NO footer stats
+
+    repl = spark.createDataFrame(
+        [(100, dt.date(2024, 1, 2), "NEW")], "id long, day date, v string"
+    )
+    store.overwrite_where(repl, {"day": dt.date(2024, 1, 2)})
+    after = store._snapshot(store.current_version())["segments"]
+    # the two other day-partitions are reused BY REFERENCE, not rewritten
+    reused = [s for s in after if s in before]
+    assert len(reused) == 2
+    got = sorted(
+        (r.day, r.v) for r in store.read().collect() if r.day.day == 2
+    )
+    assert got == [(dt.date(2024, 1, 2), "NEW")]
+    assert store.read().count() == 7  # 3 + 3 survivors + 1 replacement

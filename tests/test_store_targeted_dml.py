@@ -442,3 +442,140 @@ def test_key_relation_paths_match_python_model(spark, tmp_path, ktype):
         upsert([(8, 400), (3, 401)], "rewrite")  # rewrites dv-masked files
         results.append(check())
     assert results[0] == results[1]
+
+
+def test_noop_deletes_commit_nothing_and_keyed_delete_jobs(
+    spark, tmp_path, count_jobs
+):
+    """A delete that removes nothing commits nothing, in both modes of
+    both deletes; and a 1-key rewrite-mode delete_keys reads its touched
+    base once (persisted, one count, one write): under 8 Spark jobs."""
+    st = TableStore(spark, str(tmp_path / "t"), key="id", stats_cols=("id",))
+    st.init(spark.range(20).selectExpr("id", "id * 2 AS x"))
+    gone = spark.createDataFrame([(5,)], "id long")
+    assert st.delete_keys(gone) == 1
+    v = st.current_version()
+    for mode in ("rewrite", "dv"):
+        assert st.delete_keys(gone, mode=mode) == 0
+        assert st.delete_where(where="x = 10", predicate={"id": (0, 9)}, mode=mode) == 0
+        assert st.current_version() == v
+    n, removed = count_jobs(
+        lambda: st.delete_keys(spark.createDataFrame([(6,)], "id long"))
+    )
+    assert removed == 1
+    assert n < 8
+    assert sorted(r.id for r in st.read().collect()) == [
+        i for i in range(20) if i not in (5, 6)
+    ]
+
+
+def test_multi_row_key_ops_match_list_model(spark, tmp_path):
+    """Model-based check on a table whose key repeats across rows (the
+    lake's events/messages shape), partitioned, with bloom sidecars on
+    the key: one fixed seed drives every targeted statement in every mode
+    it has, and after each the table must equal a Python list-of-rows
+    model. Rewrite mode is row-exact; dv mode masks by key, so a
+    statement matching only some of a key's rows must raise and change
+    nothing. (A dict model cannot see a lost sibling row.)"""
+    import random
+
+    rng = random.Random(11)
+    schema = "sid string, eid long, day string, v string"
+    days = ("d0", "d1")
+    st = TableStore(
+        spark, str(tmp_path / "m"), key="sid", stats_cols=("sid", "eid"),
+        bloom_cols=("sid",), partition_by=("day",),
+    )
+    model = []
+    eid = 0
+
+    def fresh(sid, n):
+        nonlocal eid
+        out = []
+        for _ in range(n):
+            out.append((sid, eid, rng.choice(days), f"v{eid}"))
+            eid += 1
+        return out
+
+    for k in range(6):
+        model += fresh(f"s{k}", 3)
+    st.init(spark.createDataFrame(model, schema))
+
+    def where_rows(rows, where):
+        kind, arg = where
+        if kind == "key":
+            return [r for r in rows if r[0] == arg]
+        if kind == "day":
+            return [r for r in rows if r[2] == arg]
+        return [r for r in rows if r[1] % 2 == arg]
+
+    def sql(where):
+        kind, arg = where
+        return {"key": f"sid = '{arg}'", "day": f"day = '{arg}'"}.get(
+            kind, f"eid % 2 = {arg}"
+        )
+
+    def whole_keys(matched, scope):
+        keys = {r[0] for r in matched}
+        return len(matched) == sum(r[0] in keys for r in scope)
+
+    ops = [
+        (op, mode)
+        for op in ("upsert", "update", "delete_where", "delete_keys")
+        for mode in ("rewrite", "dv")
+    ] + [("overwrite_where", "rewrite")]
+    rng.shuffle(ops)
+    for step, (op, mode) in enumerate(ops):
+        sids = sorted({r[0] for r in model})
+        where = rng.choice(
+            [("key", rng.choice(sids)), ("day", rng.choice(days)), ("eid", step % 2)]
+        )
+        before = st.current_version()
+        raised = False
+        if op == "upsert":
+            keys = rng.sample(sids, 1) + [f"n{step}"]
+            src = [r for k in keys for r in fresh(k, rng.randint(1, 2))]
+            st.upsert(spark.createDataFrame(src, schema), mode=mode)
+            model = [r for r in model if r[0] not in keys] + src
+        elif op == "update":
+            hit = where_rows(model, where)
+            if mode == "dv" and not whole_keys(hit, model):
+                with pytest.raises(ValueError, match="SOME rows"):
+                    st.update({"v": f"'u{step}'"}, where=sql(where), mode=mode)
+                raised = True
+            else:
+                n = st.update({"v": f"'u{step}'"}, where=sql(where), mode=mode)
+                assert n == len(hit)
+                model = [
+                    (r[0], r[1], r[2], f"u{step}") if r in hit else r for r in model
+                ]
+        elif op == "delete_where":
+            day = rng.choice(days)
+            scope = [r for r in model if r[2] == day]
+            hit = where_rows(scope, where)
+            if mode == "dv" and not whole_keys(hit, scope):
+                with pytest.raises(ValueError, match="SOME rows"):
+                    st.delete_where(sql(where), predicate={"day": day}, mode=mode)
+                raised = True
+            else:
+                removed = st.delete_where(
+                    sql(where), predicate={"day": day}, mode=mode
+                )
+                assert removed == len(hit)
+                model = [r for r in model if r not in hit]
+        elif op == "delete_keys":
+            keys = rng.sample(sids, 2)
+            removed = st.delete_keys(
+                spark.createDataFrame([(k,) for k in keys], "sid string"), mode=mode
+            )
+            assert removed == sum(r[0] in keys for r in model)
+            model = [r for r in model if r[0] not in keys]
+        else:
+            day = rng.choice(days)
+            src = [(s, e, day, v) for s, e, _, v in fresh(rng.choice(sids), 2)]
+            st.overwrite_where(spark.createDataFrame(src, schema), {"day": day})
+            model = [r for r in model if r[2] != day] + src
+        if raised:
+            assert st.current_version() == before
+        got = sorted(tuple(r) for r in st.read().collect())
+        assert got == sorted(model), f"step={step} op={op} mode={mode} where={where}"

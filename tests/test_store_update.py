@@ -141,3 +141,27 @@ def test_update_pruned_to_pre_evolution_segment_keeps_schema(spark, tmp_path):
     assert (1, 101, None) in got
     assert (7, 7, "n") in got  # evolved column intact in untouched rows
     assert len(got) == 10
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_update_spares_unmatched_rows_of_a_repeating_key(spark, tmp_path, mode):
+    """The lake's events/messages shape: many rows per key. An UPDATE
+    whose WHERE matches one row of a key must leave the key's other rows
+    alone — rewrite mode is row-exact; dv mode masks by key, so it raises
+    instead (and commits nothing). Both modes used to upsert the
+    post-images, whose key anti-join dropped the spared sibling rows."""
+    store = TableStore(spark, str(tmp_path / "k"), key="sid")
+    rows = [("s1", 1, "a"), ("s1", 2, "b"), ("s2", 3, "c")]
+    store.init(spark.createDataFrame(rows, "sid string, eid long, v string"))
+    v = store.current_version()
+    if mode == "dv":
+        with pytest.raises(ValueError, match="SOME rows"):
+            store.update({"v": "'X'"}, where="eid = 1", mode="dv")
+        assert store.current_version() == v
+        # a WHERE that matches whole keys is fine in dv mode
+        assert store.update({"v": "'Y'"}, where="eid = 3", mode="dv") == 1
+        rows[2] = ("s2", 3, "Y")
+    else:
+        assert store.update({"v": "'X'"}, where="eid = 1") == 1
+        rows[0] = ("s1", 1, "X")
+    assert sorted(tuple(r) for r in store.read().collect()) == rows

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -755,3 +756,70 @@ def test_stream_trending_terms_matches_batch(spark, tmp_path):
     assert not any("16:00:00" in w for w, _ in got)  # open window withheld
     assert got[("2026-01-01 10:00:00", "spark")] == 3
     assert got[("2026-01-01 11:00:00", "window")] == 3
+
+
+# -- cancel_execution's drain accepts only a micro-batch whose trigger
+# started after the tombstone write as proof it was consumed -------------
+
+
+class _FakeQuery:
+    """lastProgress replays a scripted sequence; stop() records itself."""
+
+    def __init__(self, progresses):
+        self._progresses = list(progresses)
+        self.stopped = False
+
+    @property
+    def lastProgress(self):
+        if len(self._progresses) > 1:
+            return self._progresses.pop(0)
+        return self._progresses[0]
+
+    def stop(self):
+        self.stopped = True
+
+
+def _iso(offset_sec: float) -> str:
+    from datetime import datetime, timedelta, timezone
+
+    t = datetime.now(timezone.utc) + timedelta(seconds=offset_sec)
+    return t.isoformat().replace("+00:00", "Z")
+
+
+def test_cancel_drain_skips_preflight_batch(tmp_path):
+    """A batch that STARTED before the tombstone write (listed its files
+    pre-tombstone) must not satisfy the drain even though its batchId
+    advanced and it consumed input — the old break condition's exact
+    false positive."""
+    import time
+
+    from lakehouse_spark.streaming.live import cancel_execution
+
+    stale = {"batchId": 7, "numInputRows": 3, "timestamp": _iso(-30)}
+    q = _FakeQuery([stale])
+    t0 = time.monotonic()
+    cancel_execution(
+        str(tmp_path), "s1", "2024-01-01T00:00:00Z", 99, query=q,
+        drain_timeout_sec=1.0,
+    )
+    # never satisfied -> waited out the full (short) drain budget
+    assert time.monotonic() - t0 >= 0.9
+    assert q.stopped
+
+
+def test_cancel_drain_accepts_post_tombstone_batch(tmp_path):
+    import time
+
+    from lakehouse_spark.streaming.live import cancel_execution
+
+    stale = {"batchId": 7, "numInputRows": 3, "timestamp": _iso(-30)}
+    fresh = {"batchId": 8, "numInputRows": 1, "timestamp": _iso(5)}
+    q = _FakeQuery([stale, stale, fresh])
+    t0 = time.monotonic()
+    path = cancel_execution(
+        str(tmp_path), "s1", "2024-01-01T00:00:00Z", 99, query=q,
+        drain_timeout_sec=30.0,
+    )
+    assert time.monotonic() - t0 < 10  # broke on the fresh batch, not timeout
+    assert q.stopped
+    assert os.path.exists(path)

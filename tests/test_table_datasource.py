@@ -759,3 +759,37 @@ def test_stream_writer_batch_commits_are_delta_manifests(spark, tmp_path):
         assert raw.get("delta") == 1 and "segments" not in raw, (v, raw.keys())
         assert "txn_set" in raw  # exactly-once watermark rode the delta
     assert b._snapshot(head) == load_snapshot(dst, head)
+
+
+# -- a streaming empty micro-batch on a NOT-yet-created table commits
+# nothing (a zero-segment manifest would leave it unreadable) -------------
+
+
+def test_stream_empty_first_batch_leaves_table_uncreated(spark, tmp_path):
+    src_dir = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src_dir)
+    stream = (
+        spark.readStream.schema("id long, v string").json(src_dir)
+        .writeStream.format("lakehouse")
+        .option("path", out)
+        .option("txnAppId", "empty_first")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    # batch 0 with zero input files: nothing may be committed at all
+    q = stream.start()
+    q.awaitTermination(120)
+    store = TableStore(spark, out, key="id")
+    assert store.current_version() is None
+    # the first DATA batch then creates a normal, readable v0
+    with open(os.path.join(src_dir, "a.jsonl"), "w") as f:
+        f.write(json.dumps({"id": 1, "v": "x"}) + "\n")
+    q = stream.start()
+    q.awaitTermination(120)
+    assert [r.v for r in store.read().collect()] == ["x"]
+    # later empty batches on an EXISTING table still advance the watermark
+    q = stream.start()
+    q.awaitTermination(120)
+    assert store.read().count() == 1

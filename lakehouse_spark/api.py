@@ -37,6 +37,7 @@ from lakehouse_spark.operators.sessionize import (
     trace_metrics,
 )
 from lakehouse_spark.plans import closure
+from lakehouse_spark.session import local_frame
 
 
 class SessionLake:
@@ -176,11 +177,13 @@ class SessionLake:
     # -- transcripts / events --------------------------------------------------
 
     def message_tail(self, session_id: str, n: int = 50) -> DataFrame:
-        """O4: last n messages in log order (manager.py:343-345)."""
+        """O4: last n messages in log order (manager.py:343-345). One
+        session's tail is a top-n (one ``TakeOrderedAndProject``, one
+        Spark job); :func:`sorts.tail_n` serves per-group tails."""
         msgs = self.messages.read().filter(F.col("session_id") == session_id)
-        return sorts.tail_n(
-            msgs, "session_id", [F.desc("encounter_seq")], n
-        ).orderBy("encounter_seq")
+        return sorts.top_n(msgs, [F.desc("encounter_seq")], n).orderBy(
+            "encounter_seq"
+        )
 
     def events_page(
         self,
@@ -226,13 +229,17 @@ class SessionLake:
         return aggregate_trace(ev)
 
     def trace_metrics(self, session_id: str | None = None) -> DataFrame:
-        """A3: per-session tool metrics over the derived turns."""
+        """A3: per-session tool metrics over the derived turns — one
+        aggregate over one evaluation of the trace fold."""
         return trace_metrics(self.execution_trace(session_id))
 
     # -- hierarchy -------------------------------------------------------------
 
     def session_closure(self, session_id: str) -> DataFrame:
-        """J3: the session and all its descendants (clone/delete base)."""
+        """J3: the session and all its descendants (clone/delete base).
+        The seed is a LocalRelation, so a lake whose session tree fits the
+        driver walk (:func:`closure.descendants`) answers with one Spark
+        job: the bounded collect of the edges."""
         edges = (
             self.sessions.read()
             .select(
@@ -241,7 +248,7 @@ class SessionLake:
             )
             .filter(F.col("parent").isNotNull())
         )
-        seeds = self.spark.createDataFrame([(session_id,)], "child string")
+        seeds = local_frame(self.spark, [(session_id,)], "child string")
         return closure.descendants(edges, seeds, "parent", "child")
 
     def clone_session(self, session_id: str, seed: str | None = None) -> str:
@@ -260,10 +267,10 @@ class SessionLake:
           ids (the reference copies the JSONL files; payload contents are
           NOT rewritten there either).
 
-        Scale shape: one closure (bounded-depth frontier joins), then three
-        broadcast-mapping joins — the subtree mapping is tiny next to the
-        messages/events tables, which are never shuffled. Returns the new
-        root session id."""
+        Scale shape: one closure (a driver walk, or bounded-depth frontier
+        joins on a large tree), then three broadcast-mapping joins — the
+        subtree mapping is tiny next to the messages/events tables, which
+        are never shuffled. Returns the new root session id."""
         sess = self.sessions.read()
         if sess.filter(F.col("session_id") == session_id).isEmpty():
             # the reference's clone endpoint 404s on unknown sessions; a

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_spark.functions.cron import next_execution_udf
 from lakehouse_spark.mutation.store import TableStore
+from lakehouse_spark.session import local_frame
 
 
 def with_next_execution(automations: DataFrame, now: datetime) -> DataFrame:
@@ -154,7 +155,8 @@ class AutomationManager:
             ) + 1
         else:
             seq = 1
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [
                 (
                     automation_id, project_id, name, message,
@@ -187,8 +189,8 @@ class AutomationManager:
         d["updated_at"] = ts
         from lakehouse_spark.schemas import AUTOMATION
 
-        row = self.spark.createDataFrame(
-            [tuple(d[f.name] for f in AUTOMATION.fields)], AUTOMATION
+        row = local_frame(
+            self.spark, [tuple(d[f.name] for f in AUTOMATION.fields)], AUTOMATION
         )
         self.automations.upsert(row)
         self.schedule(automation_id, now)
@@ -202,7 +204,7 @@ class AutomationManager:
         manager.py:219-257)."""
         if self.get(automation_id) is None:
             return False
-        ids = self.spark.createDataFrame([(automation_id,)], "id string")
+        ids = local_frame(self.spark, [(automation_id,)], "id string")
         self.automations.delete_keys(ids)
         if self.executions.exists():
             ex = self.executions.read()
@@ -266,7 +268,7 @@ class AutomationManager:
                 )
             )
         self.record_execution(
-            self.automations.spark.createDataFrame(rows, EXECUTION), now
+            local_frame(self.automations.spark, rows, EXECUTION), now
         )
         return len(rows)
 

@@ -67,7 +67,8 @@ class _Targets(NamedTuple):
     aligned to the full logical schema. Keyed targeting adds the sorted
     non-null source ``keys`` and the key set ``rel`` to join against
     (broadcast LocalRelation; above the cap, keys None and ``rel`` the
-    distributed key frame), and the source ``rows`` / ``null_rows``."""
+    distributed key frame), the source ``rows`` / ``null_rows``, and
+    ``dup``, the least non-null key the source holds more than once."""
 
     version: int
     manifest: dict
@@ -78,6 +79,7 @@ class _Targets(NamedTuple):
     rel: DataFrame | None = None
     rows: int | None = None
     null_rows: int | None = None
+    dup: object = None
 
 
 class DmlMixin:
@@ -116,11 +118,13 @@ class DmlMixin:
         counts = source.groupBy(self.key).count()
         tbl = counts.limit(self.max_targeted_keys + 2).toArrow()
         keyed = tbl.filter(pc.is_valid(tbl.column(0)))
-        keys = rows = null_rows = None
+        keys = rows = null_rows = dup = None
         if keyed.num_rows <= self.max_targeted_keys:
             keys = sorted(keyed.column(0).to_pylist())
             rows = pc.sum(tbl.column(1)).as_py() or 0
             null_rows = rows - (pc.sum(keyed.column(1)).as_py() or 0)
+            many = keyed.filter(pc.greater(keyed.column(1), 1)).column(0)
+            dup = min(many.to_pylist(), default=None)
         rel = None
         if keys is None:
             rel = counts.select(self.key).filter(F.col(self.key).isNotNull())
@@ -141,7 +145,9 @@ class DmlMixin:
         # The key column is rename-guarded: the logical name IS physical.
         rebase = None if keys is None else {self.key: keys}
         base = self._aligned_base(manifest, touched, v0)
-        return _Targets(v0, manifest, touched, rebase, base, keys, rel, rows, null_rows)
+        return _Targets(
+            v0, manifest, touched, rebase, base, keys, rel, rows, null_rows, dup
+        )
 
     def _pred_targets(self, v0: int, predicate: dict | None) -> _Targets:
         """Predicated targeting: the segments :meth:`_segments_matching`
@@ -821,6 +827,34 @@ class DmlMixin:
             self._commit_cow(out, t.touched, v0, t.rebase_pred, txn)
         return n
 
+    def _reject_merge_dups(self, source: DataFrame, t: _Targets | None = None):
+        """Raise when ``source`` holds a non-null key twice: a duplicate
+        key would fan matched target rows out. NULL keys never satisfy the
+        equi-join, so they are exempt (two null-key source rows are legal;
+        with insert=True each simply inserts, the standard MERGE outcome
+        for unmatched rows). ``t``'s per-key row counts answer without a
+        Spark job; with no table yet, or a source above the key cap, one
+        job looks."""
+        if t is not None and t.keys is not None:
+            k = t.dup
+        else:
+            dup = (
+                source.filter(F.col(self.key).isNotNull())
+                .groupBy(self.key)
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .collect()
+            )
+            k = dup[0][self.key] if dup else None
+        if k is not None:
+            raise ValueError(
+                f"merge source has multiple rows for key {k!r}; a duplicate "
+                "key would fan matched target rows out (Delta raises "
+                "'multiple source rows matched' here too) — dedupe the "
+                "source first"
+            )
+
     def merge(
         self,
         source: DataFrame,
@@ -877,27 +911,8 @@ class DmlMixin:
         # INSERTs carry them; an UPDATE whose clause leaves a generated
         # column stale is caught by the write-time enforcement instead.
         source = self._apply_generated(source)
-        # NULL keys never satisfy the equi-join, so they cannot fan a
-        # matched target row out — exclude them from the duplicate check
-        # (two null-key source rows are legal; with insert=True each
-        # simply inserts, the standard MERGE outcome for unmatched rows).
-        dup = (
-            source.filter(F.col(self.key).isNotNull())
-            .groupBy(self.key)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            k = dup[0][self.key]
-            raise ValueError(
-                f"merge source has multiple rows for key {k!r}; a duplicate "
-                "key would fan matched target rows out (Delta raises "
-                "'multiple source rows matched' here too) — dedupe the "
-                "source first"
-            )
         if not self.exists():
+            self._reject_merge_dups(source)
             if insert:
                 self.init(source, txn=txn)
             return
@@ -908,6 +923,7 @@ class DmlMixin:
         # the unknown-column check and clause evaluation below are
         # byte-identical to the untargeted form.
         t = self._key_targets(source, self._dml_head(), relation=False)
+        self._reject_merge_dups(source, t)
         base = t.base
         unknown = [c for c in source.columns if c not in base.columns]
         if unknown and extra_cols == "error":

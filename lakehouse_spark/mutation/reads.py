@@ -20,6 +20,7 @@ from lakehouse_spark.mutation.manifest import (
     _segment_may_match,
     load_snapshot_pruned,
 )
+from lakehouse_spark.session import local_frame
 
 
 # Warm snapshots at or under this many segments keep the zero-IO
@@ -177,7 +178,8 @@ class ReadsMixin:
         ``field`` (nullable): real size statistics, so Spark broadcasts it
         with a one-task job — never shuffles it — and folds filters into
         it while optimizing."""
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             keys,
             StructType([StructField(field.name, field.dataType, True)]),
         )

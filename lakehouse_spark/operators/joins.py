@@ -8,8 +8,8 @@ Catalyst + AQE. Our job here is to give the optimizer the right hints:
   fact side never moves, only the dim ships to executors.
 - **Semi/anti joins** for existence checks — never a join+distinct, which
   would shuffle the big side twice.
-- Recursive closure lives in :mod:`lakehouse_spark.plans.closure` (Spark 4
-  recursive CTE with an iterative-join fallback).
+- Recursive closure lives in :mod:`lakehouse_spark.plans.closure` (a
+  driver walk for small graphs, iterative frontier joins for large ones).
 
 Provenance: index semi-join fetch ← sessions/manager.py:383-406; parent→child
 self-join ← manager.py:404; FK lookup ← automation_scheduler.py:379-390;

@@ -494,40 +494,36 @@ def last_auto_split() -> bool | None:
 # --- A3: per-session tool metrics ----------------------------------------------
 
 
+_TRACE_METRICS_SQL = """
+SELECT session_id, total_tools, avg_tool_duration,
+       mx.d AS max_tool_duration, mx.n AS longest_tool, total_thinking
+FROM (
+  SELECT session_id,
+         count(t.id) AS total_tools,
+         round(avg(t.duration), 4) AS avg_tool_duration,
+         max(IF(t.duration IS NOT NULL,
+                struct(t.duration AS d, t.id AS i, t.name AS n), NULL)) AS mx,
+         sum(IF(coalesce(pos, 0) = 0 AND thinking IS NOT NULL,
+                size(filter(thinking, th -> th.start_time IS NOT NULL)), 0))
+           AS total_thinking
+  FROM {turns} LATERAL VIEW OUTER posexplode(tools) AS pos, t
+  GROUP BY session_id
+)
+"""
+
+
 def trace_metrics(turns: DataFrame) -> DataFrame:
     """A3 ← webapp useExecutionState.ts:85-112: totalTools, totalThinking,
     avgToolDuration, longestTool (argmax by duration, deterministic via
-    struct-max tiebreak on tool id)."""
-    tools = turns.select(
-        "session_id", F.explode_outer("tools").alias("t")
-    ).select("session_id", "t.*")
-    thinking = turns.select(
-        "session_id", F.explode_outer("thinking").alias("th")
-    ).groupBy("session_id").agg(
-        F.count(F.col("th.start_time")).alias("total_thinking")
-    )
-    finished = tools.filter(F.col("duration").isNotNull())
-    metrics = tools.groupBy("session_id").agg(
-        F.count(F.col("id")).alias("total_tools"),
-    )
-    durations = finished.groupBy("session_id").agg(
-        F.round(F.avg("duration"), 4).alias("avg_tool_duration"),
-        F.max(
-            F.struct(
-                F.col("duration").alias("d"), F.col("id").alias("i"),
-                F.col("name").alias("n"),
-            )
-        ).alias("__mx"),
-    ).select(
-        "session_id",
-        "avg_tool_duration",
-        F.col("__mx.d").alias("max_tool_duration"),
-        F.col("__mx.n").alias("longest_tool"),
-    )
-    return (
-        metrics.join(durations, "session_id", "left")
-        .join(thinking, "session_id", "left")
-    )
+    struct-max tiebreak on tool id).
+
+    One aggregate over one evaluation of ``turns``: each turn row explodes
+    its tools (OUTER, so a turn without tools still counts its thinking);
+    the turn's thinking entries with a start time count on its first row
+    only. ``avg`` and the struct ``max`` see finished tools only (a NULL
+    duration is skipped), so a session with none reads NULL there. A NULL
+    ``session_id`` is one group with its own metrics."""
+    return turns.sparkSession.sql(_TRACE_METRICS_SQL, turns=turns)
 
 
 def gap_sessions(

@@ -26,6 +26,8 @@ from lakehouse_spark.queries._core import (
     _ssum_sql,
     _t,
 )
+from lakehouse_spark.session import local_frame
+
 
 @_q(
     "j1_semi_join_fetch",
@@ -97,7 +99,7 @@ def j3_recursive_descendants(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("c_custkey") / 2).cast("long").alias("parent"),
         F.col("c_custkey").alias("child"),
     ).filter(F.col("child") > 1)
-    seeds = spark.createDataFrame([(1,)], "child long")
+    seeds = local_frame(spark, [(1,)], "child long")
     out = closure.descendants(edges, seeds, "parent", "child", max_depth=4)
     return out.select(
         F.col("child").alias("custkey"), F.col("depth").cast("int").alias("depth")
@@ -135,7 +137,7 @@ def j3_clone_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("c_custkey") / 2).cast("long").alias("parent"),
         F.col("c_custkey").alias("child"),
     ).filter(F.col("child") > 1)
-    seeds = spark.createDataFrame([(1,)], "child long")
+    seeds = local_frame(spark, [(1,)], "child long")
     sub = closure.descendants(edges, seeds, "parent", "child", max_depth=4)
     mapping = closure.clone_id_mapping(sub.select("child"), "child", seed="42")
     parents = mapping.select(
@@ -1077,11 +1079,12 @@ def w8_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Single-source shortest hop distance (BFS layers, depth cap 15) "
         "from the minimum user id over the undirected user-adjacency "
-        "graph. Spark side reuses plans/closure.descendants: each round is "
-        "one broadcast(frontier) equi join + visited anti-join with a "
-        "localCheckpoint lineage cut, so a round costs O(frontier-adjacent "
-        "edges) and the loop is O(diameter) rounds — never an all-pairs or "
-        "driver-side graph. The oracle is the equivalent bounded "
+        "graph. Spark side reuses plans/closure.descendants: an edge list "
+        "under its driver cap is collected once and walked on the driver; "
+        "above it each round is one broadcast(frontier) equi join + visited "
+        "anti-join with a localCheckpoint lineage cut, so a round costs "
+        "O(frontier-adjacent edges) and the loop is O(diameter) rounds — "
+        "never an all-pairs plan. The oracle is the equivalent bounded "
         "recursive CTE with min(d) per node."
     ),
 )
@@ -1099,7 +1102,7 @@ def graph_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     seed_id = ev.agg(F.min("user_id")).collect()[0][0]
-    seeds = spark.createDataFrame([(seed_id,)], "dst BIGINT")
+    seeds = local_frame(spark, [(seed_id,)], "dst BIGINT")
     reached = descendants(
         und, seeds, parent_col="src", child_col="dst", max_depth=15
     )

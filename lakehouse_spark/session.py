@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS: dict[str, str] = {
     # Adaptive execution: the per-scale tuner. Coalesces small shuffle
@@ -99,6 +99,37 @@ def get_spark(
     except Exception:  # noqa: BLE001 — a session without the DS still works
         pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` — a list of tuples, or an Arrow table — as a DataFrame typed
+    by ``schema`` (a StructType or DDL string), built from Arrow: a
+    LocalRelation with real size statistics, so collecting it runs no
+    Spark job, joins broadcast it, and filters fold into it while
+    optimizing. A list-built frame is instead an RDD of pickled rows whose
+    every scan runs a Python task per core.
+
+    A naive datetime in a top-level TIMESTAMP column is local wall time,
+    the instant the list path gives it."""
+    from datetime import timezone
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = []
+        for i, f in enumerate(schema.fields):
+            vals = [r[i] for r in rows]
+            if isinstance(f.dataType, TimestampType):
+                # pyarrow keeps an aware datetime's wall time: hand it UTC
+                vals = [v and v.astimezone(timezone.utc) for v in vals]
+            cols.append(pa.array(vals, arrow.field(i).type))
+        rows = pa.Table.from_arrays(cols, schema=arrow)
+    return spark.createDataFrame(rows, schema)
 
 
 def cluster_conf(

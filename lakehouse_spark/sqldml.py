@@ -76,6 +76,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_spark.session import local_frame
+
 _DML_HEAD = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE)\b", re.I)
 
 
@@ -367,19 +369,11 @@ def extract_predicate(where: str, backslash_escapes: bool = True) -> dict:
 
 
 def _result(spark, op: str, table: str, affected: int) -> DataFrame:
-    """The statement's one-row result, built from Arrow: a LocalRelation,
-    so collecting it runs no Spark job (a list-built frame is an RDD scan
-    with one Python task per core)."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "op": [op],
-                "table": [table],
-                "affected_rows": pa.array([affected], pa.int64()),
-            }
-        ),
+    """The statement's one-row result (a LocalRelation: collecting it runs
+    no Spark job)."""
+    return local_frame(
+        spark,
+        [(op, table, affected)],
         "op string, table string, affected_rows long",
     )
 
@@ -1126,7 +1120,8 @@ def route_util(cat, query: str) -> DataFrame:
                 )
                 for e in store.history()
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "version long, n_segments long, committed_at double, "
                 "meta string, txn string",
@@ -1144,7 +1139,8 @@ def route_util(cat, query: str) -> DataFrame:
             _json_str(d["partition_by"]),
             d["num_partitions"],
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [row],
             "location string, version long, key string, num_segments long, "
             "num_data_files long, size_bytes long, "
@@ -1164,7 +1160,8 @@ def route_util(cat, query: str) -> DataFrame:
         out = store.vacuum(
             keep_last=int(keep) if keep else 2, dry_run=dry
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(name, len(out["names"]), out["n_files"], out["bytes"], dry)],
             "table string, entries long, n_files long, bytes long, "
             "dry_run boolean",
@@ -1185,7 +1182,8 @@ def route_util(cat, query: str) -> DataFrame:
         else:
             v = store.compact()
         _refresh_after(cat, name)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(name, v, store.n_segments())],
             "table string, version long, num_segments long",
         )
@@ -1204,9 +1202,7 @@ def route_util(cat, query: str) -> DataFrame:
             as_of=ts,
         )
         _refresh_after(cat, name)
-        return spark.createDataFrame(
-            [(name, v)], "table string, version long"
-        )
+        return local_frame(spark, [(name, v)], "table string, version long")
 
     if _ALTER_RE.match(q):
         name = _ALTER_RE.match(q).group(1)
@@ -1244,8 +1240,8 @@ def route_util(cat, query: str) -> DataFrame:
             if m:
                 v = fn(m.groups())
                 _refresh_after(cat, name)
-                return spark.createDataFrame(
-                    [(name, op, v)], "table string, op string, version long"
+                return local_frame(
+                    spark, [(name, op, v)], "table string, op string, version long"
                 )
         raise ValueError(
             "unsupported ALTER TABLE form; supported: RENAME COLUMN a TO "

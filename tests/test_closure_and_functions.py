@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import datetime, timezone
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lakehouse_spark.functions import cron, scalar
@@ -61,6 +64,91 @@ def test_nearest_ancestor_attr(spark):
         ).collect()
     }
     assert out == {"a/b/c/file": "p_mid", "a/x": "p_root", "z/q": None}
+
+
+# --- descendants: the driver walk against the frontier loop ---------------
+
+
+def _closure_rows(spark, monkeypatch, edges, seeds, loop: bool, **kw):
+    edf = spark.createDataFrame(edges, "parent long, child long")
+    sdf = spark.createDataFrame(seeds, "child long")
+    with monkeypatch.context() as m:
+        if loop:
+            m.setattr(closure, "_DRIVER_CAP", 0)
+        out = closure.descendants(edf, sdf, "parent", "child", **kw)
+        plan = out._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        # the driver walk answers with a LocalRelation, the loop with
+        # checkpointed steps: prove which path ran
+        assert (plan == "LocalRelation") != loop, plan
+        shape = [(f.name, f.dataType) for f in out.schema]
+        return shape, Counter(map(tuple, out.collect()))
+
+
+def _assert_paths_agree(spark, monkeypatch, edges, seeds, **kw):
+    driver = _closure_rows(spark, monkeypatch, edges, seeds, False, **kw)
+    loop = _closure_rows(spark, monkeypatch, edges, seeds, True, **kw)
+    assert driver == loop
+    return driver[1]
+
+
+@pytest.mark.parametrize(
+    "edges,seeds,kw",
+    [
+        # cycle 1→2→3→1 plus a self-loop on 3 and a diamond 2→{4,5}→6
+        ([(1, 2), (2, 3), (3, 1), (3, 3), (2, 4), (2, 5), (4, 6), (5, 6)],
+         [(1,)], {}),
+        # NULL parents never match; a NULL child is emitted once per round
+        # that reaches one (it is never "visited")
+        ([(None, 1), (1, None), (1, 2), (2, None), (2, 3), (None, None)],
+         [(1,)], {}),
+        # duplicate seeds, a NULL seed, a seed reached from another seed
+        ([(1, 2), (2, 3), (3, 4)], [(1,), (1,), (3,), (None,)], {}),
+        ([(1, 2), (2, 3), (3, 4), (4, 5)], [(1,)], {"max_depth": 2}),
+        ([(1, 2), (2, 3), (3, 1)], [(1,)], {"include_seeds": False}),
+        ([(1, 2)], [(7,)], {"max_depth": 0}),
+    ],
+    ids=["cycle-diamond-selfloop", "null-ends", "dup-seeds", "max-depth",
+         "no-seeds", "depth-zero"],
+)
+def test_descendants_driver_walk_matches_loop(spark, monkeypatch, edges, seeds, kw):
+    _assert_paths_agree(spark, monkeypatch, edges, seeds, **kw)
+
+
+def test_descendants_null_child_once_per_round(spark, monkeypatch):
+    got = _assert_paths_agree(
+        spark, monkeypatch, [(1, None), (1, 2), (2, None)], [(1,)]
+    )
+    assert got == Counter({(1, 0): 1, (2, 1): 1, (None, 1): 1, (None, 2): 1})
+
+
+@st.composite
+def _graphs(draw):
+    n = draw(st.integers(2, 7))
+    node = st.one_of(st.none(), st.integers(0, n - 1))
+    edges = draw(st.lists(st.tuples(node, node), max_size=14))
+    seeds = draw(st.lists(st.tuples(node), min_size=1, max_size=3))
+    return edges, seeds, draw(st.integers(0, 4))
+
+
+@given(_graphs())
+@settings(
+    max_examples=3, derandomize=True, database=None, deadline=None,
+    suppress_health_check=list(HealthCheck),
+)
+def test_descendants_paths_agree_on_generated_graph(spark, monkeypatch, g):
+    edges, seeds, depth = g
+    _assert_paths_agree(spark, monkeypatch, edges, seeds, max_depth=depth)
+
+
+def test_descendants_mixed_types_run_the_loop(spark):
+    # int seeds over long edges: not one driver-safe type, so the loop runs
+    # (and widens the node column the way unionByName does)
+    edges = spark.createDataFrame([(1, 2)], "parent long, child long")
+    seeds = spark.createDataFrame([(1,)], "child int")
+    out = closure.descendants(edges, seeds, "parent", "child")
+    plan = out._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    assert plan != "LocalRelation"
+    assert sorted(map(tuple, out.collect())) == [(1, 0), (2, 1)]
 
 
 # --- cron / interval / once (T9/T10/CR2) -----------------------------------

@@ -145,6 +145,24 @@ def test_execution_trace_and_metrics(lake):
     assert m["root"].longest_tool == "Bash"
 
 
+def test_daemon_reads_run_only_the_jobs_they_need(lake, count_jobs):
+    """A small session tree is walked on the driver after one bounded
+    collect of the edges (the seed is a LocalRelation: no job); a
+    one-session tail is one top-n; the trace metrics fold the turns once."""
+    lake.session_closure("root").collect()  # warm the store's caches
+    n, rows = count_jobs(lambda: lake.session_closure("root").collect())
+    assert n <= 2
+    assert {r.child for r in rows} == {"root", "child1", "grandchild"}
+
+    lake.message_tail("root", n=2).collect()
+    n, rows = count_jobs(lambda: lake.message_tail("root", n=2).collect())
+    assert n == 1
+    assert [r.content for r in rows] == ["hi", "bye"]
+
+    plan = lake.trace_metrics("root")._jdf.queryExecution().executedPlan()
+    assert plan.toString().count("FlatMapGroupsInPandas") == 1
+
+
 def test_closure_delete_and_cleanup(lake):
     ids = {r.child for r in lake.session_closure("root").collect()}
     assert ids == {"root", "child1", "grandchild"}

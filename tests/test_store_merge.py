@@ -168,6 +168,53 @@ def test_merge_allows_duplicate_null_source_keys(spark, tmp_path):
         s.merge(dup)
 
 
+@pytest.mark.parametrize("where", ["counts", "no-table", "above-key-cap"])
+def test_merge_duplicate_check_on_every_path(spark, tmp_path, monkeypatch, where):
+    """The source-key duplicate check reads ``_key_targets``'s per-key row
+    counts; with no table yet, or a source above the key cap, it runs its
+    own query. On every path NULL keys stay exempt and the error text
+    stays."""
+    s = TableStore(spark, str(tmp_path / "d"), key="id")
+    if where != "no-table":
+        s.init(spark.createDataFrame([(1, "a")], "id long, v string"))
+    if where == "above-key-cap":
+        monkeypatch.setattr(s, "max_targeted_keys", 1)
+    dup = spark.createDataFrame(
+        [(None, "n1"), (None, "n2"), (3, "x"), (4, "y"), (3, "z")],
+        "id long, v string",
+    )
+    with pytest.raises(ValueError, match=r"multiple rows for key 3; a duplicate"):
+        s.merge(dup)
+    s.merge(dup.filter("v != 'z'"))  # NULL keys twice: legal
+    assert sorted(str(r.id) for r in s.read().collect()) == sorted(
+        (["1"] if where != "no-table" else []) + ["None", "None", "3", "4"]
+    )
+
+
+def test_merge_duplicate_check_adds_no_job(spark, tmp_path, monkeypatch, count_jobs):
+    """Reading the duplicate check from the targeting counts saves the
+    standalone check's Spark jobs (two under AQE: the aggregate's shuffle
+    stage and the collect) on every merge into an existing table."""
+    src = spark.createDataFrame(
+        [(2, "B2", 22.0, "upd"), (4, "d", 40.0, "new")],
+        "id long, v string, amt double, note string",
+    )
+    real = TableStore._reject_merge_dups
+
+    def jobs(standalone):
+        with monkeypatch.context() as m:
+            if standalone:
+                m.setattr(
+                    TableStore, "_reject_merge_dups",
+                    lambda self, source, t=None: real(self, source),
+                )
+            s = _store(spark, tmp_path / str(standalone))
+            s.merge(src)  # warm
+            return count_jobs(lambda: s.merge(src))[0]
+
+    assert jobs(standalone=False) <= jobs(standalone=True) - 1
+
+
 def _merge_model(base_rows, src_rows, update_cond, delete_cond, insert):
     """Clause-by-clause reference MERGE over (id, x) pairs for the
     conditions the property tests use: DELETE before UPDATE, unmatched

@@ -208,6 +208,119 @@ def test_trace_metrics(spark):
     assert m["total_thinking"] == 1
 
 
+def _trace_metrics_three_joins(turns):
+    """The former A3 formulation, kept as the reference: three reads of
+    ``turns`` (tools, finished durations, thinking) joined on session_id."""
+    from pyspark.sql import functions as F
+
+    tools = turns.select(
+        "session_id", F.explode_outer("tools").alias("t")
+    ).select("session_id", "t.*")
+    thinking = turns.select(
+        "session_id", F.explode_outer("thinking").alias("th")
+    ).groupBy("session_id").agg(
+        F.count(F.col("th.start_time")).alias("total_thinking")
+    )
+    metrics = tools.groupBy("session_id").agg(
+        F.count(F.col("id")).alias("total_tools")
+    )
+    durations = tools.filter(F.col("duration").isNotNull()).groupBy(
+        "session_id"
+    ).agg(
+        F.round(F.avg("duration"), 4).alias("avg_tool_duration"),
+        F.max(
+            F.struct(
+                F.col("duration").alias("d"), F.col("id").alias("i"),
+                F.col("name").alias("n"),
+            )
+        ).alias("__mx"),
+    ).select(
+        "session_id",
+        "avg_tool_duration",
+        F.col("__mx.d").alias("max_tool_duration"),
+        F.col("__mx.n").alias("longest_tool"),
+    )
+    return metrics.join(durations, "session_id", "left").join(
+        thinking, "session_id", "left"
+    )
+
+
+def _tool(tid, name, duration):
+    return {"id": tid, "name": name, "duration": duration}
+
+
+def _think(start):
+    return {"start_time": start, "content": "x"}
+
+
+def _turn_frame(spark, turns):
+    from lakehouse_spark.schemas import TRACE_TURN
+
+    return spark.createDataFrame(
+        [(s, i, None, "completed", None, None, tools, th)
+         for i, (s, tools, th) in enumerate(turns)],
+        TRACE_TURN,
+    )
+
+
+def test_trace_metrics_one_fold_matches_three_joins(spark):
+    from lakehouse_spark.operators.sessionize import trace_metrics
+
+    turns = _turn_frame(
+        spark,
+        [
+            ("null_lists", None, None),
+            ("empty_lists", [], []),
+            ("unfinished", [_tool("tool_1", "A", None), _tool("tool_2", "B", None)],
+             [_think(1)]),
+            # thinking with a NULL start_time is not counted, and a turn's
+            # thinking counts once however many tools the turn holds
+            ("thinking", [_tool("tool_1", "A", 1.0), _tool("tool_2", "B", 2.0),
+                          _tool("tool_3", "C", None)],
+             [_think(None), _think(5), _think(6)]),
+            ("thinking", None, [_think(7)]),
+            ("thinking", [], None),
+            # equal durations: the larger tool id wins
+            ("ties", [_tool("tool_1", "A", 5.0), _tool("tool_2", "B", 5.0),
+                      _tool("tool_3", "C", 1.0)], None),
+            # a NULL tool id is not counted, but its duration is averaged
+            ("null_id", [_tool(None, "N", 3.0), _tool("tool_1", "A", 1.0)], []),
+        ],
+    )
+    new = trace_metrics(turns)
+    old = _trace_metrics_three_joins(turns)
+    assert [(f.name, f.dataType) for f in new.schema] == [
+        (f.name, f.dataType) for f in old.schema
+    ]
+    got = {r.session_id: r.asDict() for r in new.collect()}
+    assert got == {r.session_id: r.asDict() for r in old.collect()}
+    assert got["ties"]["longest_tool"] == "B"
+    assert got["thinking"]["total_thinking"] == 3
+    assert got["null_id"]["total_tools"] == 1
+    assert got["null_id"]["avg_tool_duration"] == 2.0
+    assert got["unfinished"]["avg_tool_duration"] is None
+    assert got["null_lists"]["total_thinking"] == 0
+
+
+def test_trace_metrics_null_session_id_is_one_group(spark):
+    """One aggregate gives the NULL session_id group its real metrics; the
+    former join form returned NULLs there (NULL keys never join)."""
+    from lakehouse_spark.operators.sessionize import trace_metrics
+
+    turns = _turn_frame(
+        spark,
+        [(None, [_tool("tool_1", "A", 2.0), _tool("tool_2", "B", 4.0)],
+          [_think(1)])],
+    )
+    (row,) = trace_metrics(turns).collect()
+    assert row.asDict() == {
+        "session_id": None, "total_tools": 2, "avg_tool_duration": 3.0,
+        "max_tool_duration": 4.0, "longest_tool": "B", "total_thinking": 1,
+    }
+    (old,) = _trace_metrics_three_joins(turns).collect()
+    assert old.total_tools == 2 and old.longest_tool is None
+
+
 def test_absent_result_stored_as_empty_string(spark):
     # Reference: result = data.get("result", "") → non-dict → str(result)
     # (trace_aggregator.py:157,177-179): a tool:post with no result payload

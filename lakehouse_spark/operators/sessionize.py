@@ -9,40 +9,34 @@ parallel_group_id), `thinking:delta` accumulates, `session:end` closes the
 turn, a new prompt implicitly closes the previous turn, and an unclosed turn
 at EOF stays `active`.
 
-Two implementations, deliberately:
+The window helpers (:func:`turn_number`, :func:`pair_tool_events`,
+:func:`turn_stats`) are pure Catalyst and replayable in ANSI SQL: turn
+assignment is a running count of markers, pre/post matching is rank
+pairing. They give the flattened S1 slice the DuckDB oracle checks, not the
+exact fold (the reference's edge cases, such as a dropped unmatched
+tool:post and first-running matching under interleaving, are sequential).
 
-1. **Window form** (:func:`turn_number`, :func:`pair_tool_events`,
-   :func:`turn_stats`): pure Catalyst — turn assignment is a running sum of
-   markers, pre/post matching is row_number pairing. Fully pushdown-able,
-   oracle-checkable in ANSI SQL, and the fast path at 100 TB (one shuffle on
-   session_id).
-2. **Grouped-map form** (:func:`aggregate_trace`): `applyInPandas` per
-   session reproducing the reference's exact fold, including the edge cases
-   the window form can't express relationally (unmatched tool:post dropped,
-   per-tool FIRST-running matching under interleaving). Used for the nested
-   TRACE_TURN output and validated by golden fixtures.
+The exact fold is :func:`aggregate_trace`, with one path: a window pre-pass
+gives each event its turn and each turn its starting state (turns and tools
+before it, and whether a later prompt closes it), then `applyInPandas`
+folds every (session, turn) group with :func:`_fold_session`, the reference
+fold that :func:`lakehouse_spark.streaming.live.stream_trace_turns` also
+runs from its saved state. Golden fixtures and a differential test against
+the whole-session fold check it.
 
 Spark's `session_window` is gap-based and CANNOT express marker semantics —
 that's why this operator exists (SURVEY.md §2.10 ST8).
 
-Scale: both forms shuffle once on session_id. applyInPandas state is
-per-session (bounded by one session's events); sessions are independent so
-1000 executors scale linearly. Skewed giant sessions are the risk — use
-``aggregate_trace(events, split_by_turn=True)``: a window-form turn
-pre-pass bounds every pandas group by the largest TURN instead of the
-largest session, with cross-turn state (implicit turn close, global tool
-ordinals) restored relationally afterwards.
+Scale: one shuffle on session_id; sessions are independent, so executors
+scale linearly. A pandas group holds one TURN, so a giant session is
+bounded by its largest turn, not by its length.
 """
 
 from __future__ import annotations
 
-
-import threading
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from lakehouse_spark.schemas import TRACE_TURN
 
@@ -235,7 +229,12 @@ def _child_session_id(output) -> str | None:
     return None
 
 
-def _fold_session(pdf: pd.DataFrame) -> pd.DataFrame:
+def _fold_session(
+    pdf: pd.DataFrame,
+    turn_offset: int = 0,
+    tool_offset: int = 0,
+    open_status: str = "active",
+) -> pd.DataFrame:
     """Reference fold for ONE session's events (already a single group).
 
     Semantics reproduced from trace_aggregator.py:75-211 (turn open 98-110,
@@ -243,12 +242,17 @@ def _fold_session(pdf: pd.DataFrame) -> pd.DataFrame:
     EOF 202-204) — behavior re-derived from reading, logic written fresh.
     Missing-field defaults mirror the reference's ``data.get(key, "")``
     pattern via :func:`_get` (null-as-absent).
+
+    The fold may start mid-session: ``turn_offset`` turns and
+    ``tool_offset`` tools came before these events, and a turn still open
+    at the end of them gets ``open_status`` ("completed" when a later
+    prompt, not given here, closes it). The defaults fold a whole session.
     """
     pdf = pdf.sort_values("encounter_seq", kind="stable")
     session_id = pdf["session_id"].iloc[0] if len(pdf) else None
     turns: list[dict] = []
     cur: dict | None = None
-    tool_seq = 0
+    tool_seq = tool_offset
 
     def close(status: str) -> None:
         # Running tools keep status "running" — the reference fold never
@@ -268,7 +272,7 @@ def _fold_session(pdf: pd.DataFrame) -> pd.DataFrame:
             close("completed")  # implicit close on back-to-back prompts
             cur = {
                 "session_id": session_id,
-                "turn_id": len(turns) + 1,
+                "turn_id": turn_offset + len(turns) + 1,
                 "user_message": _get(data, "prompt", ""),
                 "status": "active",
                 "start_time": ms,
@@ -348,147 +352,73 @@ def _fold_session(pdf: pd.DataFrame) -> pd.DataFrame:
             if cur is not None:
                 cur["end_time"] = ms
             close("completed")
-    close("active")  # trailing unclosed turn stays visible (ref :201-204)
+    close(open_status)  # trailing unclosed turn stays visible (ref :201-204)
 
     if not turns:
         return pd.DataFrame(columns=[f.name for f in TRACE_TURN.fields])
     return pd.DataFrame(turns)
 
 
-def _max_session_events(events: DataFrame) -> int:
-    """Largest per-session event count — the skew probe. One
-    map-side-combined count shuffle over (session_id); the shuffled
-    relation is one row per session, so the probe is metadata-cheap
-    relative to the fold it guards."""
-    rows = (
-        events.groupBy("session_id")
-        .count()
-        .agg(F.max("count").alias("m"))
-        .collect()
+# One session-ordered window pass gives every event its turn (the running
+# prompt count; events before the first prompt drop) and keeps only the
+# events the fold acts on: a prompt, or an event whose last earlier marker
+# is a prompt. Events after a turn's first session:end (until the next
+# prompt) are no-ops in the fold, so dropping them makes every kept tool:pre
+# a tool of its turn, and the tool ordinals of earlier turns are a count.
+# NULLS LAST is where _fold_session's sort puts a NULL encounter_seq.
+_TRACE_TURN_ROWS_SQL = """
+SELECT * EXCEPT (__turns, __marker), __turn = __turns AS __last,
+       coalesce(sum(IF(event = 'tool:pre', 1, 0)) OVER (
+         PARTITION BY session_id ORDER BY __turn
+         RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __tools_before
+FROM (
+  SELECT *,
+         sum(IF(event = 'prompt:submit', 1, 0)) OVER (
+           PARTITION BY session_id ORDER BY encounter_seq ASC NULLS LAST
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __turn,
+         sum(IF(event = 'prompt:submit', 1, 0)) OVER (
+           PARTITION BY session_id) AS __turns,
+         last(CASE WHEN event IN ('prompt:submit', 'session:end') THEN event END,
+              true) OVER (
+           PARTITION BY session_id ORDER BY encounter_seq ASC NULLS LAST
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS __marker
+  FROM {events}
+)
+WHERE __turn > 0 AND (event = 'prompt:submit' OR __marker = 'prompt:submit')
+"""
+
+
+def _fold_turn(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Fold one (session, turn) group from the state the pre-pass gave
+    every row of it: earlier turns and their tools, and whether a later
+    prompt closes the turn."""
+    head = pdf.iloc[0]
+    return _fold_session(
+        pdf,
+        turn_offset=int(head["__turn"]) - 1,
+        tool_offset=int(head["__tools_before"]),
+        open_status="active" if head["__last"] else "completed",
     )
-    return int(rows[0].m or 0)
 
 
-def aggregate_trace(
-    events: DataFrame,
-    split_by_turn: bool | None = None,
-    skew_threshold: int = 10_000,
-) -> DataFrame:
+def aggregate_trace(events: DataFrame) -> DataFrame:
     """S1: events (TRACE_EVENT shape) → nested turns (TRACE_TURN shape).
 
-    Default path: one shuffle on session_id; per-group pandas fold;
-    Arrow-batched both ways. Output column set matches
-    :data:`lakehouse_spark.schemas.TRACE_TURN`.
+    One shuffle on session_id: a window pre-pass (one SQL projection,
+    :data:`_TRACE_TURN_ROWS_SQL`) numbers each event's turn, drops the
+    events the fold would ignore, and gives every row its turn's starting
+    state; then each (session_id, turn) group is folded by
+    :func:`_fold_session` from that state, Arrow-batched both ways. The
+    grouping reuses the window's partitioning, so no second exchange runs.
 
-    ``split_by_turn=None`` (the default) AUTO-ENGAGES the skew mitigation:
-    a cheap probe (:func:`_max_session_events`) measures the largest
-    session and the split path switches on when it exceeds
-    ``skew_threshold`` events — no caller flag needed for the
-    one-pathological-session-among-thousands case. The probe costs one
-    extra count job over ``events``; callers that already know their
-    session-size distribution pass an explicit True/False to skip it.
-    The chosen path is retrievable via :func:`last_auto_split` (None when
-    the caller decided) — per-thread, so two pipelines folding
-    concurrently in one process each observe their own decision.
-
-    ``split_by_turn=True`` is the GIANT-SESSION skew mitigation: one
-    pathological session (e.g. 100k events) otherwise lands on a single
-    executor as one pandas group. The split path runs the cheap window-form
-    ``turn_number`` first (pure Catalyst), folds per (session_id, marker
-    segment) — each segment holds exactly one prompt and emits exactly one
-    turn, so the max pandas group is bounded by the largest TURN, not the
-    largest session — then restores the two pieces of cross-turn state
-    relationally:
-
-    - a non-final turn left "active" by its segment-local fold was really
-      closed implicitly by the next prompt → flipped to "completed";
-    - tool ids are session-global ordinals in the reference → rebuilt as
-      ``tool_{prefix-sum(size(tools)) + array index + 1}`` with a window
-      prefix sum over the (tiny, one-row-per-turn) folded output.
-
-    Costs two extra shuffles of the small turn rows; identical output
-    (parity-tested against the single-group fold and the golden fixtures).
-    Use it when session sizes are unbounded."""
-    if split_by_turn is None:
-        split_by_turn = _max_session_events(events) > skew_threshold
-        _AUTO_SPLIT_TELEMETRY.value = split_by_turn
-    else:
-        _AUTO_SPLIT_TELEMETRY.value = None
-    if not split_by_turn:
-        return events.groupBy("session_id").applyInPandas(
-            _fold_session, schema=TRACE_TURN
-        )
-
-    # copy, not .add(): StructType.add mutates the receiver in place and
-    # would append __seg to the shared TRACE_TURN schema
-    seg_schema = StructType(
-        list(TRACE_TURN.fields) + [StructField("__seg", LongType())]
+    A pandas group holds one TURN, never a whole session: one giant session
+    costs as many groups as it has turns, not one worker's memory. Output
+    equals :func:`_fold_session` over each whole session (tool ids
+    included)."""
+    rows = events.sparkSession.sql(_TRACE_TURN_ROWS_SQL, events=events)
+    return rows.groupBy("session_id", "__turn").applyInPandas(
+        _fold_turn, schema=TRACE_TURN
     )
-    ev = turn_number(
-        events,
-        "session_id",
-        [F.asc("encounter_seq")],
-        F.col("event") == "prompt:submit",
-        out_col="__seg",
-    ).filter(F.col("__seg") > 0)  # pre-prompt events never reach a turn
-
-    def fold_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = pdf["__seg"].iloc[0] if len(pdf) else 0
-        out = _fold_session(pdf.drop(columns="__seg"))
-        out["__seg"] = seg
-        return out
-
-    segs = ev.groupBy("session_id", "__seg").applyInPandas(
-        fold_segment, schema=seg_schema
-    )
-    w_all = Window.partitionBy("session_id")
-    w_prev = (
-        Window.partitionBy("session_id")
-        .orderBy("__seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        segs.withColumn("turn_id", F.col("__seg"))
-        .withColumn(
-            "status",
-            F.when(
-                (F.col("__seg") < F.max("__seg").over(w_all))
-                & (F.col("status") == "active"),
-                F.lit("completed"),
-            ).otherwise(F.col("status")),
-        )
-        .withColumn(
-            "__toff", F.coalesce(F.sum(F.size("tools")).over(w_prev), F.lit(0))
-        )
-        .withColumn(
-            "tools",
-            F.transform(
-                "tools",
-                lambda t, i: t.withField(
-                    "id",
-                    F.concat(
-                        F.lit("tool_"),
-                        (F.col("__toff") + i + 1).cast("string"),
-                    ),
-                ),
-            ),
-        )
-        .drop("__seg", "__toff")
-    )
-
-
-# Telemetry for the auto-split probe. THREAD-LOCAL: two pipelines folding
-# concurrently in one process (threads driving independent jobs is normal
-# Spark usage) must not observe each other's decision.
-_AUTO_SPLIT_TELEMETRY = threading.local()
-
-
-def last_auto_split() -> bool | None:
-    """The skew-path decision of the CURRENT THREAD's most recent
-    :func:`aggregate_trace` call: True/False when the auto-probe decided,
-    None when the caller passed an explicit ``split_by_turn`` (or no call
-    has happened on this thread yet)."""
-    return getattr(_AUTO_SPLIT_TELEMETRY, "value", None)
 
 
 # --- A3: per-session tool metrics ----------------------------------------------

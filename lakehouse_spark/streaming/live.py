@@ -338,15 +338,18 @@ def stream_trace_turns(
     reference's explicit open/close markers (prompt:submit / session:end),
     so this is `applyInPandasWithState` keyed by session_id:
 
-    - state = (#turns already emitted, JSON buffer of the open turn's raw
-      events). Bounded by one turn's events, not the whole session.
-    - each micro-batch: buffered + new events are re-folded; turns the fold
-      CLOSED are emitted (renumbered by the emitted offset), the trailing
-      still-open turn goes back into the buffer.
+    - state = (#turns and #tools already emitted, JSON buffer of the open
+      turn's raw events). Bounded by one turn's events, not the whole
+      session. Adding the tool count changed the state schema: a checkpoint
+      written before it holds three fields and cannot be resumed.
+    - each micro-batch: buffered + new events are folded by
+      ``_fold_session`` starting from the emitted counts, so turn and tool
+      ids continue the session's numbering; turns the fold CLOSED are
+      emitted, the trailing still-open turn goes back into the buffer.
     - on processing-time timeout (``timeout_ms`` of silence), the open turn
       is emitted with status 'active' and the event BUFFER clears — the
       streaming analog of the batch fold's unclosed-turn-at-EOF behavior
-      (ST6). The per-session emitted-turn counter stays in state so a
+      (ST6). The per-session emitted counters stay in state so a
       session that resumes after the timeout continues numbering where it
       left off instead of reissuing turn_id 1 (which would collide in any
       sink keyed by (session_id, turn_id)); late events of a flushed turn
@@ -383,6 +386,7 @@ def stream_trace_turns(
     state_schema = StructType(
         [
             StructField("emitted", LongType()),
+            StructField("tools", LongType()),  # tools of the emitted turns
             StructField("buffer", StringType()),  # JSON list of open-turn events
             # Processing-time ms when the session last went fully idle
             # (buffer emptied by a timeout flush); 0 = currently active.
@@ -406,22 +410,27 @@ def stream_trace_turns(
             return None
         return v
 
+    def tool_count(turns):
+        return int(turns["tools"].map(len).sum()) if len(turns) else 0
+
     def fold(key, pdf_iter, state: GroupState):
         (session_id,) = key
-        emitted, buffer, idle_since = (
-            state.get if state.exists else (0, "[]", 0)
+        emitted, tools, buffer, idle_since = (
+            state.get if state.exists else (0, 0, "[]", 0)
         )
 
         if state.hasTimedOut:
             now = state.getCurrentProcessingTimeMs()
             pending = json.loads(buffer)
             if pending:
-                turns = _fold_session(pd.DataFrame(pending, columns=cols))
-                turns["turn_id"] = turns["turn_id"] + emitted
+                turns = _fold_session(
+                    pd.DataFrame(pending, columns=cols), emitted, tools
+                )
                 emitted += len(turns)
+                tools += tool_count(turns)
             else:
                 turns = None
-            # Keep the (tiny) emitted counter instead of state.remove():
+            # Keep the (tiny) emitted counters instead of state.remove():
             # dropping it would restart a later-resuming session's turn
             # numbering at 1, colliding with already-emitted
             # (session_id, turn_id) keys downstream. The event BUFFER — the
@@ -433,7 +442,7 @@ def stream_trace_turns(
             if not pending and now - idle_since >= retention_ms:
                 state.remove()
                 return
-            state.update((emitted, "[]", idle_since))
+            state.update((emitted, tools, "[]", idle_since))
             state.setTimeoutDuration(timeout_ms)
             if turns is not None:
                 yield turns  # trailing turn surfaces as 'active'
@@ -444,7 +453,7 @@ def stream_trace_turns(
             rows.extend(pdf[cols].to_dict("records"))
         rows.sort(key=lambda r: r["encounter_seq"])
 
-        turns = _fold_session(pd.DataFrame(rows, columns=cols))
+        turns = _fold_session(pd.DataFrame(rows, columns=cols), emitted, tools)
         closed = turns[turns["status"] != "active"].copy()
         has_open = len(turns) and turns.iloc[-1]["status"] == "active"
 
@@ -482,9 +491,10 @@ def stream_trace_turns(
             pending = []
             out = closed
 
-        out["turn_id"] = out["turn_id"] + emitted
         # Data arrived: the session is active again — reset the idle clock.
-        state.update((emitted + len(out), json.dumps(pending), 0))
+        state.update(
+            (emitted + len(out), tools + tool_count(out), json.dumps(pending), 0)
+        )
         state.setTimeoutDuration(timeout_ms)
         if len(out):
             yield out

@@ -7,7 +7,11 @@ checkouts and compare the outputs:
 
 Normalization strips what differs between two builds of the same plan:
 expression ids (``#123``), lambda-variable names, random ``uuid()`` seeds,
-and the ids Spark gives cached/checkpointed relations and plan-id tags.
+and the ids Spark gives cached/checkpointed relations and plan-id tags. It
+also puts the ``Expand`` that rewrites several distinct aggregates into one
+order: Spark numbers those distinct groups (``gid``) and orders their
+columns by hashes of expression ids, so the same plan prints differently
+per process.
 """
 
 from __future__ import annotations
@@ -26,10 +30,68 @@ _NORMALIZE = [
 ]
 
 
+_GID_FILTER = re.compile(r"\(gid# = (\d+)\)")
+
+
+def _split_top(text: str) -> list[str]:
+    """Split on the commas outside any bracket or parenthesis."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(text):
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            parts.append(text[start:i].strip())
+            start = i + 1
+    return parts + [text[start:].strip()]
+
+
+def _sort_before_gid(items: list[str]) -> list[str]:
+    """Sort the distinct-group columns, which precede ``gid#``."""
+    k = items.index("gid#")
+    return sorted(items[:k]) + items[k:]
+
+
+def _canonical_distinct_expand(lines: list[str]) -> list[str]:
+    """Renumber each distinct-aggregate ``Expand``'s gids by the sorted
+    text of their projections and sort its distinct-group columns, in the
+    Expand and in the lines above it up to the one filtering on gid."""
+    lines = list(lines)
+    for i, line in enumerate(lines):
+        head, _, body = line.partition("Expand ")
+        if not body or "gid#" not in body:
+            continue
+        projs, outs = (x[1:-1] for x in _split_top(body))
+        outs = _split_top(outs)
+        k = outs.index("gid#")
+        order = sorted(range(k), key=lambda j: outs[j]) + list(range(k, len(outs)))
+        rows = [[_split_top(p[1:-1])[j] for j in order] for p in _split_top(projs)]
+        rows.sort(key=lambda r: r[:k] + r[k + 1 :])
+        gids = {r[k]: str(n) for n, r in enumerate(rows)}
+        for r in rows:
+            r[k] = gids[r[k]]
+        lines[i] = (
+            f"{head}Expand [{', '.join('[' + ', '.join(r) + ']' for r in rows)}],"
+            f" [{', '.join(outs[j] for j in order)}]"
+        )
+        for a in range(i - 1, -1, -1):
+            pre, _, rest = lines[a].partition("Aggregate ")
+            if rest and "gid#" in rest:
+                lists = [_split_top(x[1:-1]) for x in _split_top(rest)]
+                if all("gid#" in x for x in lists):
+                    rest = ", ".join(
+                        "[" + ", ".join(_sort_before_gid(x)) + "]" for x in lists
+                    )
+                lines[a] = pre + "Aggregate " + _GID_FILTER.sub(
+                    lambda m: f"(gid# = {gids.get(m.group(1), m.group(1))})", rest
+                )
+            if "(gid# = " in lines[a]:
+                break
+    return lines
+
+
 def normalize(plan: str) -> str:
     for pat, rep in _NORMALIZE:
         plan = pat.sub(rep, plan)
-    return plan
+    return "\n".join(_canonical_distinct_expand(plan.split("\n")))
 
 
 def dump(sf_dir: str, out: str, names: list[str]) -> None:

@@ -52,8 +52,7 @@ _SLOW_NODEIDS = {
     "test_graph_pagerank.py::test_star_center_dominates",  # 38s
     "test_graph_pagerank.py::test_chain_fixed_point_values",  # 27s
     "test_graph_pagerank.py::test_cycle_is_uniform",  # 13s
-    "test_trace_fold.py::test_split_by_turn_bounds_giant_session_groups",  # 32s
-    "test_trace_fold.py::test_auto_skew_split_engages_without_caller_flag",  # 22s
+    "test_trace_fold.py::test_giant_session_matches_whole_session_fold",  # 32s
     "test_catalog_parity.py::test_catalog_query_matches_oracle[sim_ivfpq_topk]",  # 28s
     "test_catalog_parity.py::test_catalog_query_matches_oracle[sim_ivf_topk]",  # 20s
     "test_similarity_and_skew.py::test_ann_index_residual_flag_roundtrips",  # 15s

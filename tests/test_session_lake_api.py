@@ -148,7 +148,8 @@ def test_execution_trace_and_metrics(lake):
 def test_daemon_reads_run_only_the_jobs_they_need(lake, count_jobs):
     """A small session tree is walked on the driver after one bounded
     collect of the edges (the seed is a LocalRelation: no job); a
-    one-session tail is one top-n; the trace metrics fold the turns once."""
+    one-session tail is one top-n; the trace metrics fold the turns once,
+    per turn, with no session-size probe job."""
     lake.session_closure("root").collect()  # warm the store's caches
     n, rows = count_jobs(lambda: lake.session_closure("root").collect())
     assert n <= 2
@@ -161,6 +162,10 @@ def test_daemon_reads_run_only_the_jobs_they_need(lake, count_jobs):
 
     plan = lake.trace_metrics("root")._jdf.queryExecution().executedPlan()
     assert plan.toString().count("FlatMapGroupsInPandas") == 1
+    lake.trace_metrics("root").collect()
+    n, rows = count_jobs(lambda: lake.trace_metrics("root").collect())
+    assert n <= 3
+    assert [r.total_tools for r in rows] == [1]
 
 
 def test_closure_delete_and_cleanup(lake):

@@ -58,9 +58,84 @@ def _turn_key(row):
         d["status"],
         d["start_time"],
         d["end_time"],
-        tuple((t["name"], t["status"], t["duration"], t["result"]) for t in d["tools"]),
+        tuple(
+            (t["id"], t["name"], t["status"], t["duration"], t["result"])
+            for t in d["tools"]
+        ),
         len(d["thinking"]),
     )
+
+
+class _MemoryState:
+    """The GroupState surface the stream fold uses, held in memory."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.get = None
+
+    @property
+    def exists(self):
+        return self.get is not None
+
+    def update(self, value):
+        self.get = value
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+def _stream_fold():
+    """The per-session function ``stream_trace_turns`` hands to
+    ``applyInPandasWithState``, captured without starting a stream."""
+
+    class Events:
+        def groupBy(self, *cols):
+            return self
+
+        def applyInPandasWithState(self, func, **kwargs):
+            return func
+
+    return stream_trace_turns(Events())
+
+
+def test_stream_continues_tool_ids_across_micro_batches():
+    """Turn 1 closes in micro-batch 1; turn 2's tool:pre arrives there too
+    and its tool:post and session:end in micro-batch 2. The stream must
+    number turn 2's tool as the batch fold does (tool_2), not restart the
+    tool ordinals when it re-folds the buffered turn."""
+    import pandas as pd
+
+    from lakehouse_spark.operators.sessionize import _fold_session
+
+    ok = {"success": True, "output": "ok", "error": None}
+    batch_1 = [
+        _ev(1, "s1", "prompt:submit", "2026-01-01T00:00:00+00:00", prompt="a"),
+        _ev(2, "s1", "tool:pre", "2026-01-01T00:00:01+00:00", tool_name="Bash"),
+        _ev(3, "s1", "tool:post", "2026-01-01T00:00:02+00:00", tool_name="Bash",
+            result=ok),
+        _ev(4, "s1", "session:end", "2026-01-01T00:00:03+00:00"),
+        _ev(5, "s1", "prompt:submit", "2026-01-01T00:00:04+00:00", prompt="b"),
+        _ev(6, "s1", "tool:pre", "2026-01-01T00:00:05+00:00", tool_name="Read"),
+    ]
+    batch_2 = [
+        _ev(7, "s1", "tool:post", "2026-01-01T00:00:06+00:00", tool_name="Read",
+            result=ok),
+        _ev(8, "s1", "session:end", "2026-01-01T00:00:07+00:00"),
+    ]
+    fold, state = _stream_fold(), _MemoryState()
+    streamed = [
+        turns
+        for rows in (batch_1, batch_2)
+        for turns in fold(("s1",), iter([pd.DataFrame(rows)]), state)
+    ]
+
+    def ids(turns):
+        return [(r.turn_id, [t["id"] for t in r.tools]) for r in turns.itertuples()]
+
+    assert [i for turns in streamed for i in ids(turns)] == ids(
+        _fold_session(pd.DataFrame(batch_1 + batch_2))
+    ) == [(1, ["tool_1"]), (2, ["tool_2"])]
 
 
 def test_stream_matches_batch_for_closed_turns(spark, tmp_path):

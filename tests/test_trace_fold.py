@@ -7,8 +7,14 @@ payload truncation, sub-agent child-session extraction.
 
 from __future__ import annotations
 
-from lakehouse_spark.operators.sessionize import aggregate_trace
-from lakehouse_spark.schemas import TRACE_EVENT
+import os
+import re
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
+from lakehouse_spark.operators.sessionize import _fold_session, aggregate_trace
+from lakehouse_spark.schemas import TRACE_EVENT, TRACE_TURN
 
 
 def _ev(seq, event, ts="2026-01-01T00:00:00+00:00", session="s1", **data):
@@ -389,10 +395,10 @@ def test_child_session_from_dict_output_direct_fold():
 
 
 def _parity_events():
-    """Event stream exercising every cross-turn coupling the split path must
-    restore: tools spanning many turns (global tool ordinals), implicit
-    closes (status flip), session:end mid-stream, unmatched posts, thinking,
-    trailing active turn, pre-prompt garbage."""
+    """Event stream exercising every cross-turn coupling of the per-turn
+    fold: tools spanning many turns (global tool ordinals), implicit
+    closes, session:end mid-stream, unmatched posts, thinking, trailing
+    active turn, pre-prompt garbage."""
     rows = [_ev(0, "tool:pre", session="sA", tool_name="Ghost")]  # pre-prompt
     seq = 1
     for s, n_turns in (("sA", 4), ("sB", 2)):
@@ -410,35 +416,121 @@ def _parity_events():
     return rows
 
 
-def test_split_by_turn_parity(spark):
-    """aggregate_trace(split_by_turn=True) must be byte-identical to the
-    single-group fold — including session-global tool ids and the implicit
-    'completed' flip on non-final turns."""
+def _edge_events():
+    """One log holding each case the per-turn pre-pass must get right."""
+    return [
+        _ev(0, "thinking:delta", delta="early"),  # before the first prompt
+        _ev(1, "tool:pre", tool_name="A"),  # before the first prompt
+        _ev(2, "prompt:submit", prompt="p1"),
+        _ev(3, "prompt:submit", prompt="p2"),  # back-to-back prompts
+        _ev(4, "tool:post", tool_name="A", result=_OK),  # early post: dropped
+        _ev(5, "tool:pre", tool_name="A", parallel_group_id="g"),
+        _ev(6, "tool:pre", tool_name="A", parallel_group_id="g"),  # same key
+        _ev(7, "tool:post", tool_name="A", parallel_group_id="g", result=_OK),
+        _ev(8, "session:end"),
+        _ev(9, "tool:pre", tool_name="B"),  # strays after the turn's end
+        _ev(10, "tool:post", tool_name="A", parallel_group_id="g", result=_OK),
+        _ev(11, "thinking:delta", delta="late"),
+        _ev(12, "session:end"),
+        _ev(13, "prompt:submit", prompt="p3"),
+        _ev(14, "tool:pre", tool_name="B"),  # tool_3: strays did not count
+        _ev(15, None, ts=None, session=None),  # NULL fields, NULL session
+        _ev(16, "prompt:submit", ts=None, session=None),
+        _ev(17, "tool:pre", ts="bad", session=None, tool_name="task",
+            tool_input={"agent": "w"}),
+    ]
+
+
+def _snap(turns):
+    return sorted(
+        (r.asDict(recursive=True) for r in turns.collect()),
+        key=lambda t: (t["session_id"] is None, t["session_id"] or "", t["turn_id"]),
+    )
+
+
+def _whole_session_fold(df):
+    """The reference: _fold_session over each whole session."""
+    return df.groupBy("session_id").applyInPandas(
+        lambda pdf: _fold_session(pdf), schema=TRACE_TURN
+    )
+
+
+_OK = {"success": True, "output": "ok", "error": None}
+_trace_logs = st.lists(
+    st.tuples(
+        st.sampled_from(["s1", "s1", "s2", None]),
+        st.sampled_from(
+            ["prompt:submit", "tool:pre", "tool:post", "thinking:delta",
+             "session:end", None]
+        ),
+        st.sampled_from(
+            ["2026-01-01T00:00:01+00:00", "2026-01-01T00:00:04.5+00:00",
+             "bad", None]
+        ),
+        st.fixed_dictionaries(
+            {
+                "prompt": st.sampled_from(["p", None]),
+                "tool_name": st.sampled_from(["A", "task", None]),
+                "tool_input": st.sampled_from([None, {"agent": "w"}]),
+                "parallel_group_id": st.sampled_from(["g", None]),
+                "delta": st.sampled_from(["d", None]),
+                "result": st.sampled_from(
+                    [None, _OK,
+                     {"success": False, "output": None, "error": {"message": "x"}},
+                     {"success": None, "output": '{"session_id": "c"}', "error": None}]
+                ),
+            }
+        ),
+    ),
+    min_size=10,
+    max_size=40,
+).map(
+    lambda evs: [
+        (sid, ts, "INFO", ev, data, seq)
+        for seq, (sid, ev, ts, data) in enumerate(evs)
+    ]
+)
+
+
+@given(_trace_logs)
+@example(_parity_events())
+@example(_edge_events())
+@settings(
+    max_examples=60 if os.environ.get("PYTEST_FULL") == "1" else 12,
+    derandomize=True,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_aggregate_trace_equals_whole_session_fold(spark, rows):
+    """The per-turn fold equals the whole-session fold on every TRACE_TURN
+    field, tool ids included, for any log: events before the first
+    prompt, back-to-back prompts, strays after a session:end, unmatched
+    and early posts, same-key parallel tools, NULL fields and sessions."""
+    df = spark.createDataFrame(rows, TRACE_EVENT)
+    assert _snap(aggregate_trace(df)) == _snap(_whole_session_fold(df))
+
+
+def test_per_turn_fold_plan_and_no_probe_job(spark, count_jobs):
+    """The giant-session bound, cheaply: the plan folds (session_id, turn)
+    groups, one FlatMapGroupsInPandas with two grouping keys behind one
+    exchange, and building the fold runs no Spark job (no size probe)."""
     df = spark.createDataFrame(_parity_events(), TRACE_EVENT)
-
-    def snap(out):
-        return sorted(
-            (r.asDict(recursive=True) for r in out.collect()),
-            key=lambda t: (t["session_id"], t["turn_id"]),
-        )
-
-    plain = snap(aggregate_trace(df))
-    split = snap(aggregate_trace(df, split_by_turn=True))
-    assert plain == split
-    # sanity on the cross-turn state specifically
-    ids = [t["id"] for turn in plain if turn["session_id"] == "sA" for t in turn["tools"]]
-    assert ids == [f"tool_{i}" for i in range(1, len(ids) + 1)]
-    assert plain[-1]["status"] == "active" or plain[-1]["session_id"] == "sB"
+    n, turns = count_jobs(lambda: aggregate_trace(df))
+    assert n == 0
+    plan = turns._jdf.queryExecution().executedPlan().toString()
+    (keys,) = re.findall(r"FlatMapGroupsInPandas \[([^\]]*)\]", plan)
+    assert len(keys.split(", ")) == 2
+    assert plan.count("Exchange") == 1
 
 
-def test_split_by_turn_bounds_giant_session_groups(spark):
-    """Skew mitigation: one 20k-event session among many normal ones. The
-    split path's pandas groups are keyed by (session, turn), so the largest
-    group is one TURN (~10 events), not the giant session; output still
-    matches the single-group fold."""
+def test_giant_session_matches_whole_session_fold(spark):
+    """One 20k-event session among many normal ones: every pandas group is
+    one TURN (~10 events), not the giant session, and the output equals
+    the whole-session fold, global tool ordinals and the implicit close of
+    non-final turns included."""
     from pyspark.sql import functions as F
 
-    from lakehouse_spark.operators.sessionize import turn_number
+    from lakehouse_spark.operators.sessionize import _TRACE_TURN_ROWS_SQL
 
     rows = []
     seq = 0
@@ -454,82 +546,23 @@ def test_split_by_turn_bounds_giant_session_groups(spark):
         rows.append(_ev(seq, "session:end", session=f"n{s}")); seq += 1
     df = spark.createDataFrame(rows, TRACE_EVENT)
 
-    # the split key bounds every pandas group by the largest turn
-    seg = turn_number(
-        df, "session_id", [F.asc("encounter_seq")],
-        F.col("event") == "prompt:submit", out_col="__seg",
-    )
+    # the fold's groups are (session, turn): the largest is one turn
     max_group = (
-        seg.groupBy("session_id", "__seg").count()
+        spark.sql(_TRACE_TURN_ROWS_SQL, events=df)
+        .groupBy("session_id", "__turn").count()
         .agg(F.max("count")).collect()[0][0]
     )
     assert max_group == 10  # one turn, not 20k
 
-    split = aggregate_trace(df, split_by_turn=True)
-    assert split.count() == 2050
-    giant = {
-        r["turn_id"]: r.asDict(recursive=True)
-        for r in split.filter(F.col("session_id") == "giant").collect()
-    }
+    turns = _snap(aggregate_trace(df))
+    assert turns == _snap(_whole_session_fold(df))
+    assert len(turns) == 2050
+    giant = {t["turn_id"]: t for t in turns if t["session_id"] == "giant"}
     assert len(giant) == 2000
-    # non-final turns flipped to completed; final stays active (no session:end)
+    # non-final turns closed by the next prompt; final stays active
     assert giant[1]["status"] == "completed"
     assert giant[2000]["status"] == "active"
-    # global tool ordinals survive the split: turn k holds tools 4(k-1)+1..4k
+    # global tool ordinals: turn k holds tools 4(k-1)+1..4k
     assert [t["id"] for t in giant[3]["tools"]] == [
         "tool_9", "tool_10", "tool_11", "tool_12"
     ]
-
-
-def test_auto_skew_split_engages_without_caller_flag(spark):
-    """The default (split_by_turn=None) probes session sizes and switches to
-    the split path on its own when one session exceeds skew_threshold;
-    output is identical to the forced single-group fold, and the threshold
-    is configurable."""
-    rows = []
-    seq = 0
-    for k in range(1200):  # giant session: 12k events > default 10k threshold
-        rows.append(_ev(seq, "prompt:submit", session="giant", prompt=f"p{k}")); seq += 1
-        for j in range(4):
-            rows.append(_ev(seq, "tool:pre", session="giant", tool_name=f"T{j}")); seq += 1
-            rows.append(_ev(seq, "tool:post", session="giant", tool_name=f"T{j}",
-                            result={"success": True, "output": "y", "error": None})); seq += 1
-        rows.append(_ev(seq, "thinking:delta", session="giant", delta="d")); seq += 1
-    for s in range(50):  # normal sessions
-        rows.append(_ev(seq, "prompt:submit", session=f"n{s}", prompt="q")); seq += 1
-        rows.append(_ev(seq, "session:end", session=f"n{s}")); seq += 1
-    df = spark.createDataFrame(rows, TRACE_EVENT)
-
-    def snap(out):
-        return sorted(
-            (r.asDict(recursive=True) for r in out.collect()),
-            key=lambda t: (t["session_id"], t["turn_id"]),
-        )
-
-    from lakehouse_spark.operators.sessionize import last_auto_split
-
-    auto = snap(aggregate_trace(df))  # no caller flag
-    assert last_auto_split() is True
-    forced = snap(aggregate_trace(df, split_by_turn=False))
-    assert last_auto_split() is None  # caller decided
-    assert auto == forced
-
-    # threshold is configurable: raise it and the probe keeps the plain path
-    aggregate_trace(df, skew_threshold=1_000_000).count()
-    assert last_auto_split() is False
-
-    # telemetry is PER-THREAD: another thread's probe decision must not
-    # leak into (or out of) this one
-    import threading
-
-    seen = {}
-
-    def other():
-        seen["before"] = last_auto_split()  # fresh thread → None
-        aggregate_trace(df, skew_threshold=1_000_000).count()
-        seen["after"] = last_auto_split()
-
-    t = threading.Thread(target=other)
-    t.start(); t.join()
-    assert seen == {"before": None, "after": False}
-    assert last_auto_split() is False  # unchanged by the other thread
